@@ -16,6 +16,8 @@ import os
 import threading
 
 CLK = os.sysconf("SC_CLK_TCK")
+# seconds between worker memory samples
+SAMPLE_INTERVAL = 0.2
 
 
 def _read(path: str) -> str | None:
@@ -64,12 +66,12 @@ def _tree(procs, root: int) -> dict[int, str]:
     return kind
 
 
-def cpu_seconds(root: int | None = None) -> dict[str, float]:
-    """CPU seconds so far of the tree under ``root``: ``jvm`` (the JVM's
+def cpu_seconds() -> dict[str, float]:
+    """CPU seconds so far of the Spark process tree: ``jvm`` (the JVM's
     own threads), ``python`` (daemon + workers, live and reaped) and
     ``total`` (everything, including children reaped by the JVM)."""
     procs = _processes()
-    kinds = _tree(procs, root or os.getpid())
+    kinds = _tree(procs, os.getpid())
     out = {"jvm": 0.0, "python": 0.0, "total": 0.0}
     for pid, kind in kinds.items():
         _, own, children, _ = procs[pid]
@@ -99,8 +101,7 @@ class WorkerMemory:
     """Background sampler of the highest resident set size (``VmHWM``)
     reached by any single Python worker while it runs."""
 
-    def __init__(self, interval: float = 0.2):
-        self.interval = interval
+    def __init__(self):
         self.peak_kb = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -112,7 +113,7 @@ class WorkerMemory:
                 self.peak_kb = max(self.peak_kb, _hwm_kb(pid))
 
     def _run(self) -> None:
-        while not self._stop.wait(self.interval):
+        while not self._stop.wait(SAMPLE_INTERVAL):
             self.sample()
 
     def __enter__(self) -> "WorkerMemory":

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Extraction benchmark: one seeded workload on local Spark.
 
-    python3 perfbench/run.py --workload default-job --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload default-job --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout.  The run generates its input from the
 seed, writes it to parquet, then:
@@ -9,11 +9,13 @@ seed, writes it to parquet, then:
 1. launches the JVM and sets up ``SETUP_CYCLES`` Spark sessions in turn
    (session start, cold C-accelerator compile, Python worker spin-up,
    first extracted batch), reporting the median as ``setup_s``;
-2. ``--trace 0``: warms up with untimed runs of the workload, then runs
-   it repeatedly for ``--seconds``, timing wall and the CPU of the Spark process tree and
-   sampling worker memory; every run's output is checked;
+2. ``--trace 0``: warms up with untimed passes of the workload, then
+   runs pass after pass until the passes have taken ``--seconds`` (at
+   least ``MIN_PASSES``), timing wall and the CPU of the Spark process
+   tree and sampling worker memory; every pass's output is checked
+   between passes, out of the timing;
 3. ``--trace 1``: runs the Spark boundary ladder, one instrumented
-   workload run read back through the monitoring REST API, and the
+   workload pass read back through the monitoring REST API, and the
    workload's input single-process through ``make_extract_batches``
    untraced and then with every layer wrapped.
 
@@ -45,9 +47,12 @@ SETUP_CYCLES = 3
 EXPECTED_MODE = "c14"
 # run_extraction's own checkpoint layout defaults: 16 buckets, 8 per wave
 JOB_BUCKETS = 16
-# untimed runs before timing: the JVM keeps JIT-compiling the job's
-# per-wave code for several runs, and its compile threads burn CPU
+# untimed passes before timing: the JVM keeps JIT-compiling the job's
+# per-wave code for more passes than a run can afford, so the timed
+# passes sit at fixed positions instead of on a flat cost
 WARMUPS = {"job": 2, "operator": 1}
+# timed passes at least, however long they take
+MIN_PASSES = 3
 # rows per pandas batch in the single-process loop, as make_session sets
 # spark.sql.execution.arrow.maxRecordsPerBatch
 LOOP_BATCH = 256
@@ -79,7 +84,7 @@ def _environment(run_dir: str, ui: bool) -> dict[str, str]:
     """Process environment that keeps Spark, the Python workers and the
     accelerator cache inside ``run_dir``.  The web UI (and with it the
     monitoring REST API) runs only when ``ui`` is set: the traced run
-    reads stage metrics from it, the timed runs do not pay for it."""
+    reads stage metrics from it, the timed passes do not pay for it."""
     tmp = os.path.join(run_dir, "tmp")
     os.makedirs(tmp, exist_ok=True)
     # -XX:-UsePerfData: no hsperfdata file in the system temp directory
@@ -171,9 +176,9 @@ class Bench:
         return ("+".join(names), bound)
 
     # -- one workload run ------------------------------------------------
-    def run_once(self, i: int) -> dict:
-        """One full pass of the workload; returns wall seconds, Spark-tree
-        CPU seconds and the job summary, then checks the outputs."""
+    def run_pass(self, i: int) -> dict:
+        """One full pass of the workload: wall seconds, Spark-tree CPU
+        seconds and the job summary.  Its outputs stay for check_pass."""
         from procstat import cpu_seconds
         from pyspark.sql import Observation, functions as F
 
@@ -181,8 +186,7 @@ class Bench:
         from trafilatura_spark.operators.pipeline import extract_documents
 
         spark = self.spark
-        out = os.path.join(self.run_dir, f"out-{i}")
-        prog = os.path.join(self.run_dir, f"prog-{i}")
+        out, prog = self.outputs(i)
         obs = Observation(f"check-{i}")
         cpu0 = cpu_seconds()
         t0 = time.perf_counter()
@@ -199,14 +203,21 @@ class Bench:
             ex.write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
         cpu1 = cpu_seconds()
-        res = {"wall": wall,
-               "cpu": {k: cpu1[k] - cpu0[k] for k in cpu0},
-               "summary": summary}
+        return {"i": i, "wall": wall, "obs": obs, "summary": summary,
+                "cpu": {k: cpu1[k] - cpu0[k] for k in cpu0}}
+
+    def outputs(self, i: int) -> tuple[str, str]:
+        return (os.path.join(self.run_dir, f"out-{i}"),
+                os.path.join(self.run_dir, f"prog-{i}"))
+
+    def check_pass(self, res: dict) -> None:
+        """Checks one pass's outputs, counts its documents as attempted
+        and failed, and removes the outputs."""
+        out, prog = self.outputs(res["i"])
         self.attempted += len(self.docs)
-        self.failed += self.check_run(out, prog, obs)
+        self.failed += self.check_run(out, prog, res["obs"])
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(prog, ignore_errors=True)
-        return res
 
     def check_run(self, out: str, prog: str, obs) -> int:
         """Number of documents of this run that fail the output check."""
@@ -246,13 +257,18 @@ class Bench:
 
     def operator_rows(self):
         """The fast-operator outputs, collected once for the exact
-        per-document check (timed runs write to the noop sink)."""
+        per-document check (timed passes write to the noop sink)."""
         from trafilatura_spark.operators.pipeline import extract_documents
         rows = (extract_documents(self.spark.read.parquet(self.input_path),
                                   self.options)
                 .select("doc_id", "status", "tier", "spans").toPandas())
         return zip(rows["doc_id"], rows["status"], rows["tier"],
                    rows["spans"])
+
+    def warm_up(self) -> None:
+        for i in range(WARMUPS[self.wl.mode]):
+            self.check_pass(self.run_pass(-1 - i))
+        _log("warmed up")
 
     # -- trace 0 ------------------------------------------------------------
     def measure(self) -> dict:
@@ -261,15 +277,16 @@ class Bench:
         if self.wl.mode == "operator":
             self.attempted += len(self.docs)
             self.failed += len(self.check_rows(self.operator_rows()))
-        for i in range(WARMUPS[self.wl.mode]):
-            self.run_once(-1 - i)
-        _log("warmed up")
+        self.warm_up()
         runs = []
+        timed = 0.0
         steal0 = host_jiffies()
-        t_end = time.perf_counter() + self.args.seconds
         with WorkerMemory() as mem:
-            while len(runs) < 2 or time.perf_counter() < t_end:
-                runs.append(self.run_once(len(runs) + 1))
+            # the window counts pass time only: checks run between passes
+            while len(runs) < MIN_PASSES or timed < self.args.seconds:
+                runs.append(self.run_pass(len(runs) + 1))
+                timed += runs[-1]["wall"]
+                self.check_pass(runs[-1])
         steal1 = host_jiffies()
         n = len(self.docs)
         return {
@@ -296,31 +313,38 @@ class Bench:
                         lambda df: extract_documents(df, self.options),
                         min_seconds=self.args.seconds / 2))
 
-        # one instrumented workload run: writes timed by target path
+        # one instrumented workload run: writes timed by target.  The job
+        # writes parquet (output, then progress); the operator saves to
+        # the noop sink.  Both writes evaluate the extract lazily.
         writes = {"out": 0.0, "prog": 0.0}
-        orig_parquet = DataFrameWriter.parquet
+        originals = {"parquet": DataFrameWriter.parquet,
+                     "save": DataFrameWriter.save}
 
-        def timed_parquet(writer, path, *a, **kw):
-            t0 = time.perf_counter()
-            try:
-                return orig_parquet(writer, path, *a, **kw)
-            finally:
-                key = "prog" if os.path.basename(path).startswith("prog") \
-                    else "out"
-                writes[key] += time.perf_counter() - t0
+        def timed(name):
+            def call(writer, path=None, *a, **kw):
+                t0 = time.perf_counter()
+                try:
+                    return originals[name](writer, path, *a, **kw)
+                finally:
+                    key = "prog" if path and os.path.basename(
+                        path).startswith("prog") else "out"
+                    writes[key] += time.perf_counter() - t0
+            return call
 
-        for i in range(WARMUPS[self.wl.mode]):
-            self.run_once(-1 - i)
+        self.warm_up()
         sc = self.spark.sparkContext
         sc.setJobGroup("workload", "instrumented workload run")
-        DataFrameWriter.parquet = timed_parquet
+        for name in originals:
+            setattr(DataFrameWriter, name, timed(name))
         steal0 = host_jiffies()
         try:
-            res = self.run_once(1)
+            res = self.run_pass(1)
         finally:
-            DataFrameWriter.parquet = orig_parquet
+            for name, fn in originals.items():
+                setattr(DataFrameWriter, name, fn)
             sc.setJobGroup("checks", "output checks")
         steal1 = host_jiffies()
+        self.check_pass(res)
         m.update(stage_metrics(self.spark, "workload"))
         m["job.write_s"] = writes["out"]
         m["job.progress_s"] = writes["prog"]
@@ -335,7 +359,7 @@ class Bench:
 
     def single_process(self) -> dict:
         """The workload's input through make_extract_batches in this
-        process, untraced and then traced; self times per layer."""
+        process, untraced and traced; self times per layer."""
         import pyarrow.parquet as pq
         from layers import Tracer
 
@@ -345,19 +369,35 @@ class Bench:
         batches = [b.to_pandas() for b in
                    table.to_batches(max_chunksize=LOOP_BATCH)]
 
-        def loop():
-            out, t0 = [], time.perf_counter()
-            for pdf in make_extract_batches(self.options)(iter(batches)):
-                out.append(pdf)
+        extract = make_extract_batches(self.options)
+
+        def timed(batch):
+            t0 = time.perf_counter()
+            out = list(extract(iter([batch])))
             return out, time.perf_counter() - t0
 
-        _, untraced_s = loop()
+        def traced(batch):
+            tracer.install()
+            try:
+                return timed(batch)
+            finally:
+                tracer.uninstall()
+
+        timed(batches[0])   # imports and first-call set-up, untimed
+        # every batch runs untraced and traced, in turn first: drift of
+        # the host's speed and the second run's warm caches fall on both
+        # sides alike
         tracer = Tracer()
-        tracer.install()
-        try:
-            frames, traced_s = loop()
-        finally:
-            tracer.uninstall()
+        frames, untraced_s, traced_s = [], 0.0, 0.0
+        for k, batch in enumerate(batches):
+            if k % 2:
+                out, dt = traced(batch)
+                untraced_s += timed(batch)[1]
+            else:
+                untraced_s += timed(batch)[1]
+                out, dt = traced(batch)
+            frames += out
+            traced_s += dt
         tracer.dump(os.path.join(WORK, f"spans-{self.wl.name}.json"))
         m = tracer.metrics()
         m["pipeline.batches"] = len(batches)
@@ -366,9 +406,9 @@ class Bench:
         m["loop.untraced_s"] = untraced_s
         rows = [r for f in frames for r in zip(f["doc_id"], f["status"],
                                               f["tier"], f["spans"])]
-        for key in ("ok", "empty", "rejected", "error", "timeout"):
-            m[f"core.status.{key}"] = sum(1 for r in rows if r[1] == key)
-        for key in ("main", "readability", "justext", "baseline", "none"):
+        # other statuses fail the output check and count in ``failed``
+        m["core.status.ok"] = sum(1 for r in rows if r[1] == "ok")
+        for key in ("main", "readability", "justext"):
             m[f"core.tier.{key}"] = sum(1 for r in rows if r[2] == key)
         self.attempted += len(self.docs)
         self.failed += len(self.check_rows(rows))
@@ -463,11 +503,14 @@ def main() -> int:
         "cores": CORES, "docs": len(bench.docs),
         "input_html_mb": html_bytes / 1e6,
         "setup_samples_s": setups,
-        "failed_frac": failed / max(1, bench.attempted),
+        "failed_frac": {"value": failed / max(1, bench.attempted),
+                        "unit": "frac"},
         "digests": sorted(bench.digests), "notes": bench.notes,
     }
     summary.update({k: v for k, v in measured.items()
                     if k not in {m["name"] for m in wanted}})
+    summary.update({m["name"]: {"value": measured[m["name"]],
+                                "unit": m["unit"]} for m in wanted})
     print(json.dumps(summary))
     result = {
         "correct": failed == 0,

@@ -12,6 +12,10 @@ DOM_ENTRY_POINTS = ("_CPARSE", "_CCOPY", "_CTEXT", "_CFINDALL", "_CITER",
                     "_CCLEANCOPY", "_CMETAIDX", "_CMETRICS", "_CBUCKETS",
                     "_CTABLEHIT", "_CATTRPAIR", "_CDIVS", "_CBRS",
                     "_CUNLIKELY")
+# ladder rounds: at least LADDER_MIN, then more while time is left, up to
+# LADDER_MAX
+LADDER_MIN = 2
+LADDER_MAX = 5
 
 
 def _mode_batches(batches):
@@ -45,8 +49,8 @@ def _identity(batches):
     yield from batches
 
 
-def ladder(spark, input_path: str, extract, min_seconds: float,
-           rounds: tuple[int, int] = (2, 5)) -> dict[str, float]:
+def ladder(spark, input_path: str, extract,
+           min_seconds: float) -> dict[str, float]:
     """Interleaved JVM-only scan, identity ``mapInPandas`` and full
     extract over the same input, each written to the ``noop`` sink.
     Medians over the rounds, in seconds."""
@@ -58,9 +62,8 @@ def ladder(spark, input_path: str, extract, min_seconds: float,
     }
     times: dict[str, list[float]] = {k: [] for k in steps}
     t_start = time.perf_counter()
-    lo, hi = rounds
-    while len(times["scan"]) < hi and (
-            len(times["scan"]) < lo
+    while len(times["scan"]) < LADDER_MAX and (
+            len(times["scan"]) < LADDER_MIN
             or time.perf_counter() - t_start < min_seconds):
         for name, frame in steps.items():
             t0 = time.perf_counter()

@@ -1,11 +1,10 @@
-"""Seeded inputs, options and output checks for the three workloads.
+"""Seeded inputs, options and output checks for the workloads.
 
 Every input is a pure function of ``(workload, seed)``.  The seed picks
-the doc_id offset, each document's words, its template family and which
-documents are heavy.  The number of ``article`` pages, of other-family
-pages and of pages in each weight class is fixed per workload, so the
-work per run barely depends on the seed; only the split among the three
-cheap other families is drawn per page.
+the doc_id offset, each document's words and its template family.  The
+number of ``article`` pages and of other-family pages is fixed per
+workload, so the work per run barely depends on the seed; only the split
+among the three cheap other families is drawn per page.
 """
 
 from __future__ import annotations
@@ -25,10 +24,8 @@ from trafilatura_spark.sources.corpus import (build_input_spans,
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 
-# page weights: boilerplate repeats giving ~8.7 KB, ~145 KB and ~2.3 MB pages
-LIGHT_BOILER = 16
-HEAVY_BOILER = 328
-HUGE_BOILER = 5248
+# boilerplate repeats per page: ~8.7 KB pages
+BOILER = 16
 
 # relaxed fast options: bench.py's extraction headline profile
 FAST_OPTIONS = dict(fast=True, comments=False, with_metadata=True,
@@ -42,17 +39,13 @@ class Workload:
     options: dict             # Options(**options); {} is the stock profile
     docs: int                 # total documents
     other_families: int       # bare + fallback_* pages (job workloads)
-    heavy: int                # ~145 KB pages
-    huge: int                 # ~2.3 MB pages
     comments: bool            # article pages carry a comment section
 
 
 WORKLOADS = {
     w.name: w for w in (
-        Workload("default-job", "job", {}, 1500, 150, 0, 0, True),
-        Workload("fast-operator", "operator", FAST_OPTIONS, 6000, 0, 0, 0,
-                 False),
-        Workload("heavy-tail-job", "job", {}, 800, 80, 20, 2, True),
+        Workload("default-job", "job", {}, 1500, 150, True),
+        Workload("fast-operator", "operator", FAST_OPTIONS, 6000, 0, False),
     )
 }
 
@@ -87,7 +80,6 @@ class Doc:
     doc_id: str
     text: str
     family: str
-    boiler: int
     spans: list
 
 
@@ -97,25 +89,18 @@ def generate(workload: Workload, seed: int) -> list[Doc]:
     n = workload.docs
     order = list(range(n))
     rng.shuffle(order)
-    # family and weight class by position in a seeded permutation: exact
-    # counts, seeded placement
+    # family by position in a seeded permutation: exact counts, seeded
+    # placement
     others = set(order[:workload.other_families])
-    heavy = set(order[workload.other_families:
-                      workload.other_families + workload.heavy])
-    huge = set(order[workload.other_families + workload.heavy:
-                     workload.other_families + workload.heavy
-                     + workload.huge])
     docs = []
     for i in range(n):
         doc_id = base + i
         text = _text(rng)
         family = rng.choice(OTHER_FAMILIES) if i in others else "article"
-        boiler = (HUGE_BOILER if i in huge else
-                  HEAVY_BOILER if i in heavy else LIGHT_BOILER)
         spans = build_input_spans(doc_id, text, "en", f"site{doc_id % 13}",
                                   with_comments=workload.comments,
-                                  template=family, boiler_repeat=boiler)
-        docs.append(Doc(str(doc_id), text, family, boiler, spans))
+                                  template=family, boiler_repeat=BOILER)
+        docs.append(Doc(str(doc_id), text, family, spans))
     return docs
 
 
