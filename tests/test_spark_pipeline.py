@@ -407,6 +407,108 @@ def test_job_large_wave_metrics_and_resume(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == n_docs
 
 
+def _with_failures():
+    """The default HTML extractor (stock Options: baseline-tier 'empty'
+    rows on short pages), with a fixed share of rows turned into the
+    'error' and 'timeout' rows core.bare_extraction gives on failure.
+    Nested so the workers unpickle it by value, not by test-module name."""
+    from trafilatura_spark.operators.pipeline import make_extract_batches
+    extract = make_extract_batches(Options())
+
+    def batches(it):
+        import zlib
+        for pdf in extract(it):
+            mark = pdf["doc_id"].map(lambda d: zlib.crc32(d.encode()) % 10)
+            pdf.loc[mark == 0, ["status", "tier"]] = ("error", "none")
+            pdf.loc[mark == 1, ["status", "tier"]] = ("timeout", "none")
+            yield pdf
+    return batches
+
+
+@pytest.mark.parametrize("n_buckets,wave_size,below_cap",
+                         [(8, 4, True), (40, 40, False)],
+                         ids=["observe", "reread"])
+def test_job_progress_columns_both_metric_paths(spark, sf_dir, tmp_path,
+                                                n_buckets, wave_size,
+                                                below_cap):
+    """Every progress count equals a direct groupBy of the written output,
+    below _OBSERVE_BUCKET_CAP (per-bucket observe) and above it (pruned
+    re-read of the wave's output)."""
+    from trafilatura_spark.job import _OBSERVE_BUCKET_CAP
+    assert (wave_size <= _OBSERVE_BUCKET_CAP) == below_cap
+    out, prog = str(tmp_path / "o"), str(tmp_path / "p")
+    docs = synthesize_documents_df(spark, sf_dir)
+    s = run_extraction(spark, docs, out, prog, "cols", n_buckets=n_buckets,
+                       wave_size=wave_size, batches_fn=_with_failures())
+    assert s["processed_buckets"] == n_buckets
+    assert s["write_s"] > 0 and s["progress_s"] > 0
+    fb = F.col("tier").isin("baseline", "readability", "justext")
+    cols = ["docs", "fallback_docs", "empty_docs", "error_docs",
+            "timeout_docs"]
+    direct = {r["bucket"]: tuple(r[c] for c in cols) for r in
+              spark.read.parquet(out).groupBy("bucket").agg(
+                  F.count(F.lit(1)).alias("docs"),
+                  F.sum(fb.cast("long")).alias("fallback_docs"),
+                  *[F.sum((F.col("status") == st).cast("long")).alias(c)
+                    for st, c in (("empty", "empty_docs"),
+                                  ("error", "error_docs"),
+                                  ("timeout", "timeout_docs"))])
+              .collect()}
+    progress = {r["bucket"]: r for r in spark.read.parquet(prog).collect()}
+    assert sorted(progress) == list(range(n_buckets))
+    for b, r in progress.items():
+        want = direct.get(b, (0,) * len(cols))
+        assert tuple(r[c] for c in cols) == want, b
+        n = r["docs"]
+        assert r["fallback_rate"] == (r["fallback_docs"] / n if n else 0.0)
+        assert r["empty_rate"] == (r["empty_docs"] / n if n else 0.0)
+    # the input reaches every counted category
+    for i, c in enumerate(cols):
+        assert sum(v[i] for v in direct.values()) > 0, c
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_progress_append_is_jvm_local(spark, tmp_path, arrow):
+    """Progress rows go to the JVM as a LocalRelation (no Python-worker
+    job to unpickle them), whatever the Arrow conf, and the written table
+    has _PROGRESS_SCHEMA's columns and types plus committed_at."""
+    from pyspark.sql.types import StructField, StructType, TimestampType
+
+    from trafilatura_spark.job import _PROGRESS_SCHEMA, _progress_frame
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        rows = [("r", b, 4, 1, 1, 0, 0, 0.25, 0.25, "lin", 3)
+                for b in range(3)]
+        df = _progress_frame(spark, rows)
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+        df.write.parquet(str(tmp_path / "p"))
+    finally:
+        spark.conf.set(key, prior)
+    written = spark.read.parquet(str(tmp_path / "p"))
+    want = StructType(list(_PROGRESS_SCHEMA.fields)
+                      + [StructField("committed_at", TimestampType())])
+    assert written.schema == want
+    assert sorted(tuple(r)[:11] for r in written.collect()) == rows
+
+
+def test_scrub_matches_only_pending_buckets_under_output(spark, tmp_path):
+    """The torn-wave scrub's single glob deletes exactly the pending
+    bucket partitions of output_path: not bucket=10 for pending 1, not a
+    sibling directory that glob metacharacters in the path would match."""
+    from trafilatura_spark.job import _scrub_uncommitted
+    for sub in ("out[1]/bucket=1", "out[1]/bucket=10", "out[1]/bucket=3",
+                "out1/bucket=1"):
+        (tmp_path / sub).mkdir(parents=True)
+    assert _scrub_uncommitted(spark, str(tmp_path / "fresh"), [0, 1]) == 0
+    assert _scrub_uncommitted(spark, str(tmp_path / "out[1]"), [1, 2]) == 1
+    assert sorted(p.name for p in (tmp_path / "out[1]").iterdir()) == [
+        "bucket=10", "bucket=3"]
+    assert (tmp_path / "out1" / "bucket=1").is_dir()
+
+
 def test_job_config_file(spark, sf_dir, tmp_path):
     """--config-file (configMapping, settings.dart:52-62): size gates from
     an upstream-style settings.cfg relax the defaults; an explicit flag

@@ -12,9 +12,18 @@ progress row per bucket is appended ``(run_id, bucket, docs,
 fallback_docs, empty_docs, error_docs, timeout_docs, fallback_rate, empty_rate,
 committed_at)``.  A restarted run anti-joins committed buckets and only
 processes the remainder.  On Iceberg the output+progress appends are
-snapshot-atomic; on plain parquet (this sandbox) the progress append is
-the commit point and a torn wave is simply re-run (extraction is
-deterministic and idempotent per doc_id).
+snapshot-atomic; on plain parquet the progress append is the commit
+point and a torn wave is simply re-run (extraction is deterministic and
+idempotent per doc_id).
+
+The per-wave commit runs no Python on the cluster and few py4j calls:
+the per-bucket counts are ``count_if`` aggregates parsed from fixed SQL
+templates over the integer bucket id (one ``F.expr`` call each, where a
+Column tree costs a py4j round trip per operator), and the progress
+rows reach the JVM as a ``pyarrow.Table``, which becomes a
+``LocalRelation``.  Rows handed over as Python tuples become a
+``LogicalRDD`` instead, and every append would run a Python-worker job
+just to unpickle a handful of rows.
 
 Run via::
 
@@ -27,11 +36,14 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 import time
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType,
+                               StructField, StructType)
 
 from .operators.pipeline import extract_documents, extraction_metrics  # noqa: F401
 from .operators.pipeline import (EXTRACTED_SCHEMA, doc_size_bytes,  # noqa: F401
@@ -91,10 +103,38 @@ def read_html_dir(spark: SparkSession, input_path: str,
 # replaced by wave totals + a pruned re-read (see run_extraction)
 _OBSERVE_BUCKET_CAP = 32
 
-_PROGRESS_SCHEMA = ("run_id string, bucket int, docs long, fallback_docs long, "
-                    "empty_docs long, error_docs long, timeout_docs long, "
-                    "fallback_rate double, "
-                    "empty_rate double, lineage string, n_buckets int")
+_PROGRESS_SCHEMA = StructType(
+    [StructField("run_id", StringType()), StructField("bucket", IntegerType())]
+    + [StructField(c, LongType()) for c in (
+        "docs", "fallback_docs", "empty_docs", "error_docs", "timeout_docs")]
+    + [StructField("fallback_rate", DoubleType()),
+       StructField("empty_rate", DoubleType()),
+       StructField("lineage", StringType()),
+       StructField("n_buckets", IntegerType())])
+
+# (alias prefix, SQL condition) of each per-bucket count of a progress
+# row, in _PROGRESS_SCHEMA order; only integer bucket ids are ever
+# formatted into these templates, so no user data reaches SQL text
+_BUCKET_COUNTS = (
+    ("docs", "true"),
+    ("fb", "tier IN ('baseline', 'readability', 'justext')"),
+    ("empty", "status = 'empty'"),
+    ("err", "status = 'error'"),
+    ("to", "status = 'timeout'"),
+)
+
+
+def _progress_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """Progress rows (in ``_PROGRESS_SCHEMA`` order) plus ``committed_at``.
+    Built from a ``pyarrow.Table`` so the plan is a JVM-local
+    ``LocalRelation`` whatever the Arrow conf says: tuples (or pandas
+    with Arrow off) would give a ``LogicalRDD`` whose every use runs a
+    Python-worker job."""
+    import pyarrow as pa
+    names = _PROGRESS_SCHEMA.names
+    table = pa.Table.from_pylist([dict(zip(names, r)) for r in rows])
+    return (spark.createDataFrame(table, schema=_PROGRESS_SCHEMA)
+            .withColumn("committed_at", F.current_timestamp()))
 
 
 def _scrub_uncommitted(spark: SparkSession, output_path: str,
@@ -102,17 +142,23 @@ def _scrub_uncommitted(spark: SparkSession, output_path: str,
     """Delete output partitions of buckets with NO progress row: a crash
     between the output append and the progress append leaves a torn wave,
     and re-running it would otherwise duplicate rows.  (On Iceberg the
-    two appends share one snapshot commit and this is a no-op.)"""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    removed = 0
-    for b in pending:
-        p = jvm.org.apache.hadoop.fs.Path(f"{output_path}/bucket={b}")
-        fs = p.getFileSystem(conf)
-        if fs.exists(p):
-            fs.delete(p, True)
-            removed += 1
-    return removed
+    two appends share one snapshot commit and this is a no-op.)
+
+    One glob of ``bucket={<pending ids>}`` finds them all: a single
+    listing (one request on object stores) instead of an ``exists()``
+    per pending bucket.  Glob metacharacters in ``output_path`` are
+    escaped so the pattern can only match under that directory."""
+    if not pending:
+        return 0
+    literal = re.sub(r"([\\*?\[\]{}])", r"\\\1", output_path)
+    ids = ",".join(map(str, pending))
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(
+        f"{literal}/bucket={{{ids}}}")
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    torn = fs.globStatus(pattern) or []
+    for status in torn:
+        fs.delete(status.getPath(), True)
+    return len(torn)
 
 
 def _progress_exists(spark: SparkSession, progress_path: str) -> bool:
@@ -173,6 +219,9 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
     docs above the threshold to a dedicated extraction pass per wave so
     heavy pages cannot straggle a mixed task — see
     operators.pipeline.extract_documents_routed for the cost model.
+    The summary's ``write_s`` and ``progress_s`` are the run's seconds
+    in the output writes and in the per-bucket metrics + progress
+    appends, so the commit path's cost shows in every run.
     """
     options = options or Options()
     if lineage is None:
@@ -192,12 +241,13 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
     done = _committed_buckets(spark, progress_path, n_buckets)
     pending = [b for b in range(n_buckets) if b not in done]
     # unconditional: a crash during the FIRST wave leaves orphan output
-    # partitions with an empty progress table; fs.exists() makes this a
-    # no-op on a genuinely fresh run
+    # partitions with an empty progress table; the glob matches nothing
+    # on a genuinely fresh run
     scrubbed = _scrub_uncommitted(spark, output_path, pending)
     summary = {"run_id": run_id, "resumed_buckets": len(done),
                "scrubbed_torn_buckets": scrubbed,
-               "processed_buckets": 0, "docs": 0, "waves": 0}
+               "processed_buckets": 0, "docs": 0, "waves": 0,
+               "write_s": 0.0, "progress_s": 0.0}
 
     if tasks_per_wave is None:
         tasks_per_wave = spark.sparkContext.defaultParallelism
@@ -288,64 +338,50 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
         # per-bucket metrics ride the write itself as observe() accumulator
         # expressions (5 per bucket in the wave) — ONE pass over the data;
         # naive re-reads of the whole output table would be a full second
-        # scan of everything written at 100 TB.  Above _OBSERVE_BUCKET_CAP
-        # buckets the per-task accumulator payload (5×wave named sums on
-        # every task result) outweighs a second look at the wave itself,
-        # so large waves observe wave totals and split per bucket via a
-        # partition-pruned (bucket ∈ wave only) + column-pruned
+        # scan of everything written at 100 TB.  Each metric is a
+        # count_if parsed from a fixed SQL template over the integer
+        # bucket id: one py4j call per expression, where a Column tree
+        # pays a round trip (with call-site capture) per col/==/&/cast/
+        # sum/alias and took longer to build than the wave plan itself.
+        # Above _OBSERVE_BUCKET_CAP buckets the per-task accumulator
+        # payload (5×wave named counts on every task result) outweighs a
+        # second look at the wave itself, so large waves split per bucket
+        # via a partition-pruned (bucket ∈ wave only) + column-pruned
         # (status/tier only) read of the freshly written partitions.
         obs = Observation(f"wave-{i // wave_size}")
-        fallback = F.col("tier").isin("baseline", "readability", "justext")
         per_bucket_obs = len(wave) <= _OBSERVE_BUCKET_CAP
         if per_bucket_obs:
-            exprs = []
-            for b in wave:
-                hit = F.col("bucket") == b
-                exprs += [
-                    F.sum(hit.cast("long")).alias(f"docs_{b}"),
-                    F.sum((hit & fallback).cast("long")).alias(f"fb_{b}"),
-                    F.sum((hit & (F.col("status") == "empty")).cast("long")
-                          ).alias(f"empty_{b}"),
-                    F.sum((hit & (F.col("status") == "error")).cast("long")
-                          ).alias(f"err_{b}"),
-                    F.sum((hit & (F.col("status") == "timeout")).cast("long")
-                          ).alias(f"to_{b}"),
-                ]
-            observed = extracted.observe(obs, *exprs)
+            observed = extracted.observe(obs, *[
+                F.expr(f"count_if(bucket = {b} AND {cond}) AS {name}_{b}")
+                for b in wave for name, cond in _BUCKET_COUNTS])
         else:
             # above the cap the counts come from the pruned re-read below;
             # attaching wave-total observe expressions here would add the
             # very per-task accumulator payload the cap exists to avoid
             observed = extracted
+        t0 = time.perf_counter()
         observed.write.mode("append").partitionBy("bucket").parquet(output_path)
+        summary["write_s"] += time.perf_counter() - t0
         if wave_cache is not None:
             # the write (the cache's only consumer) has committed; the
             # above-cap metrics path re-reads the OUTPUT, not the input
             wave_cache.unpersist()
 
+        t0 = time.perf_counter()
+        names = [name for name, _ in _BUCKET_COUNTS]
         if per_bucket_obs:
             vals = obs.get
-            counts = {b: (int(vals[f"docs_{b}"] or 0), int(vals[f"fb_{b}"] or 0),
-                          int(vals[f"empty_{b}"] or 0), int(vals[f"err_{b}"] or 0),
-                          int(vals[f"to_{b}"] or 0))
+            counts = {b: tuple(int(vals[f"{n}_{b}"]) for n in names)
                       for b in wave}
         else:
             split = (
                 spark.read.parquet(output_path)
                 .filter(F.col("bucket").isin(wave))
                 .groupBy("bucket").agg(
-                    F.count(F.lit(1)).alias("docs"),
-                    F.sum(fallback.cast("long")).alias("fb"),
-                    F.sum((F.col("status") == "empty").cast("long")
-                          ).alias("empty"),
-                    F.sum((F.col("status") == "error").cast("long")
-                          ).alias("err"),
-                    F.sum((F.col("status") == "timeout").cast("long")
-                          ).alias("to"))
+                    *[F.expr(f"count_if({cond}) AS {name}")
+                      for name, cond in _BUCKET_COUNTS])
                 .collect())
-            counts = {r["bucket"]: (int(r["docs"]), int(r["fb"] or 0),
-                                    int(r["empty"] or 0), int(r["err"] or 0),
-                                    int(r["to"] or 0))
+            counts = {r["bucket"]: tuple(int(r[n]) for n in names)
                       for r in split}
         rows = []
         for b in wave:
@@ -354,14 +390,16 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
                          n_fb / n_docs if n_docs else 0.0,
                          n_empty / n_docs if n_docs else 0.0,
                          lineage, n_buckets))
-        wave_metrics = (
-            spark.createDataFrame(rows, schema=_PROGRESS_SCHEMA)
-            .withColumn("committed_at", F.current_timestamp())
-        )
-        wave_metrics.write.mode("append").parquet(progress_path)
+        # one file per wave: a LocalRelation scan would otherwise split
+        # a wave's few rows over defaultParallelism tasks and files
+        (_progress_frame(spark, rows).coalesce(1)
+         .write.mode("append").parquet(progress_path))
+        summary["progress_s"] += time.perf_counter() - t0
         summary["processed_buckets"] += len(wave)
         summary["docs"] += sum(r[2] for r in rows)
         summary["waves"] += 1
+    for k in ("write_s", "progress_s"):
+        summary[k] = round(summary[k], 3)
     return summary
 
 
