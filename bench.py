@@ -518,83 +518,6 @@ def _media_tier(spark) -> dict:
     return out
 
 
-def _size_routing_run(spark, reps: int = 4) -> dict:
-    """Mixed-corpus wall-clock with and without two-tier size routing
-    (--size-split-bytes, SURVEY §4.3) — BOTH regimes, honestly:
-
-    - ``rare_huge``: the full sf corpus at the ~9 KB default weight
-      plus ~9 docs at ~2.3 MB (per-doc cost comparable to a whole
-      task's small-doc share).  This is the case the flag exists for —
-      unrouted, the straggler task serves a huge doc ON TOP of its full
-      small share; routed, the heavy pass is count-balanced and
-      scheduled first, so it overlaps the small pass from t=0.
-      Expected speedup > 1.
-    - ``moderate_tail``: ~2.5% of docs at the ~145 KB real-page weight.
-      Hash salting already equalizes this mix; the split only adds a
-      stage.  Expected speedup < 1 — recorded so the flag's
-      when-NOT-to-use guidance carries numbers (the SURVEY
-      measured-and-rejected pattern).
-
-    Both plans run over the SAME persisted input.  Reps are
-    INTERLEAVED (unrouted, routed, unrouted, ...) so host drift lands
-    on both labels equally — the sequential all-of-A-then-all-of-B
-    protocol recorded a 0.27× and a 1.36× for the SAME regimes across
-    two runs on this host, pure drift (same lesson as the scaling
-    block's interleaved windows).  Headline = best-of-``reps`` per
-    label; the full per-rep trail is persisted in the artifact."""
-    from pyspark.sql import functions as F
-
-    from trafilatura_spark.operators.pipeline import (
-        extract_documents, extract_documents_routed)
-    from trafilatura_spark.settings import Options
-    from trafilatura_spark.sources.corpus import synthesize_documents_df
-
-    opts = Options(fast=True, comments=False, with_metadata=True,
-                   min_extracted_size=5, min_output_size=1)
-    out = {"tasks": CPUS, "split_bytes": 40_000}
-    for regime, hboiler, mod in (("rare_huge", 5248, 600),
-                                 ("moderate_tail", 328, 48)):
-        light = synthesize_documents_df(spark, SF_DIR, replicate=1,
-                                        partitions=CPUS * 2,
-                                        boiler_repeat=BOILER)
-        heavy = (synthesize_documents_df(spark, SF_DIR, replicate=1,
-                                         partitions=CPUS * 2,
-                                         boiler_repeat=hboiler)
-                 .filter(F.xxhash64("doc_id") % mod == 0)
-                 .withColumn("doc_id",
-                             F.concat(F.col("doc_id"), F.lit("_h"))))
-        mixed = light.unionByName(heavy).persist()
-        n = mixed.count()
-        n_heavy = mixed.filter(F.col("doc_id").endswith("_h")).count()
-        # warm-up touches every partition
-        extract_documents(mixed.filter(F.xxhash64("doc_id") % 7 == 0),
-                          opts).count()
-        res = {"docs": n, "heavy_docs": n_heavy,
-               "heavy_page_bytes": _page_weight_bytes(hboiler)}
-        plans = {
-            "unrouted": extract_documents(
-                mixed, opts, num_partitions=CPUS)
-            .filter(F.col("status") == "ok"),
-            "routed": extract_documents_routed(
-                mixed, opts, num_partitions=CPUS,
-                size_split_bytes=out["split_bytes"])
-            .filter(F.col("status") == "ok"),
-        }
-        trail = {label: [] for label in plans}
-        for _ in range(reps):
-            for label, ex in plans.items():
-                t0 = time.time()
-                ex.count()
-                trail[label].append(round(time.time() - t0, 3))
-        for label, secs in trail.items():
-            res[f"{label}_sec"] = min(secs)
-            res[f"{label}_secs"] = secs
-        mixed.unpersist()
-        res["speedup"] = round(res["unrouted_sec"] / res["routed_sec"], 3)
-        out[regime] = res
-    return out
-
-
 def scaling_probe(cpus: int, reps: int = 4) -> None:
     _pin_cpus(cpus)
     spark = _make_session(cpus)
@@ -685,9 +608,6 @@ def main() -> None:
     by_weight = (None if scaling_only
                  or os.environ.get("SPARK_GRAFT_BENCH_SKIP_WEIGHTS") == "1"
                  else _weight_ladder(spark))
-    size_routing = (None if scaling_only
-                    or os.environ.get("SPARK_GRAFT_BENCH_SKIP_WEIGHTS") == "1"
-                    else _size_routing_run(spark))
     spark.stop()
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
@@ -700,7 +620,6 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "extraction": extraction,
         "extraction_by_weight": by_weight,
-        "size_routing": size_routing,
         "scaling": scaling,
     }
     print(json.dumps(result))

@@ -16,7 +16,6 @@ pure-Python path is then the production path and is covered everywhere
 else.
 """
 
-import pathlib
 import random
 
 import pytest
@@ -129,9 +128,9 @@ def test_unit_cases():
         assert_same(html)
 
 
-def test_cache_corpus_exact():
+def test_cache_corpus_exact(reference_dir):
     from trafilatura_spark.sources.loading import decode_file
-    cache = pathlib.Path("/root/reference/test/cache")
+    cache = reference_dir / "test" / "cache"
     if not cache.exists():
         pytest.skip("corpus missing")
     for page in sorted(cache.glob("*.html")):
@@ -142,9 +141,9 @@ def test_cache_corpus_exact():
         assert tree_repr(fb.root) == tree_repr(croot), page.name
 
 
-def test_eval_corpus_sample_exact():
+def test_eval_corpus_sample_exact(reference_dir):
     from trafilatura_spark.sources.loading import decode_file
-    ev = pathlib.Path("/root/reference/test/eval")
+    ev = reference_dir / "test" / "eval"
     if not ev.exists():
         pytest.skip("corpus missing")
     pages = sorted(ev.glob("*.html"))[::7]  # ~130 spread across the set
@@ -212,14 +211,13 @@ def test_parse_html_integration_uses_accelerator():
     assert body.text_content() == "article"
 
 
-def test_text_content_and_find_all_parity():
+def test_text_content_and_find_all_parity(reference_pages):
     from trafilatura_spark.sources.loading import decode_file
     ctext = dom._CTEXT
     cfind = dom._CFINDALL
     if ctext is None:
         pytest.skip("accelerator unavailable")
-    cache = pathlib.Path("/root/reference/test/cache")
-    pages = sorted(cache.glob("*.html"))[:25] if cache.exists() else []
+    pages = reference_pages("cache")[:25]
     htmls = [decode_file(p.read_bytes()) for p in pages] + [
         "<div>a<span>b<em>c</em>d</span>e</div>f",
         "<p><b><i>J</i>ane</b> Doe</p>",
@@ -365,16 +363,15 @@ _CLEAN_CASES = [
 ]
 
 
-def test_clean_copy_emit_parity():
+def test_clean_copy_emit_parity(reference_pages):
     from trafilatura_spark.operators import cleaning as cl
     from trafilatura_spark.settings import Options
     from trafilatura_spark.core import load_html
     from trafilatura_spark.sources.loading import decode_file
     if dom._CCLEANCOPY is None:
         pytest.skip("accelerator unavailable")
-    cache = pathlib.Path("/root/reference/test/cache")
     htmls = [decode_file(p.read_bytes())
-             for p in sorted(cache.glob("*.html"))[:40]] + _CLEAN_CASES
+             for p in reference_pages("cache")[:40]] + _CLEAN_CASES
     off = _toggling("_CCLEANCOPY")
     for html in htmls:
         tree = load_html(html)
@@ -392,15 +389,14 @@ def test_clean_copy_emit_parity():
                     parents_consistent(cc)
 
 
-def test_metadata_index_parity():
+def test_metadata_index_parity(reference_pages):
     from trafilatura_spark.operators import metadata as md
     from trafilatura_spark.core import load_html
     from trafilatura_spark.sources.loading import decode_file
     if dom._CMETAIDX is None:
         pytest.skip("accelerator unavailable")
-    cache = pathlib.Path("/root/reference/test/cache")
     htmls = [decode_file(p.read_bytes())
-             for p in sorted(cache.glob("*.html"))[:40]] + [
+             for p in reference_pages("cache")[:40]] + [
         # every classification seam in one page
         "<body><h1 class='entry-title'>T</h1><h2 class='post-title'>U</h2>"
         "<span class='PUBLISHED on'>d</span><abbr class='entry-date'>e</abbr>"
@@ -425,15 +421,14 @@ def test_metadata_index_parity():
         assert py.license_containers == cc.license_containers
 
 
-def test_collect_metrics_parity():
+def test_collect_metrics_parity(reference_pages):
     from trafilatura_spark.operators import readability as rd
     from trafilatura_spark.core import load_html
     from trafilatura_spark.sources.loading import decode_file
     if dom._CMETRICS is None:
         pytest.skip("accelerator unavailable")
-    cache = pathlib.Path("/root/reference/test/cache")
     htmls = [decode_file(p.read_bytes())
-             for p in sorted(cache.glob("*.html"))[:40]] + [
+             for p in reference_pages("cache")[:40]] + [
         # comma counting, link cores, unicode + boundary whitespace
         "<body><p>a, b , c  <a href='#'>link,text</a> tail,</p></body>",
         "<body><div> <span> </span>x　</div></body>",
@@ -454,15 +449,14 @@ def test_collect_metrics_parity():
             assert [type(a) for a in py[k]] == [type(b) for b in cc[k]]
 
 
-def test_bucket_by_tag_parity():
+def test_bucket_by_tag_parity(reference_pages):
     from trafilatura_spark.operators import selectors as sel
     from trafilatura_spark.core import load_html
     from trafilatura_spark.sources.loading import decode_file
     if dom._CBUCKETS is None:
         pytest.skip("accelerator unavailable")
-    cache = pathlib.Path("/root/reference/test/cache")
     htmls = [decode_file(p.read_bytes())
-             for p in sorted(cache.glob("*.html"))[:40]] + [
+             for p in reference_pages("cache")[:40]] + [
         "<body><div><p>a</p><span>b</span></div><main><p>c</p></main></body>",
         "", "text only",
     ]
@@ -587,7 +581,7 @@ def test_walk_primitives_fuzz_differential():
             all(pyb[k] == cb[k] for k in pyb)
 
 
-def test_table_hit_and_attr_pair_parity():
+def test_table_hit_and_attr_pair_parity(reference_pages):
     """C predicate seam (selectors._hit/_hit_m/_class_id) vs the
     regex/pure-Python path: seeded fuzz over every production pattern
     table (with real patterns spliced in), plus full selector-function
@@ -632,8 +626,7 @@ def test_table_hit_and_attr_pair_parity():
            sel.select_basic_clean_elements, sel.select_author_elements,
            sel.select_author_discard_elements, sel.select_category_links,
            sel.select_tag_links, sel.select_title_elements]
-    cache = pathlib.Path("/root/reference/test/cache")
-    for p in sorted(cache.glob("*.html"))[:30]:
+    for p in reference_pages("cache")[:30]:
         tree = load_html(decode_file(p.read_bytes()))
         if tree is None:
             continue
@@ -647,7 +640,7 @@ def test_table_hit_and_attr_pair_parity():
             assert py == fn(tree), (p.name, fn.__name__)
 
 
-def test_readability_walks_parity():
+def test_readability_walks_parity(reference_pages):
     """C collection walks behind _transform_misused_divs and
     _remove_unlikely_candidates vs the pure-Python passes: full
     ReadabilityDocument.summary() tree equality over cache pages plus
@@ -658,9 +651,8 @@ def test_readability_walks_parity():
     from trafilatura_spark.sources.loading import decode_file
     if dom._CDIVS is None:
         pytest.skip("accelerator unavailable")
-    cache = pathlib.Path("/root/reference/test/cache")
     htmls = [decode_file(p.read_bytes())
-             for p in sorted(cache.glob("*.html"))[:40]] + [
+             for p in reference_pages("cache")[:40]] + [
         "<body><div><div>plain text only</div></div>"
         "<div><p>has markup</p></div></body>",
         "<body><div>a<br>b<div>c<br>d</div></div><br>outside</body>",

@@ -2,11 +2,12 @@
 (sitemaps.dart:53-368, feeds.dart:16-63+300-434) against the
 reference's own fixtures where available."""
 
-import pathlib
-
 import pytest
 
-REF = pathlib.Path("/root/reference/test/resources")
+
+@pytest.fixture(scope="module")
+def resources(reference_dir):
+    return reference_dir / "test" / "resources"
 
 
 def test_extract_robots_sitemaps():
@@ -37,10 +38,10 @@ def test_fix_relative_urls():
     assert fix_relative_urls(base, "rel.xml") == "https://example.org/rel.xml"
 
 
-def test_sitemap_cdata_loc(spark):
+def test_sitemap_cdata_loc(spark, resources):
     from pyspark.sql import functions as F
     from trafilatura_spark.sources.discovery import sitemap_links
-    xml = (REF / "sitemap2.xml").read_text()
+    xml = (resources / "sitemap2.xml").read_text()
     df = spark.createDataFrame([(xml,)], ["xml"])
     links = df.select(F.explode(sitemap_links(F.col("xml"))).alias("l")) \
         .collect()
@@ -120,9 +121,9 @@ def test_expand_sitemaps_txt_fallback(spark):
     assert got == {"https://ex.org/a", "https://ex.org/b"}
 
 
-def test_reference_sitemap_fixture_roundtrip(spark):
+def test_reference_sitemap_fixture_roundtrip(spark, resources):
     from trafilatura_spark.sources.discovery import expand_sitemaps
-    xml = (REF / "sitemap.xml").read_text()
+    xml = (resources / "sitemap.xml").read_text()
     fetched = spark.createDataFrame([("https://www.sitemaps.org/sitemap.xml",
                                       xml)], ["url", "xml"])
     seeds = spark.createDataFrame([("https://www.sitemaps.org/sitemap.xml",)],
@@ -141,9 +142,9 @@ def _atom_params():
                           reference="http://example.org/feed")
 
 
-def test_feed_atom_fixture():
+def test_feed_atom_fixture(resources):
     from trafilatura_spark.sources.feeds import extract_links
-    content = (REF / "feed1.atom").read_text()
+    content = (resources / "feed1.atom").read_text()
     got = extract_links(content, _atom_params())
     assert "http://example.org/2003/12/13/atom03" in got
     # NOTE: the reference's rel="self" exclusion only fires when rel
@@ -153,19 +154,19 @@ def test_feed_atom_fixture():
     assert "http://example.org/1000" in got
 
 
-def test_feed_rss_fixture():
+def test_feed_rss_fixture(resources):
     from trafilatura_spark.sources.feeds import FeedParameters, extract_links
     p = FeedParameters(base="http://www.example.com",
                        domain="www.example.com",
                        reference="http://www.example.com/feed")
-    got = extract_links((REF / "feed2.rss").read_text(), p)
+    got = extract_links((resources / "feed2.rss").read_text(), p)
     assert got == ["http://www.example.com/main.html",
                    "http://www.example.com/blog/post/1"]
 
 
-def test_feed_json_fixture():
+def test_feed_json_fixture(resources):
     from trafilatura_spark.sources.feeds import find_feed_links
-    content = (REF / "feed.json").read_text()
+    content = (resources / "feed.json").read_text()
     got = find_feed_links(content, "https://www.jsonfeed.org/feed.json")
     # external NPR links survive the domain gate because the URLs contain
     # 'feed' (utm_medium=JSONFeed), mirroring feeds.dart:118-121
@@ -281,13 +282,13 @@ def test_filter_robots_frontier(spark):
                    "https://norobots.net/free"}
 
 
-def test_sitemap_hreflang_precedence(spark):
+def test_sitemap_hreflang_precedence(spark, resources):
     """extractSitemapLanglinks (sitemaps.dart:141-158) over the
     reference's sitemap-hreflang.xml fixture: with a target language the
     matching hreflang alternates (incl. x-default) replace the <loc>s."""
     from pyspark.sql import functions as F
     from trafilatura_spark.sources.discovery import sitemap_links
-    xml = (REF / "sitemap-hreflang.xml").read_text()
+    xml = (resources / "sitemap-hreflang.xml").read_text()
     df = spark.createDataFrame([(xml,)], ["xml"])
     de = {r["l"] for r in df.select(
         F.explode(sitemap_links(F.col("xml"), target_lang="de")).alias("l"))

@@ -123,16 +123,15 @@ def test_comment_wrapping_script_skipped():
     assert "junk" not in txt and "t.length" not in txt
 
 
-def test_fast_vs_stdlib_parity_on_cache_corpus():
+def test_fast_vs_stdlib_parity_on_cache_corpus(reference_dir):
     """The fast builder and the stdlib fallback must agree (within 2%
     total text length) on the real-page corpus.  faz.net.streaming.html
     is exempt: it nests a 408 KB <script> inside an HTML comment, which
     stdlib HTMLParser mis-tokenizes (ends the comment early and emits JS
     as text) while the fast builder correctly skips the whole comment."""
-    import pathlib
     from trafilatura_spark.dom import _FastBuilder, _TreeBuilder
     from trafilatura_spark.sources.loading import decode_file
-    cache = pathlib.Path("/root/reference/test/cache")
+    cache = reference_dir / "test" / "cache"
     if not cache.exists():
         import pytest
         pytest.skip("corpus missing")

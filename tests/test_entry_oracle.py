@@ -48,7 +48,10 @@ NAMES = sorted(entrymod.queries())
 
 
 @pytest.mark.parametrize("name", NAMES)
-def test_query_matches_oracle(name, spark, duck):
+def test_query_matches_oracle(name, spark, duck, request):
+    if name == "extract_real_pages":
+        # its input is the reference checkout's real-page corpus
+        request.getfixturevalue("reference_dir")
     fn = entrymod.queries()[name]
     sql = entrymod.oracle_sql().get(name)
     assert sql is not None, f"{name} has no oracle"

@@ -643,15 +643,14 @@ def _naive_metrics(node):
     return len(trim(text)), text.count(","), links
 
 
-def test_readability_metrics_monoid_real_pages():
+def test_readability_metrics_monoid_real_pages(reference_dir):
     """_collect_metrics must agree with the naive per-node definitions on
     every node of a sample of real cache pages (whitespace seams, nested
     anchors, comments, script remnants all occur naturally there)."""
-    import pathlib
     from trafilatura_spark.operators.readability import _collect_metrics
     from trafilatura_spark.sources.loading import decode_file
 
-    cache = pathlib.Path("/root/reference/test/cache")
+    cache = reference_dir / "test" / "cache"
     if not cache.exists():
         import pytest
         pytest.skip("corpus missing")

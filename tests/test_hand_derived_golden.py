@@ -50,12 +50,16 @@ from trafilatura_spark.core import bare_extraction
 from trafilatura_spark.settings import Options
 from trafilatura_spark.sources.loading import decode_file
 
-CACHE = pathlib.Path("/root/reference/test/cache")
 FIXTURES = pathlib.Path(__file__).parent / "fixtures"
 
 
-def _read(page: str) -> str:
-    return decode_file((CACHE / page).read_bytes())
+@pytest.fixture(scope="module")
+def cache(reference_dir):
+    return reference_dir / "test" / "cache"
+
+
+def _read(cache: pathlib.Path, page: str) -> str:
+    return decode_file((cache / page).read_bytes())
 
 
 def between(h: str, a: str, b: str) -> str:
@@ -379,8 +383,8 @@ PAGES = {
 
 
 @pytest.mark.parametrize("page", sorted(PAGES))
-def test_hand_derived_spans(page):
-    h = _read(page)
+def test_hand_derived_spans(page, cache):
+    h = _read(cache, page)
     want_tier, want_spans = PAGES[page](h)
     res = bare_extraction(h, Options(with_metadata=True), doc_id=page)
     assert res.status == "ok"
@@ -390,12 +394,12 @@ def test_hand_derived_spans(page):
 
 
 @pytest.mark.parametrize("page", sorted(PAGES))
-def test_hand_derived_matches_pinned_manifest(page):
+def test_hand_derived_matches_pinned_manifest(page, cache):
     """The anti-circularity payoff: the hand derivation must agree with
     the regen-produced cache manifest — for these 12 pages the manifest
     is now independently validated, so a pipeline regression cannot be
     'blessed' into it unnoticed."""
     golden = json.loads((FIXTURES / "cache_golden.json").read_text())
-    _, want_spans = PAGES[page](_read(page))
+    _, want_spans = PAGES[page](_read(cache, page))
     payload = json.dumps(want_spans, ensure_ascii=False)
     assert hashlib.md5(payload.encode()).hexdigest() == golden[page]["digest"]

@@ -196,12 +196,11 @@ def test_stateful_url_frontier(spark, tmp_path):
                                     for r in rows2}
 
 
-def test_discovery_on_reference_resources(spark):
+def test_discovery_on_reference_resources(spark, reference_dir):
     """Run the discovery operators over the reference's own resource
     fixtures (test/resources/*.xml|atom|rss|json)."""
     import gzip
-    import pathlib
-    res = pathlib.Path("/root/reference/test/resources")
+    res = reference_dir / "test" / "resources"
     if not res.exists():
         pytest.skip("resources missing")
     from trafilatura_spark.sources.discovery import (

@@ -4,8 +4,6 @@ reference is HTML-only), same output contract as the HTML cascade."""
 
 import zlib
 
-import pytest
-
 from trafilatura_spark.sources.corpus import doc_parts
 from trafilatura_spark.sources.pdf import (
     build_pdf, extract_pdf_spans, _unescape_pdf_string)
@@ -277,23 +275,3 @@ def test_pdf_empty_rows_carry_len_text_zero(spark):
     assert out["status"].tolist() == ["empty"]
     assert out["len_text"].tolist() == [0]
 
-
-def test_job_rejects_size_split_with_pdf_input(spark, tmp_path):
-    """--size-split-bytes routes on the spans column, which pdf-parquet
-    input does not carry — must fail fast, not mid-wave."""
-    import pandas as pd
-
-    from trafilatura_spark.core import Options
-    from trafilatura_spark.job import run_extraction
-    from trafilatura_spark.sources.pdf import build_pdf, make_pdf_batches
-
-    inp = str(tmp_path / "pdfs")
-    spark.createDataFrame(
-        pd.DataFrame({"doc_id": ["1"], "pdf": [build_pdf(1, "hello")]})
-    ).write.parquet(inp)
-    with pytest.raises(ValueError, match="size-split"):
-        run_extraction(spark, spark.read.parquet(inp),
-                       str(tmp_path / "out"), str(tmp_path / "prog"),
-                       run_id="r", options=Options(),
-                       batches_fn=make_pdf_batches(Options()),
-                       size_split_bytes=1000)

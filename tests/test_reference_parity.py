@@ -15,7 +15,10 @@ from trafilatura_spark.core import bare_extraction, extract_txt, load_html
 from trafilatura_spark.operators.metadata import extract_metadata
 from trafilatura_spark.settings import Options
 
-REF = pathlib.Path("/root/reference/test")
+
+@pytest.fixture(scope="module")
+def ref(reference_dir):
+    return reference_dir / "test"
 
 
 # -- unit_test.dart:11-118 ----------------------------------------------------
@@ -50,8 +53,8 @@ def test_ref_load_html():
     assert load_html("<html><body>Test</body></html>") is not None
 
 
-def test_ref_exotic_tags_resource():
-    path = REF / "resources" / "exotic_tags.html"
+def test_ref_exotic_tags_resource(ref):
+    path = ref / "resources" / "exotic_tags.html"
     if not path.exists():
         pytest.skip("resource missing")
     res = bare_extraction(path.read_text(errors="replace"),
@@ -115,12 +118,11 @@ def test_ref_meta_image():
 
 # -- real-page corpus sweep (test/cache, 110 live-site pages) -----------------
 
-@pytest.mark.skipif(not (REF / "cache").exists(), reason="corpus missing")
-def test_cache_corpus_sweep():
+def test_cache_corpus_sweep(ref):
     """Every real page must extract without raising; the large majority
     must yield non-empty output with sane span structure."""
     opts = Options(with_metadata=True)
-    pages = sorted((REF / "cache").glob("*.html"))
+    pages = sorted((ref / "cache").glob("*.html"))
     assert len(pages) >= 100
     ok = empty = rejected = error = 0
     titled = 0
@@ -147,8 +149,7 @@ def test_cache_corpus_sweep():
     assert titled / max(ok, 1) >= 0.9
 
 
-@pytest.mark.skipif(not (REF / "cache").exists(), reason="corpus missing")
-def test_cache_metadata_coverage_floors():
+def test_cache_metadata_coverage_floors(ref):
     """Regression floors for metadata field coverage on the real-page
     corpus (measured round 1: title 100%, url 89%, date 71%, author 62%,
     sitename 92%, description 83%)."""
@@ -157,7 +158,7 @@ def test_cache_metadata_coverage_floors():
     counts = {k: 0 for k in ("title", "author", "date", "url", "sitename",
                              "description")}
     n = 0
-    for page in sorted((REF / "cache").glob("*.html")):
+    for page in sorted((ref / "cache").glob("*.html")):
         res = bare_extraction(decode_file(page.read_bytes()), opts,
                               doc_id=page.name)
         if res.meta is None:
@@ -228,10 +229,10 @@ def test_ref_table_cells():
     assert cells == ["Cell 1", "Cell 2", "Cell 3", "Cell 4"]
 
 
-def test_exotic_tags_golden_spans():
+def test_exotic_tags_golden_spans(ref):
     """Pinned golden spans for the reference's exotic_tags.html fixture
     (test/resources/exotic_tags.html) under relaxed sizes."""
-    path = REF / "resources" / "exotic_tags.html"
+    path = ref / "resources" / "exotic_tags.html"
     if not path.exists():
         pytest.skip("resource missing")
     res = bare_extraction(path.read_text(errors="replace"),
@@ -249,8 +250,7 @@ def test_exotic_tags_golden_spans():
     ]
 
 
-@pytest.mark.skipif(not (REF / "cache").exists(), reason="corpus missing")
-def test_cache_corpus_golden_manifest():
+def test_cache_corpus_golden_manifest(ref):
     """Span-sequence digests over the 110 real pages must match the
     pinned manifest (regenerate deliberately with
     scripts/regen_cache_golden.py after intentional behavior changes)."""
@@ -262,7 +262,7 @@ def test_cache_corpus_golden_manifest():
         .read_text())
     opts = Options(with_metadata=True)
     drift = []
-    for page in sorted((REF / "cache").glob("*.html")):
+    for page in sorted((ref / "cache").glob("*.html")):
         res = bare_extraction(decode_file(page.read_bytes()), opts,
                               doc_id=page.name)
         payload = json.dumps(
@@ -276,8 +276,7 @@ def test_cache_corpus_golden_manifest():
     assert not drift, f"extraction drift on {len(drift)} pages: {drift[:5]}"
 
 
-@pytest.mark.skipif(not (REF / "eval").exists(), reason="corpus missing")
-def test_eval_corpus_golden_manifest():
+def test_eval_corpus_golden_manifest(ref):
     """Span-sequence digests over the full 923-page eval corpus must
     match the pinned manifest (regenerate deliberately with
     scripts/regen_eval_golden.py after intentional behavior changes)."""
@@ -289,7 +288,7 @@ def test_eval_corpus_golden_manifest():
         .read_text())
     opts = Options(with_metadata=True)
     drift = []
-    for page in sorted((REF / "eval").glob("*.html")):
+    for page in sorted((ref / "eval").glob("*.html")):
         res = bare_extraction(decode_file(page.read_bytes()), opts,
                               doc_id=page.name)
         payload = json.dumps(

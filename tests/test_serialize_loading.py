@@ -143,11 +143,10 @@ def test_render_xml_wellformed():
     ET.fromstring(render_xml(body, {"title": 'a"<b>&'}))
 
 
-def test_reference_encoding_resources():
+def test_reference_encoding_resources(reference_dir):
     """Decode the reference's own encoding fixtures
     (test/resources/utf8.html, webpage.html.gz)."""
-    import pathlib
-    res = pathlib.Path("/root/reference/test/resources")
+    res = reference_dir / "test" / "resources"
     if not res.exists():
         import pytest
         pytest.skip("resources missing")
@@ -162,11 +161,10 @@ def test_reference_encoding_resources():
     assert r.status in ("ok", "empty")
 
 
-def test_reference_url_list_processing(spark):
+def test_reference_url_list_processing(spark, reference_dir):
     """CLI URL-list semantics: process list minus discard list, dedup
     (cli_utils.dart loadInputDict / deduplicateUrls analog)."""
-    import pathlib
-    res = pathlib.Path("/root/reference/test/resources")
+    res = reference_dir / "test" / "resources"
     if not res.exists():
         import pytest
         pytest.skip("resources missing")

@@ -726,123 +726,55 @@ def test_lang_id_zh_and_ties_match_duckdb_oracle(spark):
     assert got == oracle
 
 
-def test_size_routed_matches_unrouted(spark, sf_dir):
-    """Two-tier size routing (SURVEY.md §4.3, --size-split-bytes) is a
-    pure physical re-plan: results are identical to the single-pass
-    operator, both tiers genuinely receive documents at the median
-    threshold, and the heavy pass is count-balanced (round-robin, not
-    hash-salted — the straggler is the Poisson-max heavy count)."""
-    from trafilatura_spark.operators.pipeline import (
-        doc_size_bytes, extract_documents_routed)
+def test_multi_mb_pages_under_small_arrow_byte_cap(spark, sf_dir):
+    """Arrow batches close at maxRecordsPerBatch OR maxBytesPerBatch,
+    whichever comes first: ~1.5 MB pages mixed into ordinary ones give
+    the same rows whether a partition arrives as one batch (64 MB
+    default cap) or is cut into several (2 MB cap)."""
+    import pandas as pd
 
-    # the plan-shape assertions below need fresh physical plans: a
-    # persisted df from an earlier test with identical lineage would make
-    # the unrouted plan resolve to an InMemoryTableScan whose cached-plan
-    # string carries extract_batches twice (Final + Initial plan)
-    spark.catalog.clearCache()
-    docs = synthesize_documents_df(spark, sf_dir)
-    split = int(docs.select(
-        F.percentile_approx(doc_size_bytes(), 0.5)).first()[0])
-    n_small = docs.filter(doc_size_bytes() <= split).count()
-    n_large = docs.filter(doc_size_bytes() > split).count()
-    assert n_small > 0 and n_large > 0, (n_small, n_large, split)
+    from trafilatura_spark.sources.corpus import synthesize_spans_from
 
-    def snapshot(df):
-        return sorted(
-            (r["doc_id"], r["status"], r["tier"], r["text"])
-            for r in df.select("doc_id", "status", "tier", "text").collect())
+    # filter BEFORE synthesis: a 1.5 MB page per input row adds up fast
+    base = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+        .select("doc_id", "text", "lang", "source")
+    heavy = synthesize_spans_from(base.filter("doc_id % 100 = 7"),
+                                  boiler_repeat=3400)
+    light = synthesize_spans_from(base.filter("doc_id % 10 = 3"))
+    docs = light.unionByName(heavy).coalesce(1)
+    n_heavy = heavy.count()
+    assert n_heavy >= 3
 
-    plain = extract_documents(docs, RELAXED, num_partitions=8)
-    routed = extract_documents_routed(docs, RELAXED, num_partitions=8,
-                                      size_split_bytes=split)
-    assert snapshot(routed) == snapshot(plain)
+    def batch_sizes(batches):
+        for pdf in batches:
+            yield pd.DataFrame({"n": [len(pdf)]})
 
-    plan = routed._jdf.queryExecution().executedPlan().toString()
-    # two extraction Arrow stages unioned (the corpus synthesizer is a
-    # MapInPandas of its own, so count the extractor by name); heavy
-    # branch rebalanced round-robin
-    assert plan.count("extract_batches") == 2, plan
-    assert "RoundRobinPartitioning" in plan, plan
+    def run():
+        rows = sorted(
+            tuple(r) for r in extract_documents(docs, RELAXED)
+            .select("doc_id", "status", "tier", "text", "spans").collect())
+        sizes = [r["n"] for r in
+                 docs.mapInPandas(batch_sizes, "n long").collect()]
+        return rows, sizes
 
-    # threshold <= 0 degrades to the plain single-pass operator: one
-    # extraction Arrow stage, no union
-    off = extract_documents_routed(docs, RELAXED, num_partitions=8,
-                                   size_split_bytes=0)
-    off_plan = off._jdf.queryExecution().executedPlan().toString()
-    assert off_plan.count("extract_batches") == 1, off_plan
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    default_rows, default_sizes = run()
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "2MB")
+    try:
+        capped_rows, capped_sizes = run()
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
-
-def test_job_size_split_flag(spark, sf_dir, tmp_path):
-    """--size-split-bytes rides the CLI into run_extraction: output rows
-    (per doc_id: status/tier/text) are byte-identical with and without
-    routing, across waves and the checkpoint machinery."""
-    from trafilatura_spark.job import main as job_main
-
-    # the job's default parquet input is spans-shaped (SURVEY §2.1 file
-    # pipeline); materialize the synthesized corpus as that input
-    from trafilatura_spark.operators.pipeline import doc_size_bytes
-    spans_df = synthesize_documents_df(spark, sf_dir)
-    inp = str(tmp_path / "ss_in")
-    spans_df.write.parquet(inp)
-    split = int(spans_df.select(
-        F.percentile_approx(doc_size_bytes(), 0.5)).first()[0])
-
-    def run(tag, *extra):
-        out = str(tmp_path / f"ss_out_{tag}")
-        rc = job_main(["--input", inp, "--output", out,
-                       "--progress", str(tmp_path / f"ss_prog_{tag}"),
-                       "--run-id", tag, "--buckets", "4",
-                       "--wave-size", "2", "--fast", *extra])
-        assert rc == 0
-        return sorted(
-            (r["doc_id"], r["status"], r["tier"], r["text"])
-            for r in spark.read.parquet(out)
-            .select("doc_id", "status", "tier", "text").collect())
-
-    base = run("off")
-    routed = run("on", "--size-split-bytes", str(split))
-    assert routed == base
-
-
-def test_torn_wave_resume_with_size_routing(spark, sf_dir, tmp_path):
-    """The routed path (--size-split-bytes + the per-wave persist) must
-    survive the torn-wave scrub: crash between output append and progress
-    append, resume WITH routing still on, final rows value-identical to an
-    unrouted clean run (no duplicates, no drops through either branch)."""
-    from trafilatura_spark.operators.pipeline import doc_size_bytes
-
-    docs = synthesize_documents_df(spark, sf_dir)
-    split = int(docs.select(
-        F.percentile_approx(doc_size_bytes(), 0.5)).first()[0])
-
-    def snapshot(path):
-        df = spark.read.parquet(path)
-        return sorted(
-            (r["doc_id"], r["status"], r["tier"], r["text"])
-            for r in df.select("doc_id", "status", "tier", "text").collect())
-
-    # clean unrouted reference
-    ref_out, ref_prog = str(tmp_path / "rro"), str(tmp_path / "rrp")
-    run_extraction(spark, docs, ref_out, ref_prog, "ref", RELAXED,
-                   n_buckets=4, wave_size=2)
-    reference = snapshot(ref_out)
-
-    # routed run, then simulate the torn wave: drop bucket 1's progress
-    # row but keep its output partition (= crash after the wave's routed
-    # output write, before its progress commit)
-    out, prog = str(tmp_path / "rto"), str(tmp_path / "rtp")
-    run_extraction(spark, docs, out, prog, "rt1", RELAXED,
-                   n_buckets=4, wave_size=2, size_split_bytes=split)
-    kept = spark.read.parquet(prog).filter(F.col("bucket") != 1).collect()
-    schema = spark.read.parquet(prog).schema
-    shutil.rmtree(prog)
-    spark.createDataFrame(kept, schema).write.parquet(prog)
-
-    s = run_extraction(spark, docs, out, prog, "rt2", RELAXED,
-                       n_buckets=4, wave_size=2, size_split_bytes=split)
-    assert s["scrubbed_torn_buckets"] == 1
-    assert s["processed_buckets"] == 1
-    assert snapshot(out) == reference
+    n_docs = light.count() + n_heavy
+    assert len(default_rows) == n_docs
+    # one partition: one batch under the default cap, several under 2 MB
+    assert default_sizes == [n_docs]
+    assert len(capped_sizes) > 1 and sum(capped_sizes) == n_docs
+    assert capped_rows == default_rows
 
 
 def test_ivf_precomputed_cells_seam(spark):

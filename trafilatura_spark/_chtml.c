@@ -2450,7 +2450,8 @@ fail:
  * collected and its subtree skipped.  The caller applies drop_tree in
  * the returned document order — equivalent to dropping in-walk, since
  * both process disjoint subtrees in document order against the same
- * evolving tree state. */
+ * evolving tree state.  `judge` must not mutate or detach tree nodes:
+ * the work stack holds borrowed node pointers. */
 static PyObject *
 chtml_unlikely_walk(PyObject *self, PyObject *args)
 {
@@ -2512,8 +2513,11 @@ chtml_unlikely_walk(PyObject *self, PyObject *args)
                                          idv ? idv : c_empty);
             if (key == NULL)
                 goto fail;
+            /* both branches leave one owned reference in `drop` */
             PyObject *drop = PyDict_GetItemWithError(verdicts, key);
-            if (drop == NULL) {
+            if (drop != NULL) {
+                Py_INCREF(drop);
+            } else {
                 if (PyErr_Occurred()) {
                     Py_DECREF(key);
                     goto fail;
@@ -2523,20 +2527,15 @@ chtml_unlikely_walk(PyObject *self, PyObject *args)
                     Py_DECREF(key);
                     goto fail;
                 }
-                int rc = PyDict_SetItem(verdicts, key, drop);
-                Py_DECREF(drop); /* dict holds it; borrowed below */
-                if (rc < 0) {
-                    Py_DECREF(key);
-                    goto fail;
-                }
-                drop = PyDict_GetItemWithError(verdicts, key);
-                if (drop == NULL) {
+                if (PyDict_SetItem(verdicts, key, drop) < 0) {
+                    Py_DECREF(drop);
                     Py_DECREF(key);
                     goto fail;
                 }
             }
             Py_DECREF(key);
             int truthy = PyObject_IsTrue(drop);
+            Py_DECREF(drop);
             if (truthy < 0)
                 goto fail;
             if (truthy) {

@@ -45,9 +45,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
-from .operators.pipeline import extract_documents, extraction_metrics  # noqa: F401
-from .operators.pipeline import (EXTRACTED_SCHEMA, doc_size_bytes,  # noqa: F401
-                                 extracted_schema, make_extract_batches)
+from .operators.pipeline import (extracted_schema, make_extract_batches,
+                                 salted_repartition)
 from .settings import Options
 
 
@@ -55,8 +54,12 @@ def make_session(app_name: str = "trafilatura-spark", master: str | None = None,
                  shuffle_partitions: int = 32,
                  arrow_batch: int = 256) -> SparkSession:
     """Session with the engine's scale defaults: AQE on (runtime skew
-    re-splits), small Arrow batches (multi-MB HTML payloads, SURVEY.md
-    §4.3.2), speculative execution (straggler defense §4.3.4)."""
+    re-splits), speculative execution (straggler defense, SURVEY.md
+    §4.3.4), and small Arrow batches (§4.3.2): each mapInPandas input
+    batch closes at whichever comes first, ``arrow_batch`` records
+    (``maxRecordsPerBatch``, 256 here) or Spark's 64 MB
+    ``maxBytesPerBatch`` default, so multi-MB pages are already bounded
+    by bytes and callers have nothing to hand-tune."""
     b = SparkSession.builder.appName(app_name)
     if master:
         b = b.master(master)
@@ -197,8 +200,7 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
                    lineage: str | None = None,
                    serialize: str | None = None,
                    batches_fn=None,
-                   lang_filter: str | None = None,
-                   size_split_bytes: int = 0) -> dict:
+                   lang_filter: str | None = None) -> dict:
     """Resumable batch extraction.  Returns run summary metrics.
 
     ``n_buckets`` is the checkpoint granularity (at 100 TB: hundreds —
@@ -215,10 +217,6 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
     (utils.dart:452-472), whose --target-lang gates on HTML metadata
     only.  Pure JVM column expressions appended to the extraction
     stage: no extra shuffle, no extra pass.
-    ``size_split_bytes`` (the job's --size-split-bytes, 0 = off) routes
-    docs above the threshold to a dedicated extraction pass per wave so
-    heavy pages cannot straggle a mixed task — see
-    operators.pipeline.extract_documents_routed for the cost model.
     The summary's ``write_s`` and ``progress_s`` are the run's seconds
     in the output writes and in the per-bucket metrics + progress
     appends, so the commit path's cost shows in every run.
@@ -265,59 +263,16 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
             f"--serialize {serialize} re-renders from the extraction tree "
             "and is only available with the default HTML extractor; "
             "custom batch producers support json/csv (column-derived)")
-    if size_split_bytes > 0 and batches_fn is not None:
-        # doc_size_bytes() weighs the `spans` column, which custom batch
-        # producers' inputs (e.g. pdf-parquet's (doc_id, pdf)) don't
-        # carry — without this guard the filter dies on an unresolved
-        # column mid-wave
-        raise ValueError(
-            "--size-split-bytes routes on the spans column and is only "
-            "available with the default HTML extractor (spans input)")
     extract_fn = batches_fn if batches_fn is not None \
         else make_extract_batches(options, serialize=in_stage_fmt)
     schema = extracted_schema(in_stage_fmt)
     for i in range(0, len(pending), wave_size):
         wave = pending[i:i + wave_size]
         wave_src = docs.filter(F.col("bucket").isin(wave))
-        if size_split_bytes > 0:
-            # two-tier size routing (--size-split-bytes, SURVEY §4.3):
-            # heavy docs get their own pass — the mixed wave's straggler
-            # is the task drawing the Poisson-max heavy count on top of
-            # a full small-doc share; see extract_documents_routed
-            sz = doc_size_bytes()
-            # PERSIST the wave around its write: the two tier branches
-            # rescan their input, and a shared exchange cannot help
-            # (predicate pushdown + CollapseRepartition split it back
-            # into two non-identical exchanges — see
-            # extract_documents_routed).  Unpersisted, routing cost
-            # ~1.9x the whole job's wall clock on a 1M-doc corpus with
-            # an EMPTY heavy side; the cache is bounded by wave size,
-            # the knob that already bounds per-wave work.
-            wave_cache = wave_src.persist()
-            branches_src = wave_cache
-            branches = [
-                # heavy pass FIRST (FIFO scheduling: its few long tasks
-                # get cores at t=0, the small pass backfills — the
-                # reverse order measurably serializes the two passes);
-                # keyless round-robin for exact count balance (hash only
-                # equalizes the EXPECTATION; the straggler is the
-                # Poisson-max task)
-                branches_src.filter(sz > size_split_bytes)
-                .repartition(tasks_per_wave),
-                # salted round-robin for the small pass: i.i.d. cost mix
-                branches_src.filter(sz <= size_split_bytes)
-                .repartition(tasks_per_wave, F.xxhash64("doc_id")),
-            ]
-        else:
-            wave_cache = None
-            # salted round-robin inside the wave: i.i.d. cost mix per task
-            branches = [wave_src.repartition(tasks_per_wave,
-                                             F.xxhash64("doc_id"))]
-        parts = [br.mapInPandas(extract_fn, schema) for br in branches]
-        extracted = parts[0]
-        for p in parts[1:]:
-            extracted = extracted.unionByName(p)
-        extracted = extracted.withColumn("bucket", bucket_col)
+        # salted round-robin inside the wave: i.i.d. cost mix per task
+        extracted = (salted_repartition(wave_src, tasks_per_wave)
+                     .mapInPandas(extract_fn, schema)
+                     .withColumn("bucket", bucket_col))
         if lang_filter:
             # BEFORE serialization: rendering rows the filter is about to
             # drop would be wasted work proportional to the dropped
@@ -362,10 +317,6 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
         t0 = time.perf_counter()
         observed.write.mode("append").partitionBy("bucket").parquet(output_path)
         summary["write_s"] += time.perf_counter() - t0
-        if wave_cache is not None:
-            # the write (the cache's only consumer) has committed; the
-            # above-cap metrics path re-reads the OUTPUT, not the input
-            wave_cache.unpersist()
 
         t0 = time.perf_counter()
         names = [name for name, _ in _BUCKET_COUNTS]
@@ -461,15 +412,6 @@ def main(argv: list[str] | None = None, *, transport=None) -> int:
     p.add_argument("--min-extracted-size", type=int, default=None,
                    help="override the MIN_EXTRACTED_SIZE gate (the "
                         "reference's config-file knob, settings.dart:26)")
-    p.add_argument("--size-split-bytes", type=int, default=0,
-                   help="two-tier size routing: docs whose total span "
-                        "bytes exceed this go to a dedicated "
-                        "count-balanced extraction pass per wave, "
-                        "scheduled first. Use for corpora with RARE "
-                        "multi-MB outliers (per-doc cost comparable to "
-                        "a whole task's share) — for ordinary weight "
-                        "spread the default salting already balances "
-                        "and the split only adds a stage. 0 = off.")
     p.add_argument("--doc-timeout", type=float, default=0.0,
                    help="per-document wall-clock budget in seconds; overruns "
                         "become status='timeout' rows counted in the wave "
@@ -1052,8 +994,7 @@ def main(argv: list[str] | None = None, *, transport=None) -> int:
                              lineage=args.input, serialize=args.serialize,
                              batches_fn=batches_fn,
                              lang_filter=(args.target_lang
-                                          if args.lang_filter else None),
-                             size_split_bytes=args.size_split_bytes)
+                                          if args.lang_filter else None))
     print(summary)
     return 0
 

@@ -10,9 +10,12 @@ Scale design (SURVEY.md §4.3):
 - **skew**: extraction cost ∝ document size; `salted_repartition`
   spreads docs round-robin by ``xxhash64(doc_id)`` so every task gets an
   i.i.d. cost mix regardless of input file layout;
-- **memory**: callers should set
-  ``spark.sql.execution.arrow.maxRecordsPerBatch`` low (64-256) because
-  HTML payloads are multi-MB;
+- **memory**: each mapInPandas input batch closes at whichever comes
+  first, ``spark.sql.execution.arrow.maxRecordsPerBatch`` (256 in
+  ``job.make_session``) or the 64 MB
+  ``spark.sql.execution.arrow.maxBytesPerBatch`` default, so multi-MB
+  pages are already bounded by bytes and callers have nothing to
+  hand-tune;
 - **failure isolation**: a pathological document yields a
   ``status='error'`` row, never a task failure
   (/root/reference/lib/src/core.dart:333-335); with
@@ -157,86 +160,6 @@ def extract_documents(df: DataFrame, options: Options | None = None,
         df = salted_repartition(df, num_partitions)
     return df.mapInPandas(make_extract_batches(options, serialize=serialize),
                           extracted_schema(serialize))
-
-
-def doc_size_bytes() -> F.Column:
-    """Approximate document cost: total span-text length (HTML payload
-    bytes dominate row size and extraction CPU is ~linear in them) —
-    pure JVM expression over the spans column."""
-    return F.aggregate(
-        F.transform("spans", lambda s: F.coalesce(F.length(s["text"]),
-                                                  F.lit(0))),
-        F.lit(0), lambda a, b: a + b)
-
-
-def extract_documents_routed(df: DataFrame, options: Options | None = None,
-                             num_partitions: int | None = None,
-                             size_split_bytes: int = 0,
-                             serialize: str | None = None) -> DataFrame:
-    """Two-tier size routing (SURVEY.md §4.3): documents above
-    ``size_split_bytes`` go to a dedicated pass instead of riding the
-    mixed wave.
-
-    Why: extraction cost is ~linear in page bytes — a 145 KB page costs
-    ~28× a default 8 KB page (BENCH extraction_by_weight).  Salted
-    round-robin gives every task the same EXPECTED heavy-doc count, but
-    the straggler is the task with the Poisson-max count: a task that
-    draws 3 heavy docs on top of its full small-doc share finishes long
-    after the wave.  Routing separates the cost classes so each pass is
-    balanced by its own unit cost: the small pass by doc count, the
-    heavy pass by heavy-doc count (few docs spread over the same
-    partition width ⇒ ~1 heavy doc per task, maximum parallelism on
-    exactly the docs that straggle).
-
-    When it wins (measured, sf0.1 local[32], 5000 default pages):
-    RARE-HUGE tails — 9 docs at ~2.3 MB: 4.24 s unrouted → 3.74 s
-    routed (1.13×), because the heavy docs run from t=0 at full width
-    instead of landing on top of some task's full small-doc share.
-    When it loses — MODERATE tails (125 docs at ~145 KB): 1.48 s →
-    1.95 s, because hash salting already equalizes that mix and the
-    split only adds a stage.  Flip it on when the corpus has rare
-    multi-MB outliers (per-doc cost ≳ the whole small-pass wall), not
-    for ordinary weight spread.
-
-    The heavy branch is unioned FIRST: task scheduling is FIFO across
-    the union's stages, so heavy-first gives the few long tasks the
-    cores at t=0 and the small pass backfills — light-first measurably
-    SERIALIZES the two passes (wall ≈ light + heavy).
-
-    Cost: the two tier branches RESCAN the input.  This cannot be fixed
-    declaratively: putting both filters above one shared salted Exchange
-    is defeated by the optimizer (predicate pushdown moves the filters
-    below the exchange and CollapseRepartition merges the heavy branch's
-    stacked shuffles, so the branches end up with non-identical
-    exchanges and no ReusedExchange — verified on the executed plan).
-    Callers whose input is expensive to re-produce must PERSIST it
-    first: the job persists each wave around its write (measured on a
-    1M-doc parquet corpus with an empty heavy side: unpersisted routing
-    cost ~1.9× the job wall clock; persisted it is within noise of the
-    unrouted path).  (A one-pass alternative is a REBALANCE shuffle
-    split by byte size under AQE; the explicit two-tier split is
-    preferred because it also isolates the heavy pass's Arrow batch
-    behavior and failure domain.)  ``size_split_bytes <= 0`` falls back
-    to the plain single-pass operator.
-    """
-    if size_split_bytes <= 0:
-        return extract_documents(df, options, num_partitions,
-                                 serialize=serialize)
-    options = options or Options()
-    sz = doc_size_bytes()
-    small = df.filter(sz <= size_split_bytes)
-    large = df.filter(sz > size_split_bytes)
-    if num_partitions:
-        small = salted_repartition(small, num_partitions)
-        # round-robin (keyless) repartition for the heavy pass: hash
-        # salting only equalizes EXPECTED counts (the straggler is the
-        # Poisson-max task); round-robin balances heavy-doc counts
-        # exactly — ceil(n_heavy / partitions) per task
-        large = large.repartition(num_partitions)
-    fn = make_extract_batches(options, serialize=serialize)
-    schema = extracted_schema(serialize)
-    return large.mapInPandas(fn, schema).unionByName(
-        small.mapInPandas(fn, schema))
 
 
 def extraction_metrics(extracted: DataFrame) -> DataFrame:

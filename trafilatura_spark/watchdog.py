@@ -10,22 +10,24 @@ another executor.  Time must be bounded too.
 Two cooperating mechanisms, both armed by ``doc_budget``:
 
 - **SIGALRM** (``signal.setitimer``): interrupts pure-Python loops —
-  the DOM tokenizer, the candidate walks, the renderers — anywhere in
-  a tier, mid-expression.  Available only in the main thread of the
-  process; PySpark's Python workers run the UDF in their main thread,
-  so this is the common case on executors.
+  the renderers, and the tokenizer and candidate walks when the C
+  accelerator is not loaded — anywhere in a tier, mid-expression.
+  Available only in the main thread of the process; PySpark's Python
+  workers run the UDF in their main thread, so this is the common case
+  on executors.
 - **deadline checks at cascade-tier boundaries** (``check_deadline``):
   a monotonic-clock comparison against a module-global deadline,
   called between the pipeline's stages.  Portable backstop for the
-  rare embedded/threaded caller where SIGALRM cannot be armed, and a
-  belt-and-suspenders catch for C-level regions SIGALRM cannot
-  interrupt (CPython's ``sre`` does not poll signals mid-match).
+  rare embedded/threaded caller where SIGALRM cannot be armed, and the
+  only check that applies inside C regions, which never poll signals:
+  the accelerator's walks, including the tokenizer ``_chtml.parse``,
+  and CPython's ``sre`` mid-match.
 
 Both raise ``DocTimeout``; ``core.bare_extraction`` converts it to a
 ``status='timeout'`` row — counted separately from ``error`` in
 ``extraction_metrics`` and the job's per-bucket wave metrics, because
-a timeout is a *budget* decision (retryable with a higher budget, or
-routable to a slow lane) while an error is a content defect.
+a timeout is a *budget* decision (retryable with a higher budget)
+while an error is a content defect.
 
 Disabled by default (``Options.doc_timeout_sec = 0``): zero syscalls,
 zero clock reads on the hot path, and byte-identical results.
