@@ -640,6 +640,33 @@ def test_table_hit_and_attr_pair_parity(reference_pages):
             assert py == fn(tree), (p.name, fn.__name__)
 
 
+def test_table_verdict_caches_bounded():
+    """Each per-table verdict cache clears at selectors.TABLE_CACHE_MAX on
+    both paths, and all tables' caches together stay within 2^18
+    entries."""
+    from trafilatura_spark.operators import selectors as sel
+    cap = sel.TABLE_CACHE_MAX
+    tables = [v for v in vars(sel).values() if isinstance(v, sel._Table)]
+    assert 2 * len(tables) * cap <= 1 << 18
+    # cap distinct probes fill a cache; the next one clears it first
+    probes = [f"s{i}" for i in range(cap + 1)]
+    t = sel._Table(["zz"])
+    sv = dom._CTABLEHIT
+    dom._CTABLEHIT = None
+    try:
+        for s in probes:
+            sel._hit(t, s)
+            sel._hit_m(t, s)
+    finally:
+        dom._CTABLEHIT = sv
+    assert len(t.cache) == len(t.cache_m) == 1
+    if dom._CTABLEHIT is not None:
+        cache = {}
+        for s in probes:
+            dom._CTABLEHIT(cache, t.patterns, s, False)
+        assert len(cache) == 1
+
+
 def test_readability_walks_parity(reference_pages):
     """C collection walks behind _transform_misused_divs and
     _remove_unlikely_candidates vs the pure-Python passes: full
@@ -673,12 +700,14 @@ def test_readability_walks_parity(reference_pages):
             setattr(dom, a, None)
         try:
             r_py = rd.ReadabilityDocument(
-                t1, min_text_length=25, retry_length=250).summary()
+                t1, min_text_length=25, retry_length=250,
+                refetch=tree.copy).summary()
         finally:
             for a, v in zip(sv, saved):
                 setattr(dom, a, v)
         r_c = rd.ReadabilityDocument(
-            t2, min_text_length=25, retry_length=250).summary()
+            t2, min_text_length=25, retry_length=250,
+            refetch=tree.copy).summary()
         if r_py is None or r_c is None:
             assert r_py is None and r_c is None, html[:80]
         else:
@@ -742,10 +771,10 @@ def test_walk_primitives_mutated_slot_robustness():
     sv = dom._CUNLIKELY
     dom._CUNLIKELY = None
     try:
-        rd.ReadabilityDocument(t_py)._remove_unlikely_candidates()
+        rd.ReadabilityDocument(t_py, refetch=build)._remove_unlikely_candidates()
     finally:
         dom._CUNLIKELY = sv
-    rd.ReadabilityDocument(t_c)._remove_unlikely_candidates()
+    rd.ReadabilityDocument(t_c, refetch=build)._remove_unlikely_candidates()
     assert [n.tag for n in t_c.find_all()] == [n.tag for n in t_py.find_all()]
     # None text/tail: falsy == empty through metrics and clean-copy
     t = parse_html("<html><body><p>x</p></body></html>")

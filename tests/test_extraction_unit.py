@@ -2,6 +2,8 @@
 golden span sequences, mirroring the reference's unit tests
 (/root/reference/test/unit_test.dart:11-118, htmlprocessing_test.dart)."""
 
+import pytest
+
 from trafilatura_spark.core import bare_extraction, extract_txt, load_html
 from trafilatura_spark.settings import Options
 
@@ -227,6 +229,40 @@ def test_recall_mode_keeps_more():
     texts_b = " ".join(s["text"] for s in balanced.spans)
     texts_r = " ".join(s["text"] for s in recall.spans)
     assert len(texts_r) >= len(texts_b)
+
+
+@pytest.mark.parametrize("focus", ["balanced", "precision", "recall"])
+def test_fast_mode_rescues_read_pruned_body(focus, monkeypatch):
+    """fast=True pages whose main pass comes up short: the wild-text
+    second chance and the baseline tier must read the body AFTER
+    prune_patterns, so the pruned promo never comes back through a
+    rescue."""
+    from trafilatura_spark.operators import main_extractor
+    promo = ("Buy our product now with this special limited offer, "
+             "available only today for readers.")
+    pages = [
+        (_page(f"<div id='wrap'><p>{LONG_P1}</p>"
+               f"<div class='promo-box'><p>{promo}</p></div>"
+               f"<p>{LONG_P2}</p></div>"), [LONG_P1, LONG_P2]),
+        (_page(f"<div><p>{LONG_P1}</p>"
+               f"<div class='promo'><p>{promo}</p></div></div>"), [LONG_P1]),
+    ]
+    wild = []
+    recover = main_extractor.recover_wild_text
+
+    def counted(*args):
+        wild.append(1)
+        return recover(*args)
+    monkeypatch.setattr(main_extractor, "recover_wild_text", counted)
+    opts = Options(with_metadata=False, fast=True, focus=focus,
+                   prune_patterns=("promo",))
+    for html, want in pages:
+        wild.clear()
+        res = bare_extraction(html, opts)
+        assert res.status == "ok"
+        assert wild or res.tier == "baseline"
+        assert [s["text"] for s in res.spans] == want
+        assert promo not in res.text
 
 
 # -- output-tree normalization (xml_utils.dart:65-192) ------------------------
@@ -716,7 +752,10 @@ def test_readability_candidate_outside_metrics_map():
     assert inner.parent is not None
     # the outside node really is absent from the metrics map
     assert id(inner.parent) not in _collect_metrics(inner)
-    candidates = ReadabilityDocument(inner)._score_paragraphs()
+    # summary() consumes inner: the retry supplier copies a snapshot
+    pristine = inner.copy()
+    candidates = ReadabilityDocument(
+        inner, refetch=pristine.copy)._score_paragraphs()
     assert id(inner.parent) in candidates  # the repro condition
-    out = ReadabilityDocument(inner).summary()
+    out = ReadabilityDocument(inner, refetch=pristine.copy).summary()
     assert out is not None and "long enough" in out.text_content()

@@ -39,7 +39,10 @@ def _result():
     opts = Options(with_metadata=False, formatting=True)
     tree = load_html(html)
     conv = convert_tags(tree_cleaning(get_body(tree).copy(), opts), opts)
-    body, text, _ = extract_content(conv, opts)
+    # extract_content consumes conv: the wild-text supplier copies a
+    # snapshot taken before the call
+    backup = conv.copy()
+    body, text, _ = extract_content(conv, opts, backup.copy)
     return body, text
 
 

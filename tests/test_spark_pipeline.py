@@ -33,6 +33,29 @@ def test_all_docs_ok(extracted, doc_rows):
     assert extracted.filter(F.col("status") != "ok").count() == 0
 
 
+def test_extract_batches_hands_frozen_heap_back():
+    """The extraction generator keeps the worker's heap out of the cyclic
+    collector only while it runs: the heap is handed back when the
+    generator is exhausted and when it is closed early."""
+    import gc
+
+    import pandas as pd
+
+    from trafilatura_spark.operators.pipeline import make_extract_batches
+    from trafilatura_spark.sources.corpus import single_html_span
+    html = ("<html><body><article><p>" + "Some words here. " * 20
+            + "</p></article></body></html>")
+    pdf = pd.DataFrame({"doc_id": ["d1"], "spans": [single_html_span(html)]})
+    extract = make_extract_batches(RELAXED)
+    gen = extract(iter([pdf, pdf]))
+    assert list(next(gen)["status"]) == ["ok"]
+    assert gc.get_freeze_count() > 0
+    gen.close()
+    assert gc.get_freeze_count() == 0
+    assert [len(b) for b in extract(iter([pdf, pdf]))] == [1, 1]
+    assert gc.get_freeze_count() == 0
+
+
 def test_roundtrip_identity_distributed(spark, extracted, sf_dir):
     orig = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text")
@@ -379,9 +402,9 @@ def test_job_table_input(spark, sf_dir, tmp_path):
 
 
 def test_job_large_wave_metrics_and_resume(spark, sf_dir, tmp_path):
-    """wave_size above _OBSERVE_BUCKET_CAP switches per-bucket metrics to
-    the wave-total observe + pruned re-read path; per-bucket progress
-    rows and resume behavior must be identical."""
+    """One 64-bucket wave: 320 per-bucket observe() counts ride a single
+    write; per-bucket progress rows must match a direct groupBy of the
+    output, and a resume must find nothing left."""
     out, prog = str(tmp_path / "lo"), str(tmp_path / "lp")
     docs = synthesize_documents_df(spark, sf_dir)
     n_docs = docs.count()
@@ -425,17 +448,13 @@ def _with_failures():
     return batches
 
 
-@pytest.mark.parametrize("n_buckets,wave_size,below_cap",
-                         [(8, 4, True), (40, 40, False)],
-                         ids=["observe", "reread"])
+@pytest.mark.parametrize("n_buckets,wave_size", [(8, 4), (40, 40)],
+                         ids=["small-wave", "large-wave"])
 def test_job_progress_columns_both_metric_paths(spark, sf_dir, tmp_path,
-                                                n_buckets, wave_size,
-                                                below_cap):
+                                                n_buckets, wave_size):
     """Every progress count equals a direct groupBy of the written output,
-    below _OBSERVE_BUCKET_CAP (per-bucket observe) and above it (pruned
-    re-read of the wave's output)."""
-    from trafilatura_spark.job import _OBSERVE_BUCKET_CAP
-    assert (wave_size <= _OBSERVE_BUCKET_CAP) == below_cap
+    for several small waves and for one large wave (40 buckets, 200
+    per-bucket observe() counts on one write)."""
     out, prog = str(tmp_path / "o"), str(tmp_path / "p")
     docs = synthesize_documents_df(spark, sf_dir)
     s = run_extraction(spark, docs, out, prog, "cols", n_buckets=n_buckets,

@@ -1909,9 +1909,10 @@ fail:
 
 /* table_hit(cache, patterns, s, anchored) -> bool — selectors._hit/_hit_m:
  * does s contain (anchored: start with) any pattern?  Verdicts memoized
- * in the caller-owned per-table cache dict, cleared wholesale at the
- * same bound the Python path uses so a long-lived worker stays bounded. */
-#define TABLE_CACHE_MAX (1 << 18)
+ * in the caller-owned per-table cache dict, cleared wholesale at
+ * selectors.TABLE_CACHE_MAX (the same per-cache bound the Python path
+ * uses) so a long-lived worker stays bounded. */
+#define TABLE_CACHE_MAX (1 << 13)
 
 static PyObject *
 chtml_table_hit(PyObject *self, PyObject *const *args, Py_ssize_t nargs)

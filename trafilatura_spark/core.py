@@ -17,7 +17,7 @@ from dataclasses import dataclass, field
 
 from .dom import Node, get_body, parse_html
 from .operators.baseline import baseline
-from .operators.cleaning import clean_copy, convert_tags, tree_cleaning
+from .operators.cleaning import clean_copy, convert_tags
 from .operators.deduplication import content_fingerprint
 from .operators.fallbacks import compare_extraction
 from .operators.main_extractor import extract_comments, extract_content
@@ -144,13 +144,15 @@ def _prune_duplicate_elements(bodies: list[Node], options: Options) -> None:
 
 def trafilatura_sequence(converted_tree: Node, cleaned_backup: Node,
                          raw_body_fn, options: Options,
-                         backup_factory=None) -> tuple[Node, str, int, str]:
+                         backup_factory) -> tuple[Node, str, int, str]:
     """Main cascade with fallbacks (core.dart:108-142).
 
     ``raw_body_fn`` supplies a PRISTINE, freely-mutable body tree on
     each call (the reference passes copies of the raw body to
-    compareExtraction/baseline); suppliers let the fast path skip the
-    per-document defensive copy entirely and pay only on rescue."""
+    compareExtraction/baseline); ``backup_factory`` rebuilds the
+    converted tree for the wild-text second chance.  Both are called
+    only when their tier runs, so a document the main pass settles pays
+    for neither."""
     postbody, temp_text, len_text = extract_content(converted_tree, options,
                                                     backup_factory)
     tier = "main"
@@ -258,34 +260,13 @@ def _bare_extraction_impl(filecontent: str, options: Options,
     _apply_prune_patterns(working_body, options)
     conv_url = options.url or (meta or {}).get("url")
 
-    fast = options.fast
-    if fast:
-        # fast path: compare_extraction never runs, so nothing reads
-        # the pristine working_body afterwards on the success path —
-        # clean it IN PLACE and let pristine_body() re-derive a fresh
-        # copy from the source only when a rescue actually fires
-        cleaned = tree_cleaning(working_body, options)
-    else:
-        # fused copy+clean: one walk that never materializes the
-        # subtrees cleaning deletes (~8% of the default path was the
-        # full-body defensive copy); working_body stays pristine
-        cleaned = clean_copy(working_body, options)
-
-    def pristine_body() -> Node:
-        """A freely-mutable body in its pre-cleaning state.  Fast
-        mode re-parses the source (working_body was consumed by the
-        in-place cleaning) — rescue-only, so the re-parse amortizes
-        to ~0; non-fast copies the retained pristine body."""
-        if not fast:
-            return working_body.copy()
-        t2 = load_html(filecontent)
-        b2 = get_body(t2)
-        _apply_prune_patterns(b2, options)
-        return b2
-
+    # fused copy+clean: one walk that never materializes the subtrees
+    # cleaning deletes; working_body stays pristine, and every rescue
+    # tier takes its own freely-mutable copy of it
+    cleaned = clean_copy(working_body, options)
     # the backup feeds compare_extraction only — skip the full-tree
     # copy in fast mode (the bench/oracle hot path)
-    cleaned_backup = cleaned.copy() if not fast else cleaned
+    cleaned_backup = cleaned if options.fast else cleaned.copy()
     converted = convert_tags(cleaned, options, url=conv_url)
 
     if options.comments:
@@ -305,12 +286,8 @@ def _bare_extraction_impl(filecontent: str, options: Options,
         # second chance (extract_content) calls this ONLY when the
         # main pass comes up short, replacing the every-document
         # backup copy with an on-miss rebuild
-        # non-fast: fused copy+clean straight off the retained
-        # pristine body; fast: pristine_body() re-parses and the
-        # fresh tree is cleaned in place (it has no other reader)
-        c2 = clean_copy(working_body, options) if not fast \
-            else tree_cleaning(pristine_body(), options)
-        c = convert_tags(c2, options, url=conv_url)
+        c = convert_tags(clean_copy(working_body, options), options,
+                         url=conv_url)
         if options.comments:
             c = extract_comments(c, options)[3]
         if options.focus == "precision":
@@ -320,8 +297,8 @@ def _bare_extraction_impl(filecontent: str, options: Options,
         return c
 
     postbody, temp_text, len_text, tier = trafilatura_sequence(
-        converted, cleaned_backup, pristine_body, options,
-        backup_factory=rebuild_converted)
+        converted, cleaned_backup, working_body.copy, options,
+        rebuild_converted)
     check_deadline()  # stage boundary: cascade → guards + emission
 
     # tree size guard (core.dart:285-296)

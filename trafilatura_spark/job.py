@@ -102,10 +102,6 @@ def read_html_dir(spark: SparkSession, input_path: str,
     return binary.mapInPandas(to_docs, DOCUMENTS_SCHEMA)
 
 
-# above this many buckets per wave, per-bucket observe() expressions are
-# replaced by wave totals + a pruned re-read (see run_extraction)
-_OBSERVE_BUCKET_CAP = 32
-
 _PROGRESS_SCHEMA = StructType(
     [StructField("run_id", StringType()), StructField("bucket", IntegerType())]
     + [StructField(c, LongType()) for c in (
@@ -298,45 +294,20 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
         # bucket id: one py4j call per expression, where a Column tree
         # pays a round trip (with call-site capture) per col/==/&/cast/
         # sum/alias and took longer to build than the wave plan itself.
-        # Above _OBSERVE_BUCKET_CAP buckets the per-task accumulator
-        # payload (5×wave named counts on every task result) outweighs a
-        # second look at the wave itself, so large waves split per bucket
-        # via a partition-pruned (bucket ∈ wave only) + column-pruned
-        # (status/tier only) read of the freshly written partitions.
         obs = Observation(f"wave-{i // wave_size}")
-        per_bucket_obs = len(wave) <= _OBSERVE_BUCKET_CAP
-        if per_bucket_obs:
-            observed = extracted.observe(obs, *[
-                F.expr(f"count_if(bucket = {b} AND {cond}) AS {name}_{b}")
-                for b in wave for name, cond in _BUCKET_COUNTS])
-        else:
-            # above the cap the counts come from the pruned re-read below;
-            # attaching wave-total observe expressions here would add the
-            # very per-task accumulator payload the cap exists to avoid
-            observed = extracted
+        observed = extracted.observe(obs, *[
+            F.expr(f"count_if(bucket = {b} AND {cond}) AS {name}_{b}")
+            for b in wave for name, cond in _BUCKET_COUNTS])
         t0 = time.perf_counter()
         observed.write.mode("append").partitionBy("bucket").parquet(output_path)
         summary["write_s"] += time.perf_counter() - t0
 
         t0 = time.perf_counter()
-        names = [name for name, _ in _BUCKET_COUNTS]
-        if per_bucket_obs:
-            vals = obs.get
-            counts = {b: tuple(int(vals[f"{n}_{b}"]) for n in names)
-                      for b in wave}
-        else:
-            split = (
-                spark.read.parquet(output_path)
-                .filter(F.col("bucket").isin(wave))
-                .groupBy("bucket").agg(
-                    *[F.expr(f"count_if({cond}) AS {name}")
-                      for name, cond in _BUCKET_COUNTS])
-                .collect())
-            counts = {r["bucket"]: tuple(int(r[n]) for n in names)
-                      for r in split}
+        vals = obs.get
         rows = []
         for b in wave:
-            n_docs, n_fb, n_empty, n_err, n_to = counts.get(b, (0, 0, 0, 0, 0))
+            n_docs, n_fb, n_empty, n_err, n_to = (
+                int(vals[f"{name}_{b}"]) for name, _ in _BUCKET_COUNTS)
             rows.append((run_id, b, n_docs, n_fb, n_empty, n_err, n_to,
                          n_fb / n_docs if n_docs else 0.0,
                          n_empty / n_docs if n_docs else 0.0,

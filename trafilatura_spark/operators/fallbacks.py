@@ -121,7 +121,6 @@ def compare_extraction(cleaned_tree: Node, backup_fn, body: Node,
     # body is always sanitized (documented deviation; decision flow and
     # lengths above are reference-exact).
     if tier == "readability":
-        body, text, len_text = \
-            sanitize_readability_tree(temppost_algo.copy(), options)
+        body, text, len_text = sanitize_readability_tree(temppost_algo, options)
 
     return body, text, len_text, tier

@@ -387,19 +387,17 @@ def recover_wild_text(tree: Node, result_body: Node, options: Options, potential
 
 
 def extract_content(cleaned_tree: Node, options: Options,
-                    backup_factory=None) -> tuple[Node, str, int]:
+                    backup_factory) -> tuple[Node, str, int]:
     """Cascade entry (main_extractor.dart:612-629).
 
-    ``backup_factory``, when given, rebuilds the pre-extraction tree on
-    demand for the wild-text second chance — the common success path
-    then skips the per-document full-tree copy entirely (recovery fires
-    only on short extractions, so the rebuild amortizes to ~0)."""
-    backup_tree = cleaned_tree.copy() if backup_factory is None else None
+    ``backup_factory`` rebuilds the pre-extraction tree on demand for
+    the wild-text second chance, so the common success path pays no
+    per-document full-tree copy (recovery fires only on short
+    extractions).  ``cleaned_tree`` is consumed."""
     result_body, temp_text, potential_tags = _extract(cleaned_tree, options)
     if not result_body.children or len(temp_text) < options.min_extracted_size:
-        if backup_tree is None:
-            backup_tree = backup_factory()
-        result_body = recover_wild_text(backup_tree, result_body, options, potential_tags)
+        result_body = recover_wild_text(backup_factory(), result_body,
+                                        options, potential_tags)
         temp_text = trim(result_body.text_content())
     strip_elements(result_body, "done")
     strip_tags(result_body, "div")

@@ -106,13 +106,16 @@ def make_extract_batches(options: Options, serialize: str | None = None):
                "len_text"] + (["serialized"] if serialize else [])
 
     def extract_batches(batches):
+        import gc
+
         import pandas as pd
 
         from .serialize import determine_return_string
         from ..dom import Node
 
         opts = Options(**opt_dict)
-        for pdf in batches:
+
+        def extract_batch(pdf):
             rows = []
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
                 span_dicts = [
@@ -137,7 +140,19 @@ def make_extract_batches(options: Options, serialize: str | None = None):
                         with_metadata=opts.with_metadata)
                     row = row + (rendered,)
                 rows.append(row)
-            yield pd.DataFrame(rows, columns=columns)
+            return pd.DataFrame(rows, columns=columns)
+
+        # every document leaves its trees behind as cyclic garbage (parent
+        # pointers), and each full collection that garbage triggers would
+        # otherwise re-traverse the worker's long-lived heap (pyspark,
+        # pandas, pyarrow): keep that heap out of the collector for the
+        # task and hand it back when the task ends
+        gc.freeze()
+        try:
+            for pdf in batches:
+                yield extract_batch(pdf)
+        finally:
+            gc.unfreeze()
 
     return extract_batches
 

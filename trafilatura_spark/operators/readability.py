@@ -195,14 +195,13 @@ class ReadabilityDocument:
     """readability_lxml.dart:79-410."""
 
     def __init__(self, doc: Node, min_text_length: int = 25, retry_length: int = 250,
-                 refetch=None):
+                 *, refetch):
         self.doc = doc
         self.min_text_length = min_text_length
         self.retry_length = retry_length
-        # optional supplier of a fresh pristine copy of ``doc``: when the
-        # caller owns the input and can re-derive it, the per-document
-        # defensive ``saved`` copy is skipped and the (~10% of real pages)
-        # non-ruthless retry re-fetches instead
+        # supplier of a fresh pristine copy of ``doc``: the (~10% of real
+        # pages) non-ruthless retry re-fetches its input instead of every
+        # document paying a defensive copy up front
         self._refetch = refetch
         # class/id strings repeat heavily within one page; regex verdicts
         # depend only on the string, so memoize per document
@@ -217,13 +216,9 @@ class ReadabilityDocument:
     def summary(self) -> Node | None:
         self._strip_scripts(self.doc)
         ruthless = True
-        # the retry path needs the pre-ruthless document back; a refetch
-        # supplier replaces the every-document copy with an on-retry rebuild
-        saved = None if self._refetch is not None else self.doc.copy()
 
         def restore() -> Node:
-            if saved is not None:
-                return saved
+            # the retry path needs the pre-ruthless document back
             return self._strip_scripts(self._refetch())
 
         while True:
@@ -236,8 +231,6 @@ class ReadabilityDocument:
                 article = self._get_article(candidates, best)
             else:
                 if ruthless:
-                    # final attempt: saved has no later reader, hand it
-                    # over without the defensive copy
                     ruthless = False
                     self.doc = restore()
                     continue
@@ -528,10 +521,9 @@ class ReadabilityDocument:
         return node
 
 
-def try_readability(htmlinput: Node, refetch=None) -> Node:
-    """external.dart:25-33.  ``refetch`` (optional) supplies a fresh
-    pristine copy of ``htmlinput`` so the retry path can rebuild instead
-    of every document paying a defensive copy up front."""
+def try_readability(htmlinput: Node, refetch) -> Node:
+    """external.dart:25-33.  ``refetch`` supplies a fresh pristine copy
+    of ``htmlinput`` for the non-ruthless retry."""
     try:
         doc = ReadabilityDocument(htmlinput, min_text_length=25,
                                   retry_length=250, refetch=refetch)

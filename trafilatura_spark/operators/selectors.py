@@ -82,11 +82,17 @@ _DISCARD_TAGS = ("div", "item", "li", "p", "section", "span")
 import re as _re
 
 
+# per-cache verdict bound: the 13 tables × 2 caches below hold at most
+# 2^18 entries together, so a long-lived worker stays bounded (_chtml.c
+# table_hit clears at the same TABLE_CACHE_MAX)
+TABLE_CACHE_MAX = 1 << 13
+
+
 class _Table:
-    """One pattern table: the compiled alternation (pure-Python path) plus
-    the raw pattern tuple and per-table verdict caches (C path — the C
-    side memoizes contains-any / startswith-any per probed string and
-    clears wholesale at the same bound as _VERDICT_CACHE)."""
+    """One pattern table: the compiled alternation (pure-Python path), the
+    raw pattern tuple (C path) and the verdict caches both paths share —
+    ``cache`` for contains-any, ``cache_m`` for startswith-any — keyed by
+    the probed string and cleared wholesale at TABLE_CACHE_MAX."""
 
     __slots__ = ("regex", "patterns", "cache", "cache_m")
 
@@ -97,16 +103,6 @@ class _Table:
         self.cache_m: dict = {}
 
 
-def _contains_re(patterns):
-    """Pattern table probed via _hit (contains-any) or _hit_m
-    (startswith-any) — anchoring is the call site's choice, so the two
-    historical factory names are one constructor."""
-    return _Table(patterns)
-
-
-_prefix_re = _contains_re
-
-
 def _class_id(elem: Node) -> tuple[str, str]:
     if _dom._CATTRPAIR is not None:
         return _dom._CATTRPAIR(elem)
@@ -114,42 +110,28 @@ def _class_id(elem: Node) -> tuple[str, str]:
 
 
 # class/id strings repeat heavily across elements AND documents (CMS
-# themes), so selector verdicts are memoized per (pattern, string).
-# Sound because every call site uses the match as a boolean only; the
-# cache is cleared wholesale at the cap so a long-lived worker stays
-# bounded.  (Same idea as readability's per-document memoized unlikely-
-# candidate verdicts, lifted to the cross-document scope.)
-_VERDICT_CACHE: dict = {}
-_VERDICT_CACHE_MAX = 1 << 18
+# themes), so selector verdicts are memoized per table and string.  Sound
+# because every call site uses the match as a boolean only.
+def _verdict(cache: dict, probe, s: str) -> bool:
+    v = cache.get(s)
+    if v is None:
+        if len(cache) >= TABLE_CACHE_MAX:
+            cache.clear()
+        v = cache[s] = probe(s) is not None
+    return v
 
 
 def _hit(table, s: str) -> bool:
     if _dom._CTABLEHIT is not None:
         return _dom._CTABLEHIT(table.cache, table.patterns, s, False)
-    key = (id(table), s)
-    cache = _VERDICT_CACHE
-    v = cache.get(key)
-    if v is None:
-        if len(cache) >= _VERDICT_CACHE_MAX:
-            cache.clear()
-        v = table.regex.search(s) is not None
-        cache[key] = v
-    return v
+    return _verdict(table.cache, table.regex.search, s)
 
 
 def _hit_m(table, s: str) -> bool:
     """Anchored (startswith) variant of _hit, separate cache."""
     if _dom._CTABLEHIT is not None:
         return _dom._CTABLEHIT(table.cache_m, table.patterns, s, True)
-    key = (id(table), s, True)
-    cache = _VERDICT_CACHE
-    v = cache.get(key)
-    if v is None:
-        if len(cache) >= _VERDICT_CACHE_MAX:
-            cache.clear()
-        v = table.regex.match(s) is not None
-        cache[key] = v
-    return v
+    return _verdict(table.cache_m, table.regex.match, s)
 
 
 def _by_tag(tree: Node, tags: tuple) -> dict:
@@ -178,13 +160,13 @@ def _by_tag(tree: Node, tags: tuple) -> dict:
 # compiled alternation forms of the tables above (identical match
 # semantics to the any(p in x) scans they replace; the tables stay the
 # readable source of truth)
-_BODY_CLASS_RE = _contains_re(BODY_CLASS_PATTERNS)
-_BODY_ID_RE = _contains_re(BODY_ID_PATTERNS)
-_SECONDARY_BODY_RE = _contains_re(SECONDARY_BODY_PATTERNS)
-_CONTENT_CLASS_RE = _contains_re(CONTENT_CLASS_PATTERNS)
-_COMMENTS_CLASS_RE = _contains_re(COMMENTS_CLASS_PATTERNS)
-_OVERALL_DISCARD_RE = _contains_re(OVERALL_DISCARD_PATTERNS)
-_HIDDEN_RE = _contains_re(HIDDEN_PATTERNS)
+_BODY_CLASS_RE = _Table(BODY_CLASS_PATTERNS)
+_BODY_ID_RE = _Table(BODY_ID_PATTERNS)
+_SECONDARY_BODY_RE = _Table(SECONDARY_BODY_PATTERNS)
+_CONTENT_CLASS_RE = _Table(CONTENT_CLASS_PATTERNS)
+_COMMENTS_CLASS_RE = _Table(COMMENTS_CLASS_PATTERNS)
+_OVERALL_DISCARD_RE = _Table(OVERALL_DISCARD_PATTERNS)
+_HIDDEN_RE = _Table(HIDDEN_PATTERNS)
 
 
 def select_body_elements(tree: Node) -> list[Node]:
@@ -334,7 +316,7 @@ AUTHOR_DISCARD_PATTERNS = [
     "productreviews", "figure", "article-share", "article-support", "print",
     "category", "meta-date", "meta-reviewer",
 ]
-_AUTHOR_DISCARD_RE = _contains_re(AUTHOR_DISCARD_PATTERNS)
+_AUTHOR_DISCARD_RE = _Table(AUTHOR_DISCARD_PATTERNS)
 
 CATEGORY_CLASS_PATTERNS = [
     "post-info", "postinfo", "post-meta", "postmeta", "meta", "entry-meta",
@@ -353,11 +335,11 @@ TITLE_CLASS_PATTERNS = [
     "title",
 ]
 
-_AUTHOR_RE = _contains_re(AUTHOR_PATTERNS)
-_CATEGORY_CLASS_RE = _contains_re(CATEGORY_CLASS_PATTERNS)
-_CATEGORY_PREFIX_RE = _prefix_re(CATEGORY_CLASS_PATTERNS)
-_TAG_CLASS_RE = _contains_re(TAG_CLASS_PATTERNS)
-_TITLE_CLASS_RE = _contains_re(TITLE_CLASS_PATTERNS)
+_AUTHOR_RE = _Table(AUTHOR_PATTERNS)
+_CATEGORY_CLASS_RE = _Table(CATEGORY_CLASS_PATTERNS)
+_CATEGORY_PREFIX_RE = _Table(CATEGORY_CLASS_PATTERNS)
+_TAG_CLASS_RE = _Table(TAG_CLASS_PATTERNS)
+_TITLE_CLASS_RE = _Table(TITLE_CLASS_PATTERNS)
 
 
 def select_author_elements(tree: Node, buckets: dict | None = None) -> list[Node]:
