@@ -1,6 +1,13 @@
 """DOM tokenizer/parser behaviors the cascade relies on
 (reference: /root/reference/lib/src/utils.dart:194-235 loadHtml contract)."""
 
+import hashlib
+import sys
+import warnings
+
+import pytest
+
+from trafilatura_spark import chtml, dom
 from trafilatura_spark.dom import get_body, parse_html, strip_tags
 
 
@@ -286,3 +293,30 @@ def test_traversal_matches_recursive_reference():
             [n for n in ref[1:] if n.tag in want]
         assert tree.find_all("div", "p") == \
             [n for n in ref[1:] if n.tag in want]
+
+
+def test_chtml_load_warns_on_cached_compile_failure(tmp_path, monkeypatch):
+    """A cached compile-failure marker makes chtml.load fall back to the
+    pure-Python path with a warning naming the marker and the compiler
+    output it holds; TRAFILATURA_SPARK_NO_CHTML keeps the fallback silent."""
+    with open(chtml._SOURCE, "rb") as f:
+        digest = hashlib.sha256(f.read() + sys.version.encode()
+                                + sys.executable.encode()).hexdigest()[:16]
+    marker = tmp_path / f"_chtml_{digest}.failed"
+    marker.write_bytes(b"_chtml.c:1: error: Python.h: No such file")
+    monkeypatch.setenv("TRAFILATURA_SPARK_CHTML_CACHE", str(tmp_path))
+    monkeypatch.delenv("TRAFILATURA_SPARK_NO_CHTML", raising=False)
+    args = (dom.Node, dom.VOID_ELEMENTS, dom._P_CLOSERS, dom._P_CLOSE_BARRIERS,
+            dom._IMPLIED_END, dom._HEAD_CONTENT, dom._NEEDS_IMPLIED,
+            dom._GATE_TAGS, dom._unescape)
+    with pytest.warns(RuntimeWarning) as caught:
+        assert chtml.load(*args) is None
+    [warning] = caught
+    assert str(marker) in str(warning.message)
+    assert "Python.h: No such file" in str(warning.message)
+    assert list(tmp_path.iterdir()) == [marker]
+
+    monkeypatch.setenv("TRAFILATURA_SPARK_NO_CHTML", "1")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert chtml.load(*args) is None

@@ -33,27 +33,66 @@ def test_all_docs_ok(extracted, doc_rows):
     assert extracted.filter(F.col("status") != "ok").count() == 0
 
 
-def test_extract_batches_hands_frozen_heap_back():
-    """The extraction generator keeps the worker's heap out of the cyclic
-    collector only while it runs: the heap is handed back when the
-    generator is exhausted and when it is closed early."""
+def test_extract_batches_collects_each_document(monkeypatch):
+    """The extraction generator turns automatic GC off while it runs and
+    frees each document's trees at that document's end.  Once a batch is
+    yielded no Node of it is alive, counted without collecting first: a
+    tree still referenced during its document's young-generation pass
+    would be promoted and outlive the task.  GC is back on after
+    exhaustion and after an early close(), and a GC that was off before
+    the task stays off."""
     import gc
 
     import pandas as pd
 
+    from trafilatura_spark import core
+    from trafilatura_spark.dom import Node
     from trafilatura_spark.operators.pipeline import make_extract_batches
     from trafilatura_spark.sources.corpus import single_html_span
-    html = ("<html><body><article><p>" + "Some words here. " * 20
-            + "</p></article></body></html>")
-    pdf = pd.DataFrame({"doc_id": ["d1"], "spans": [single_html_span(html)]})
+
+    convert_tags = core.convert_tags
+
+    def convert_or_fail(tree, *args, **kwargs):
+        # fails with the parsed, cleaned and working trees all in flight
+        if "BOOM" in tree.text_content():
+            raise ValueError("forced failure")
+        return convert_tags(tree, *args, **kwargs)
+
+    monkeypatch.setattr(core, "convert_tags", convert_or_fail)
+
+    def page(words):
+        return ("<html><body><article><p>" + words * 20
+                + "</p></article></body></html>")
+
+    pdf = pd.DataFrame({
+        "doc_id": ["ok", "rejected", "error"],
+        "spans": [single_html_span(page("Some words here. ")),
+                  single_html_span("not html at all"),
+                  single_html_span(page("BOOM goes this page. "))],
+    })
+    statuses = ["ok", "rejected", "error"]
+
+    def live_nodes():
+        return sum(type(o) is Node for o in gc.get_objects())
+
     extract = make_extract_batches(RELAXED)
+    assert gc.isenabled()
+    gc.collect()
+    before = live_nodes()
     gen = extract(iter([pdf, pdf]))
-    assert list(next(gen)["status"]) == ["ok"]
-    assert gc.get_freeze_count() > 0
+    assert list(next(gen)["status"]) == statuses
+    assert not gc.isenabled()
+    assert live_nodes() == before
     gen.close()
-    assert gc.get_freeze_count() == 0
-    assert [len(b) for b in extract(iter([pdf, pdf]))] == [1, 1]
-    assert gc.get_freeze_count() == 0
+    assert gc.isenabled()
+    assert [list(b["status"]) for b in extract(iter([pdf, pdf]))] == [statuses] * 2
+    assert gc.isenabled()
+    gc.disable()
+    try:
+        assert len(list(extract(iter([pdf])))) == 1
+        assert not gc.isenabled()
+    finally:
+        gc.enable()
 
 
 def test_roundtrip_identity_distributed(spark, extracted, sf_dir):

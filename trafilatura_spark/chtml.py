@@ -4,8 +4,9 @@ Compiles :mod:`trafilatura_spark._chtml` from the in-package C source with
 the system ``gcc`` at first import (cached by source digest under
 ``~/.cache/trafilatura_spark``), and hands back the accelerated
 ``parse``/``copy_node`` entry points.  Everything is best-effort: any
-missing toolchain, failed compile, or failed import returns ``None`` and
-``dom.py`` keeps the pure-Python builder — the accelerator is a strict
+missing toolchain, failed compile, or failed import returns ``None``
+with a ``RuntimeWarning`` that names the reason, and ``dom.py`` keeps
+the pure-Python builder — the accelerator is a strict
 drop-in (exact-tree differential pinned by tests/test_chtml.py), never a
 requirement.  Set ``TRAFILATURA_SPARK_NO_CHTML=1`` to force the
 pure-Python path (used by the differential tests themselves and as the
@@ -24,6 +25,7 @@ import os
 import subprocess
 import sys
 import tempfile
+import warnings
 
 _SOURCE = os.path.join(os.path.dirname(__file__), "_chtml.c")
 
@@ -35,11 +37,26 @@ def _cache_dir() -> str:
     return os.path.join(os.path.expanduser("~"), ".cache", "trafilatura_spark")
 
 
+def _unavailable(reason: str) -> None:
+    """Warn that the accelerator did not load: the pure-Python path is
+    about 2x slower, and a cluster without gcc must not pay that unnoticed
+    (dom calls ``load`` once per process, so this fires at most once)."""
+    warnings.warn("trafilatura_spark C accelerator not loaded, using the "
+                  f"pure-Python path (about 2x slower): {reason}",
+                  RuntimeWarning, stacklevel=3)
+
+
+def _tail(stderr: bytes) -> str:
+    return stderr.decode(errors="replace").strip()[-400:]
+
+
 def load(node_cls, void_elements, p_closers, p_close_barriers, implied_end,
          head_content, needs_implied, gate_tags, unescape):
     """Build/load the extension and wire it to dom's tables.
 
-    Returns ``(parse, copy_node)`` or ``None`` when unavailable.
+    Returns the entry-point tuple, or ``None`` when unavailable; that
+    ``None`` is warned about unless ``TRAFILATURA_SPARK_NO_CHTML`` asked
+    for it.
     """
     if os.environ.get("TRAFILATURA_SPARK_NO_CHTML"):
         return None
@@ -52,8 +69,8 @@ def load(node_cls, void_elements, p_closers, p_close_barriers, implied_end,
         try:
             import importlib.resources as _res
             code = (_res.files("trafilatura_spark") / "_chtml.c").read_bytes()
-        except Exception:
-            return None
+        except Exception as exc:
+            return _unavailable(f"C source not readable: {exc!r}")
     digest = hashlib.sha256(
         code + sys.version.encode() + sys.executable.encode()
     ).hexdigest()[:16]
@@ -67,7 +84,13 @@ def load(node_cls, void_elements, p_closers, p_close_barriers, implied_end,
         # failure writes a digest-keyed marker and later imports fall
         # back immediately.  A new source digest gets a fresh attempt.
         if os.path.exists(fail_marker):
-            return None
+            try:
+                with open(fail_marker, "rb") as f:
+                    logged = _tail(f.read())
+            except OSError as exc:
+                logged = repr(exc)
+            return _unavailable(
+                f"an earlier compile failed (marker {fail_marker}): {logged}")
         try:
             os.makedirs(cache, exist_ok=True)
             import sysconfig
@@ -95,7 +118,7 @@ def load(node_cls, void_elements, p_closers, p_close_barriers, implied_end,
                         os.replace(mtmp, fail_marker)
                     except OSError:
                         pass
-                    return None
+                    return _unavailable(f"gcc failed: {_tail(res.stderr)}")
                 os.replace(tmp, so_path)  # atomic: racers converge
                 tmp = None
             finally:
@@ -104,8 +127,8 @@ def load(node_cls, void_elements, p_closers, p_close_barriers, implied_end,
                         os.unlink(tmp)
                     except OSError:
                         pass
-        except Exception:
-            return None
+        except Exception as exc:
+            return _unavailable(f"build failed: {exc!r}")
     try:
         spec = importlib.util.spec_from_file_location(
             "trafilatura_spark._chtml", so_path)
@@ -119,5 +142,5 @@ def load(node_cls, void_elements, p_closers, p_close_barriers, implied_end,
                 mod.collect_metrics, mod.bucket_by_tag, mod.table_hit,
                 mod.attr_pair, mod.divs_to_rename, mod.brs_under_divs,
                 mod.unlikely_walk)
-    except Exception:
-        return None
+    except Exception as exc:
+        return _unavailable(f"import failed: {exc!r}")

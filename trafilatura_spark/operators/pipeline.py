@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..core import bare_extraction
 from ..settings import Options
-from ..sources.corpus import assemble_html
+from ..sources.corpus import INPUT_SPAN_TYPE, assemble_html
 
 SPAN_TYPE = T.StructType([
     T.StructField("kind", T.StringType(), False),
@@ -118,13 +118,8 @@ def make_extract_batches(options: Options, serialize: str | None = None):
         def extract_batch(pdf):
             rows = []
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                span_dicts = [
-                    {"kind": s["kind"], "text": s["text"],
-                     "media_ref": s["media_ref"], "offset": s["offset"]}
-                    if isinstance(s, dict) else
-                    {"kind": s[0], "text": s[1], "media_ref": s[2], "offset": s[3]}
-                    for s in spans
-                ]
+                span_dicts = [s if isinstance(s, dict) else
+                              dict(zip(INPUT_SPAN_TYPE.names, s)) for s in spans]
                 html = assemble_html(span_dicts)
                 # stringify: numeric doc_id inputs must still produce the
                 # declared string column (and hash-bucket consistently)
@@ -140,19 +135,23 @@ def make_extract_batches(options: Options, serialize: str | None = None):
                         with_metadata=opts.with_metadata)
                     row = row + (rendered,)
                 rows.append(row)
+                del res  # the document's trees are all garbage now
+                gc.collect(0)
             return pd.DataFrame(rows, columns=columns)
 
-        # every document leaves its trees behind as cyclic garbage (parent
-        # pointers), and each full collection that garbage triggers would
-        # otherwise re-traverse the worker's long-lived heap (pyspark,
-        # pandas, pyarrow): keep that heap out of the collector for the
-        # task and hand it back when the task ends
-        gc.freeze()
+        # every tree is cyclic garbage (parent pointers): instead of
+        # allocation-triggered collections, which re-traverse live trees
+        # and the worker's long-lived heap, free each document's trees
+        # with one young-generation pass once its row is built (outside
+        # bare_extraction, so a per-layer trace counts it as overhead)
+        was_enabled = gc.isenabled()
+        gc.disable()
         try:
             for pdf in batches:
                 yield extract_batch(pdf)
         finally:
-            gc.unfreeze()
+            if was_enabled:
+                gc.enable()
 
     return extract_batches
 
