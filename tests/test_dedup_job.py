@@ -545,6 +545,76 @@ def test_job_mode_dedup_stream_cli(spark, tmp_path, capsys):
                   "--dedup-keep", "longest"])
 
 
+@pytest.fixture(params=["batch", "stream"])
+def store_caller(request, spark, tmp_path):
+    """Run one batch of (doc_id, text) rows against a signature store
+    through either caller of the store protocol: the batch job
+    (``--mode dedup --signature-store``) or the streaming foreachBatch
+    callback."""
+    import itertools
+
+    from trafilatura_spark.streaming.dedup_stream import make_dedup_batch_fn
+    n = itertools.count()
+
+    def run(rows, out, store):
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        if request.param == "stream":
+            make_dedup_batch_fn(out, store)(df, next(n))
+            return
+        inp = str(tmp_path / f"in{next(n)}")
+        df.write.parquet(inp)
+        assert job_main(["--mode", "dedup", "--input", inp, "--output", out,
+                         "--signature-store", store]) == 0
+
+    return run
+
+
+def test_store_first_batch_crash_rerun(store_caller, spark, tmp_path):
+    """A first batch that died between its sigs and docs appends (sigs/
+    written, docs/ absent) re-runs as the bootstrap again: every id is
+    stored exactly once in docs/ and in sigs/, and the signatures are
+    live for the next batch."""
+    from trafilatura_spark.functions.dedup import minhash_signatures
+
+    base = ("the quick brown fox jumps over the lazy dog and then "
+            "runs far away into the deep dark quiet forest tonight")
+    other = ("completely different text about spark catalyst plans "
+             "and shuffle boundaries in distributed aggregation")
+    rows = [(1, base), (2, base.replace("quick", "swift")), (3, other),
+            (4, None)]
+    store = str(tmp_path / "store")
+    # the torn first run: survivors 1 and 3 signed, docs/ never written
+    minhash_signatures(spark.createDataFrame(
+        [(1, base), (3, other)], "doc_id long, text string")) \
+        .write.parquet(store + "/sigs")
+    store_caller(rows, str(tmp_path / "o1"), store)
+
+    def ids(table):
+        return sorted(r["doc_id"] for r in spark.read.parquet(
+            f"{store}/{table}").select("doc_id").collect())
+
+    assert ids("docs") == [1, 3, 4]  # null text is stored, never signed
+    assert ids("sigs") == [1, 3]
+    store_caller([(10, base.replace("lazy", "sleepy"))],  # dup of 1
+                 str(tmp_path / "o2"), store)
+    assert ids("docs") == [1, 3, 4]
+    assert ids("sigs") == [1, 3]
+
+
+def test_store_unreadable_docs_raises(store_caller, tmp_path):
+    """A docs/ that exists but cannot be read propagates its error: no
+    bootstrap over it, no output and no store write."""
+    store = tmp_path / "store"
+    (store / "docs").mkdir(parents=True)
+    (store / "docs" / "junk.txt").write_text("not parquet")
+    out = str(tmp_path / "out")
+    with pytest.raises(Exception, match="PARQUET|Parquet|UNABLE_TO_INFER"):
+        store_caller([(1, "some text to deduplicate against the store")],
+                     out, str(store))
+    assert not os.path.exists(out)
+    assert not (store / "sigs").exists()
+
+
 def test_job_mode_dedup_requires_input(tmp_path):
     with pytest.raises(SystemExit):
         job_main(["--mode", "dedup", "--output", str(tmp_path / "o")])

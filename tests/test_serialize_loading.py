@@ -251,3 +251,59 @@ def test_extract_format_dispatch():
     assert extract(html, "xmltei", o).startswith(
         '<TEI xmlns="http://www.tei-c.org/ns/1.0">')
     assert extract("<html><body></body></html>", "txt", o) is None
+
+
+_FORMATS = ("txt", "markdown", "json", "csv", "xml", "xmltei", "html")
+# "e" + combining acute: the renderer NFC-composes it
+_DISPATCH_HTML = (
+    '<html lang="en"><head><title>My Title</title>'
+    '<meta name="author" content="Jane Doe"/></head><body><article>'
+    "<h2>Head</h2><p>Cafe\u0301 with <b>bold</b> words "
+    + "word " * 30 + "</p></article></body></html>")
+
+
+def test_extract_renders_through_determine_return_string():
+    """extract() is bare_extraction + determine_return_string for every
+    format: the fingerprint rides every non-txt format, markdown extracts
+    with formatting, and output is NFC-composed."""
+    from dataclasses import replace
+
+    from trafilatura_spark import extract
+    from trafilatura_spark.operators.serialize import determine_return_string
+    o = Options(min_output_size=1, min_extracted_size=5, fast=True)
+    for fmt in _FORMATS:
+        want_opts = replace(o, fingerprint=fmt not in ("txt", "markdown"),
+                            formatting=fmt == "markdown")
+        res = bare_extraction(_DISPATCH_HTML, want_opts)
+        want = determine_return_string(
+            res.body, res.meta, fmt, comments_body=res.commentsbody,
+            formatting=want_opts.formatting,
+            with_metadata=want_opts.with_metadata)
+        assert extract(_DISPATCH_HTML, fmt, o) == want, fmt
+    fp = bare_extraction(_DISPATCH_HTML, replace(o, fingerprint=True)) \
+        .meta["fingerprint"]
+    assert fp
+    assert json.loads(extract(_DISPATCH_HTML, "json", o))["fingerprint"] == fp
+    assert extract(_DISPATCH_HTML, "csv", o).split("\t")[2] == fp
+    assert f'fingerprint="{fp}"' in extract(_DISPATCH_HTML, "xml", o)
+    assert "fingerprint" not in extract(_DISPATCH_HTML, "txt", o)
+    assert "**bold**" in extract(_DISPATCH_HTML, "markdown", o)
+    for fmt in _FORMATS:
+        out = extract(_DISPATCH_HTML, fmt, o)
+        assert "Caf\u00e9" in out and "\u0301" not in out, fmt
+
+
+def test_extract_matches_in_stage_spark_sink(spark):
+    """The extraction operator's in-stage serialize and extract() render
+    the same string for every format."""
+    from trafilatura_spark import extract
+    from trafilatura_spark.operators.pipeline import extract_documents
+    from trafilatura_spark.sources.corpus import html_to_documents
+    o = Options(min_output_size=1, min_extracted_size=5, fast=True)
+    pages = spark.createDataFrame([("d1", _DISPATCH_HTML)],
+                                  "url string, html string")
+    docs = html_to_documents(pages, id_col="url", html_col="html")
+    for fmt in _FORMATS:
+        got = extract_documents(docs, o, serialize=fmt) \
+            .select("serialized").first()[0]
+        assert got == extract(_DISPATCH_HTML, fmt, o), fmt

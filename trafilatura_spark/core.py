@@ -375,50 +375,18 @@ def extract_txt(filecontent: str, options: Options | None = None) -> str | None:
     return res.text
 
 
-_TXT_META_ORDER = ("title", "author", "url", "hostname", "description",
-                   "sitename", "date", "categories", "tags", "fingerprint",
-                   "id", "license")
-
-
 def extract(filecontent: str, output_format: str = "txt",
             options: Options | None = None) -> str | None:
     """Top-level string extraction with output-format dispatch
     (core.dart:25-105 determineReturnString): txt/markdown with metadata
-    front-matter, json, csv, html, xml, xmltei.  Markdown = txt with
-    ``options.formatting`` enabled."""
-    from .operators.serialize import (render_csv, render_html, render_json,
-                                      render_tei, render_xml)
-    options = options or Options()
-    if output_format == "markdown" and not options.formatting:
-        # "Markdown always needs formatting" (settings.dart:172-174)
-        from dataclasses import replace
-        options = replace(options, formatting=True)
+    front-matter, json, csv, html, xml, xmltei — the same render as the
+    extraction operator's in-stage ``serialize``."""
+    from .operators.serialize import (determine_return_string,
+                                      plan_output_format)
+    options, _ = plan_output_format(output_format, options or Options())
     res = bare_extraction(filecontent, options)
     if res.status in ("rejected", "error", "empty") or res.body is None:
         return None
-    if output_format == "xml":
-        return render_xml(res.body, res.meta, res.commentsbody)
-    if output_format == "xmltei":
-        return render_tei(res.body, res.meta, res.commentsbody)
-    if output_format == "csv":
-        return render_csv(res.meta, res.text, res.comments_text)
-    if output_format == "json":
-        return render_json(res.meta, res.text, res.comments_text)
-    if output_format == "html":
-        return render_html(res.body, (res.meta or {}).get("title"))
-    # txt / markdown: optional metadata front-matter then rendered body
-    parts: list[str] = []
-    if options.with_metadata and res.meta:
-        parts.append("---")
-        for name in _TXT_META_ORDER:
-            val = res.meta.get(name)
-            if isinstance(val, list):
-                val = ", ".join(val)
-            if val:
-                parts.append(f"{name}: {val}")
-        parts.append("---")
-    body_txt = res.text
-    if res.comments_text:
-        body_txt = f"{body_txt}\n{res.comments_text}"
-    parts.append(body_txt)
-    return "\n".join(parts).strip()
+    return determine_return_string(
+        res.body, res.meta, output_format, comments_body=res.commentsbody,
+        formatting=options.formatting, with_metadata=options.with_metadata)

@@ -45,8 +45,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
-from .operators.pipeline import (extracted_schema, make_extract_batches,
-                                 salted_repartition)
+from .operators.pipeline import (QUALITY_COUNTS, extracted_schema,
+                                 make_extract_batches, salted_repartition)
 from .settings import Options
 
 
@@ -104,23 +104,11 @@ def read_html_dir(spark: SparkSession, input_path: str,
 
 _PROGRESS_SCHEMA = StructType(
     [StructField("run_id", StringType()), StructField("bucket", IntegerType())]
-    + [StructField(c, LongType()) for c in (
-        "docs", "fallback_docs", "empty_docs", "error_docs", "timeout_docs")]
+    + [StructField(c, LongType()) for c, _ in QUALITY_COUNTS]
     + [StructField("fallback_rate", DoubleType()),
        StructField("empty_rate", DoubleType()),
        StructField("lineage", StringType()),
        StructField("n_buckets", IntegerType())])
-
-# (alias prefix, SQL condition) of each per-bucket count of a progress
-# row, in _PROGRESS_SCHEMA order; only integer bucket ids are ever
-# formatted into these templates, so no user data reaches SQL text
-_BUCKET_COUNTS = (
-    ("docs", "true"),
-    ("fb", "tier IN ('baseline', 'readability', 'justext')"),
-    ("empty", "status = 'empty'"),
-    ("err", "status = 'error'"),
-    ("to", "status = 'timeout'"),
-)
 
 
 def _progress_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
@@ -246,14 +234,8 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
     if tasks_per_wave is None:
         tasks_per_wave = spark.sparkContext.defaultParallelism
 
-    from .operators.serialize import TREE_FORMATS
-    in_stage_fmt = serialize if serialize in TREE_FORMATS else None
-    if serialize in ("json", "csv"):
-        # column-derived serializations read meta.fingerprint — non-txt
-        # formats carry the fingerprint (core.dart:547-560); the in-stage
-        # xml/xmltei/html path enables it inside make_extract_batches
-        from dataclasses import replace
-        options = replace(options, fingerprint=True)
+    from .operators.serialize import plan_output_format
+    options, in_stage_fmt = plan_output_format(serialize, options)
     if in_stage_fmt and batches_fn is not None:
         raise ValueError(
             f"--serialize {serialize} re-renders from the extraction tree "
@@ -294,10 +276,12 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
         # bucket id: one py4j call per expression, where a Column tree
         # pays a round trip (with call-site capture) per col/==/&/cast/
         # sum/alias and took longer to build than the wave plan itself.
+        # Only integer bucket ids are formatted into the QUALITY_COUNTS
+        # conditions, so no user data reaches SQL text.
         obs = Observation(f"wave-{i // wave_size}")
         observed = extracted.observe(obs, *[
             F.expr(f"count_if(bucket = {b} AND {cond}) AS {name}_{b}")
-            for b in wave for name, cond in _BUCKET_COUNTS])
+            for b in wave for name, cond in QUALITY_COUNTS])
         t0 = time.perf_counter()
         observed.write.mode("append").partitionBy("bucket").parquet(output_path)
         summary["write_s"] += time.perf_counter() - t0
@@ -307,7 +291,7 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
         rows = []
         for b in wave:
             n_docs, n_fb, n_empty, n_err, n_to = (
-                int(vals[f"{name}_{b}"]) for name, _ in _BUCKET_COUNTS)
+                int(vals[f"{name}_{b}"]) for name, _ in QUALITY_COUNTS)
             rows.append((run_id, b, n_docs, n_fb, n_empty, n_err, n_to,
                          n_fb / n_docs if n_docs else 0.0,
                          n_empty / n_docs if n_docs else 0.0,
@@ -659,8 +643,7 @@ def main(argv: list[str] | None = None, *, transport=None) -> int:
         # corpus-level "keep one per cluster": the stage a training-data
         # pipeline runs over an extracted corpus (the output of --mode
         # extract, or any (id, text) parquet/table) before tokenization
-        from .functions.dedup import (dedup_corpus, dedup_corpus_incremental,
-                                      minhash_signatures)
+        from .functions.dedup import dedup_corpus
         if args.stream:
             # continuous-ingestion shape: drain whatever drops have
             # landed since the last run, dedup each micro-batch against
@@ -705,8 +688,7 @@ def main(argv: list[str] | None = None, *, transport=None) -> int:
         docs = (spark.read.table(args.input)
                 if args.input_format == "table"
                 else spark.read.parquet(args.input))
-        store_docs_path = store_sigs_path = None
-        store_docs = None
+        plan = None
         if args.signature_store:
             if args.dedup_strategy != "minhash":
                 p.error("--signature-store requires --dedup-strategy "
@@ -715,53 +697,25 @@ def main(argv: list[str] | None = None, *, transport=None) -> int:
                 p.error("--signature-store requires --dedup-keep min-id "
                         "(replacing a store doc would invalidate prior "
                         "batches' accept/reject decisions)")
-            store_docs_path = os.path.join(args.signature_store, "docs")
-            store_sigs_path = os.path.join(args.signature_store, "sigs")
-            from .streaming.dedup_stream import _is_path_not_found
-            try:
-                store_docs = spark.read.parquet(store_docs_path)
-            except AnalysisException as exc:
-                # PATH_NOT_FOUND only — the first batch bootstraps.
-                # Other read failures (corrupt store, permissions,
-                # junk-file dirs) must propagate: bootstrapping over an
-                # unreadable EXISTING store would re-admit every
-                # duplicate
-                if not _is_path_not_found(exc):
-                    raise
-                store_docs = None
-        store_sigs = new_sigs = None
-        if store_docs is not None:
-            # ids must be disjoint (near_duplicate_pairs_incremental's
-            # union contract); a re-submitted batch would silently
-            # self-pair otherwise
-            overlap = docs.join(
-                store_docs.select(args.id_col), args.id_col, "left_semi"
-            ).count()
-            if overlap:
-                p.error(f"--signature-store: {overlap} batch ids already "
-                        "exist in the store (batches must carry fresh ids)")
-            try:
-                store_sigs = spark.read.parquet(store_sigs_path)
-            except AnalysisException as exc:
-                if not _is_path_not_found(exc):
-                    raise
-                # torn store (docs/ without sigs/, from an older
-                # docs-first writer): matching against NO signatures
-                # would admit every duplicate of the stored docs — heal
-                # by regenerating, one full pass over the store, once
-                # (same recovery as streaming/dedup_stream.py)
-                minhash_signatures(
-                    store_docs.filter(F.col(args.text_col).isNotNull()
-                                      & (F.length(args.text_col) > 0)),
-                    args.id_col, args.text_col) \
-                    .write.parquet(store_sigs_path)
-                store_sigs = spark.read.parquet(store_sigs_path)
-            deduped, labels, new_sigs = dedup_corpus_incremental(
-                docs, store_docs, store_sigs, id_col=args.id_col,
+            from .functions.signature_store import plan_store_batch
+            plan = plan_store_batch(
+                docs, args.signature_store, id_col=args.id_col,
                 text_col=args.text_col,
                 threshold=(0.5 if args.dedup_threshold is None
                            else args.dedup_threshold),
                 max_bucket_size=args.dedup_max_bucket_size)
+            deduped, labels = plan.accepted, plan.labels
+            if plan.store_docs is not None:
+                # a batch job is not replayed: ids the store holds mean
+                # a re-submitted batch, which is an error here
+                overlap = docs.join(
+                    plan.store_docs.select(args.id_col), args.id_col,
+                    "left_semi").count()
+                if overlap:
+                    labels.unpersist()
+                    p.error(f"--signature-store: {overlap} batch ids "
+                            "already exist in the store (batches must "
+                            "carry fresh ids)")
         else:
             deduped, labels = dedup_corpus(
                 docs, id_col=args.id_col, text_col=args.text_col,
@@ -778,57 +732,25 @@ def main(argv: list[str] | None = None, *, transport=None) -> int:
             F.countDistinct("cluster_id").alias("clusters"),
             F.sum((~F.col("is_survivor")).cast("long")).alias("removed"),
         ).collect()[0]
-        if new_sigs is not None:
-            # materialize while labels (the anti-join source in its
-            # lineage) is still persisted — one signature pass per
-            # batch, not a re-signature of the written output; the
-            # anti-join drops ids a torn prior run already stored
-            new_sigs = new_sigs.join(
-                store_sigs.select(args.id_col).distinct(), args.id_col,
-                "left_anti").localCheckpoint(eager=True)
-        labels.unpersist()
         # count the written files, not deduped.count() — that would
         # replay the pair pipeline + anti-join lineage a second time
         written = spark.read.parquet(args.output)
-        kept = written.count()
         summary = {"mode": "dedup", "strategy": args.dedup_strategy,
-                   "keep": args.dedup_keep, "kept": kept,
+                   "keep": args.dedup_keep, "kept": written.count(),
                    "removed": int(stats["removed"] or 0),
                    "clusters": int(stats["clusters"] or 0)}
-        if args.signature_store:
-            if new_sigs is None:
-                # bootstrap: sign the WRITTEN output (no pair-pipeline
-                # replay; store params are the fixed n_hashes=8/k=3) —
-                # and skip ids a torn first run already stored
-                new_sigs = minhash_signatures(
-                    written.filter(F.col(args.text_col).isNotNull()
-                                   & (F.length(args.text_col) > 0)),
-                    args.id_col, args.text_col)
-                try:
-                    prior = spark.read.parquet(store_sigs_path)
-                    new_sigs = new_sigs.join(
-                        prior.select(args.id_col).distinct(),
-                        args.id_col, "left_anti")
-                except AnalysisException as exc:
-                    if not _is_path_not_found(exc):
-                        raise
-            # sigs BEFORE docs (the crash-window ordering the streaming
-            # writer uses — see streaming/dedup_stream.py): a crash
-            # between the appends leaves sigs-without-docs, which the
-            # re-run converges (overlap check passes, sigs append is
-            # deduplicated above).  The reverse order stranded docs
-            # whose signatures could NEVER land (the overlap check
-            # blocks the re-run), silently admitting future duplicates.
-            new_sigs.write.mode("append").parquet(store_sigs_path)
-            # the store keeps only (id, text) — all the incremental
-            # verify needs, and the one schema BOTH the batch and the
-            # streaming writer append, so interleaved runs cannot mix
-            # file schemas inside docs/
-            written.select(args.id_col, args.text_col) \
-                .write.mode("append").parquet(store_docs_path)
-            summary["store_docs"] = (
-                spark.read.parquet(store_docs_path).count())
-            summary["incremental"] = store_docs is not None
+        if plan is not None:
+            # the written output is the accepted rows: storing (and on
+            # bootstrap signing) them from it replays no pair pipeline,
+            # and labels stays persisted until the plan's incremental
+            # signatures have landed
+            from .functions.signature_store import append_to_store
+            append_to_store(args.signature_store, written, plan.new_sigs,
+                            id_col=args.id_col, text_col=args.text_col)
+            summary["store_docs"] = spark.read.parquet(os.path.join(
+                args.signature_store, "docs")).count()
+            summary["incremental"] = plan.store_docs is not None
+        labels.unpersist()
         print(summary)
         return 0
     size_overrides = {}

@@ -61,6 +61,23 @@ EXTRACTED_SCHEMA = T.StructType([
 
 _META_FIELDS = [f.name for f in META_TYPE.fields]
 
+# (column, SQL condition) of each per-document quality count, in the
+# order the job's progress rows, extraction_metrics and the streaming
+# windowed_extraction_metrics report them
+QUALITY_COUNTS = (
+    ("docs", "true"),
+    ("fallback_docs", "tier IN ('baseline', 'readability', 'justext')"),
+    ("empty_docs", "status = 'empty'"),
+    ("error_docs", "status = 'error'"),
+    ("timeout_docs", "status = 'timeout'"),
+)
+
+
+def quality_count_columns() -> list:
+    """One ``count_if`` aggregate per :data:`QUALITY_COUNTS` entry."""
+    return [F.expr(f"count_if({cond}) AS {name}")
+            for name, cond in QUALITY_COUNTS]
+
 
 def extracted_schema(serialize: str | None = None) -> T.StructType:
     """EXTRACTED_SCHEMA, plus a trailing ``serialized`` string column when
@@ -96,12 +113,8 @@ def make_extract_batches(options: Options, serialize: str | None = None):
     inside the SAME Arrow stage — the tree is already in hand here, so
     xml/xmltei/html/txt/markdown cost one extra string build per doc,
     no second pass and no extra shuffle."""
-    opt_dict = asdict(options)
-    if serialize and serialize not in ("txt", "markdown"):
-        # core.dart:22,547-560: non-txt output formats carry the content
-        # fingerprint, txt/markdown never do (it is computed after the
-        # _txtFormats gate, so their front-matter omits the line).
-        opt_dict["fingerprint"] = True
+    from .serialize import plan_output_format
+    opt_dict = asdict(plan_output_format(serialize, options)[0])
     columns = ["doc_id", "spans", "text", "meta", "status", "tier",
                "len_text"] + (["serialized"] if serialize else [])
 
@@ -182,19 +195,8 @@ def extraction_metrics(extracted: DataFrame) -> DataFrame:
     return (
         extracted
         .groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum(F.when(F.col("tier").isin("baseline", "readability",
-                                            "justext"), 1).otherwise(0)
-                  ).alias("fallback_docs"),
-            F.sum(F.when(F.col("status") == "empty", 1).otherwise(0)
-                  ).alias("empty_docs"),
-            F.sum(F.when(F.col("status") == "error", 1).otherwise(0)
-                  ).alias("error_docs"),
-            F.sum(F.when(F.col("status") == "timeout", 1).otherwise(0)
-                  ).alias("timeout_docs"),
-            F.sum("len_text").alias("total_chars"),
-        )
+        .agg(*quality_count_columns(),
+             F.sum("len_text").alias("total_chars"))
         .withColumn("fallback_rate", F.col("fallback_docs") / F.col("docs"))
         .withColumn("empty_rate", F.col("empty_docs") / F.col("docs"))
     )

@@ -15,6 +15,7 @@ TEI output implements the reference's full writeFullHeader field set
 from __future__ import annotations
 
 import json as _json
+from dataclasses import replace
 
 from ..dom import Node
 
@@ -284,6 +285,27 @@ def render_tei(body: Node, meta: dict | None = None,
 
 TREE_FORMATS = frozenset({"xml", "xmltei", "html", "txt", "markdown"})
 ALL_FORMATS = frozenset(TREE_FORMATS | {"json", "csv"})
+_TXT_FORMATS = frozenset({"txt", "markdown"})  # core.dart:22 _txtFormats
+
+
+def plan_output_format(fmt: str | None, options):
+    """What an output format needs from extraction, decided once for
+    ``core.extract`` and every Spark sink: returns ``(options, in_stage)``.
+
+    ``options`` gains the content fingerprint for every non-txt format
+    (core.dart:22,547-560) and formatting for markdown ("Markdown always
+    needs formatting", settings.dart:172-174).  ``in_stage`` is ``fmt``
+    when it renders from the extraction tree inside the Arrow stage,
+    else None: json/csv sinks derive JVM-side from the output columns
+    (:func:`serialize_column`)."""
+    changes = {}
+    if fmt and fmt not in _TXT_FORMATS:
+        changes["fingerprint"] = True
+    if fmt == "markdown":
+        changes["formatting"] = True
+    return (replace(options, **changes),
+            fmt if fmt in TREE_FORMATS else None)
+
 
 _FRONT_MATTER_FIELDS = ("title", "author", "url", "hostname", "description",
                         "sitename", "date", "categories", "tags",

@@ -123,9 +123,9 @@ class Options:
     # contentFingerprint gate (core.dart:547-560): the reference computes
     # the simhash fingerprint only AFTER extraction and only for non-txt
     # output formats (format not in _txtFormats, core.dart:22) —
-    # bareExtraction itself never computes it.  Off by default; the
-    # pipeline force-enables it when an xml/xmltei/html/json/csv
-    # serialization is requested.  The simhash is ~30% of per-document
+    # bareExtraction itself never computes it.  Off by default;
+    # serialize.plan_output_format enables it for every xml/xmltei/html/
+    # json/csv output.  The simhash is ~30% of per-document
     # extraction CPU, so span/txt paths must not pay it.
     fingerprint: bool = False
     # per-document wall-clock budget in seconds (watchdog.py): at 10^12

@@ -283,10 +283,8 @@ def extract_fetched_pages(pages: DataFrame, options=None,
     the crawl/explore drivers — the standard extraction operator plus the
     extract mode's --serialize handling (tree formats in-stage, json/csv
     JVM-side)."""
-    from dataclasses import replace
-
     from ..operators.pipeline import extract_documents
-    from ..operators.serialize import TREE_FORMATS, serialize_column
+    from ..operators.serialize import plan_output_format, serialize_column
     from ..settings import Options
     from .corpus import html_to_documents
 
@@ -295,10 +293,7 @@ def extract_fetched_pages(pages: DataFrame, options=None,
 
     docs = html_to_documents(ok.select(F.col("url"), F.col("html")),
                              id_col="url", html_col="html")
-    in_stage = serialize if serialize in TREE_FORMATS else None
-    if serialize and not in_stage:
-        # json/csv carry the fingerprint column (core.dart:547-560)
-        options = replace(options, fingerprint=True)
+    options, in_stage = plan_output_format(serialize, options)
     ex = extract_documents(docs, options, serialize=in_stage)
     if serialize and not in_stage:
         ex = serialize_column(ex, serialize)

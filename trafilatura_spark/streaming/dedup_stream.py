@@ -1,55 +1,28 @@
 """Structured Streaming corpus dedup against a persistent store.
 
 The continuous-ingestion shape end-to-end: document drops land as
-files, each micro-batch is deduplicated AGAINST the signature store
-(only the batch pays signature cost —
-:func:`functions.dedup.dedup_corpus_incremental`), survivors append to
-the output table and to the store so the NEXT micro-batch sees them.
-Cross-batch state lives in the store parquet, not in Spark streaming
-state — the same store a batch `job.py --mode dedup --signature-store`
-run maintains, so batch and streaming ingestion interleave freely.
+files, and each micro-batch runs the signature-store protocol of
+:mod:`trafilatura_spark.functions.signature_store` (the one the batch
+job's ``--mode dedup --signature-store`` runs): it is deduplicated AGAINST
+the store, paying signature cost for the batch only, and its survivors
+append to the output table and then to the store, so the NEXT
+micro-batch sees them.  Cross-batch state lives in the store parquet,
+not in Spark streaming state.
 
-Delivery semantics (foreachBatch is at-least-once): writes go
-output → store sigs → store docs, and a replayed micro-batch first
-drops ids already present in the store DOCS table (the replay guard)
-and drops already-stored ids from its sigs append.  Both store tables
-are therefore exactly-once at id level across every crash window:
-a crash between the sigs and docs appends replays the batch, whose
-sigs anti-join finds its rows already present (append skipped) while
-its docs append proceeds.  The reverse order would be wrong — docs
-present without sigs makes the replay guard drop the rows, so their
-signatures would NEVER be written and future duplicates of those docs
-would be silently admitted.  Only the OUTPUT may carry duplicate rows
-for a replayed batch — downstream readers that care should dedup by
-id, or read the store's docs/ table.  A store whose sigs/ table is
-missing entirely (torn by an older writer, or hand-deleted) is healed
-by regenerating signatures from docs/ before the batch proceeds.
+Delivery semantics: foreachBatch is at-least-once, and the store
+protocol makes a replay safe.  A re-delivered micro-batch drops the ids
+the store's docs/ already holds and skips signature rows already
+stored, so both store tables stay exactly-once at id level.  Only the
+OUTPUT, written first, may carry duplicate rows for a replayed batch;
+downstream readers that care should dedup by id, or read the store's
+docs/ table.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 DEDUP_STREAM_SCHEMA = "doc_id long, text string"
-
-
-def _is_path_not_found(exc) -> bool:
-    """True iff an AnalysisException is specifically PATH_NOT_FOUND.
-    Uses the error-condition API (getCondition, falling back to the
-    deprecated getErrorClass) so e.g. UNABLE_TO_INFER_SCHEMA over an
-    existing-but-unreadable store is NOT mistaken for a missing one."""
-    for attr in ("getCondition", "getErrorClass"):
-        fn = getattr(exc, attr, None)
-        if fn is not None:
-            try:
-                cond = fn()
-            except Exception:  # noqa: BLE001 - fall through to str probe
-                continue
-            if cond is not None:
-                return cond == "PATH_NOT_FOUND"
-    return "PATH_NOT_FOUND" in str(exc)
 
 
 def read_text_stream(spark: SparkSession, input_path: str,
@@ -70,97 +43,23 @@ def make_dedup_batch_fn(output_path: str, store_dir: str,
                         max_bucket_size: int | None = None):
     """foreachBatch callback: dedup the micro-batch vs the store,
     append survivors to ``output_path`` and to the store."""
-    from ..functions.dedup import (dedup_corpus, dedup_corpus_incremental,
-                                   minhash_signatures)
-    docs_path = os.path.join(store_dir, "docs")
-    sigs_path = os.path.join(store_dir, "sigs")
+    from ..functions.signature_store import append_to_store, plan_store_batch
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-        spark = batch.sparkSession
-        try:
-            store_docs = spark.read.parquet(docs_path)
-        except AnalysisException as exc:
-            # PATH_NOT_FOUND only: the first batch bootstraps the store.
-            # Any OTHER failure (corrupt footer, permissions, a dir of
-            # non-parquet junk → UNABLE_TO_INFER_SCHEMA) must propagate —
-            # bootstrapping over a store that EXISTS but failed to read
-            # would silently re-admit every duplicate and append
-            # colliding ids
-            if not _is_path_not_found(exc):
-                raise
-            store_docs = None
-        if store_docs is not None:
-            # replay safety: a re-delivered micro-batch finds its ids
-            # already appended — drop them instead of double-counting
-            batch = batch.join(
-                store_docs.select(id_col), id_col, "left_anti")
-            try:
-                store_sigs = spark.read.parquet(sigs_path)
-            except AnalysisException as exc:
-                if not _is_path_not_found(exc):
-                    raise
-                # torn store (docs/ without sigs/ — an older docs-first
-                # writer crashed between appends, or sigs/ was deleted):
-                # matching against NO signatures would silently admit
-                # every duplicate of the stored docs forever.  Heal by
-                # regenerating sigs from docs — one full pass over the
-                # store, once
-                minhash_signatures(
-                    store_docs.filter(F.col(text_col).isNotNull()
-                                      & (F.length(text_col) > 0)),
-                    id_col, text_col).write.parquet(sigs_path)
-                store_sigs = spark.read.parquet(sigs_path)
-            accepted, labels, new_sigs = dedup_corpus_incremental(
-                batch, store_docs, store_sigs, id_col=id_col,
-                text_col=text_col, threshold=threshold,
-                max_bucket_size=max_bucket_size)
-            # exactly-once sigs under replay: a crash AFTER the sigs
-            # append but BEFORE the docs append re-delivers the batch
-            # with its signatures already stored — drop them
-            new_sigs = new_sigs.join(
-                store_sigs.select(id_col).distinct(), id_col, "left_anti")
-        else:
-            accepted, labels = dedup_corpus(
-                batch, id_col=id_col, text_col=text_col,
-                strategy="minhash", threshold=threshold,
-                max_bucket_size=max_bucket_size)
-            new_sigs = None  # bootstrap: sign the checkpointed accepted
-        # multiple consumers (output, store docs, store sigs).  persist()
-        # is NOT enough here: the docs append fires refreshByPath on
+        plan = plan_store_batch(batch, store_dir, id_col, text_col,
+                                threshold, max_bucket_size)
+        # accepted has two writers (output, store docs).  persist() is
+        # NOT enough here: the docs append fires refreshByPath on
         # docs_path, which invalidates any cached plan that reads it —
         # accepted's lineage does (the replay anti-join) — so a later
         # write would recompute against a docs listing that already
         # contains this batch and anti-join its own rows away.
         # localCheckpoint truncates the lineage to a leaf, immune to
-        # the refresh, and runs the pair pipeline exactly once (the
-        # checkpointed new_sigs also avoids re-signaturing accepted —
-        # the batch pays signature cost once, as the module promises).
-        accepted = accepted.localCheckpoint(eager=True)
-        if new_sigs is None:
-            new_sigs = minhash_signatures(
-                accepted.filter(F.col(text_col).isNotNull()
-                                & (F.length(text_col) > 0)),
-                id_col, text_col)
-            # a FIRST batch that crashed between its sigs and docs
-            # appends replays into this bootstrap branch with its sigs
-            # already stored — skip them
-            try:
-                prior = spark.read.parquet(sigs_path)
-                new_sigs = new_sigs.join(
-                    prior.select(id_col).distinct(), id_col, "left_anti")
-            except AnalysisException as exc:
-                if not _is_path_not_found(exc):
-                    raise
-        new_sigs = new_sigs.localCheckpoint(eager=True)
+        # the refresh, and runs the pair pipeline exactly once.
+        accepted = plan.accepted.localCheckpoint(eager=True)
         accepted.write.mode("append").parquet(output_path)
-        # sigs BEFORE docs: the replay guard keys on docs ids, so the
-        # crash window between the two appends must leave sigs present
-        # (replay skips the duplicate append) rather than absent
-        # (replay would drop the rows and their sigs would never land)
-        new_sigs.write.mode("append").parquet(sigs_path)
-        accepted.write.mode("append").parquet(docs_path)
-        labels.unpersist()
+        append_to_store(store_dir, accepted, plan.new_sigs, id_col, text_col)
+        plan.labels.unpersist()
 
     return _process
 

@@ -58,16 +58,12 @@ def windowed_extraction_metrics(extracted_stream: DataFrame,
                                 window: str = "1 minute",
                                 watermark: str = "2 minutes") -> DataFrame:
     """Per-window docs / fallback-rate / empty-rate with late-data bound."""
+    from ..operators.pipeline import quality_count_columns
     return (
         extracted_stream
         .withWatermark(time_col, watermark)
         .groupBy(F.window(F.col(time_col), window).alias("w"))
-        .agg(F.count("*").alias("docs"),
-             F.sum(F.when(F.col("tier").isin("baseline", "readability",
-                                             "justext"), 1).otherwise(0)
-                   ).alias("fallback_docs"),
-             F.sum(F.when(F.col("status") == "empty", 1).otherwise(0)
-                   ).alias("empty_docs"))
+        .agg(*quality_count_columns())
         .select(F.col("w.start").alias("window_start"),
                 F.col("w.end").alias("window_end"),
                 "docs",
