@@ -843,14 +843,14 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_serialize_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM-side CSV serialization sink (xml_utils.dart:564-595 xmltocsv
-    re-expression): tab-joined url/fingerprint/hostname/title/text.
-    CSV is a non-txt format, so the fingerprint rides along
-    (core.dart:547-560)."""
-    from trafilatura_spark.operators.serialize import serialize_column
-    ex = _extract(spark, sf_dir, fingerprint=True)
-    return serialize_column(ex, "csv").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "serialized")
+    """In-stage CSV serialization (xml_utils.dart:564-595 xmltocsv):
+    tab-joined url/fingerprint/hostname/title/text.  CSV is a non-txt
+    format, so the fingerprint rides along (core.dart:547-560)."""
+    opts = Options(fast=True, comments=False, with_metadata=True, **RELAXED)
+    docs = synthesize_documents_df(spark, sf_dir)
+    ex = extract_documents(docs, opts, serialize="csv")
+    return ex.select(F.col("doc_id").cast("long").alias("doc_id"),
+                     "serialized")
 
 
 def q_extract_links_mode(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -167,9 +167,9 @@ def test_crawl_breadth_many_hosts(spark):
 
 
 def test_crawl_and_extract_serialize(spark):
-    """--serialize reaches the crawl path: tree formats render in-stage,
-    json derives JVM-side — both produce a populated `serialized`
-    column (previously crawl mode silently ignored the flag)."""
+    """--serialize reaches the crawl path: every format renders in-stage,
+    xml and json alike produce a populated `serialized` column
+    (previously crawl mode silently ignored the flag)."""
     from trafilatura_spark.settings import Options
     opts = Options(fast=True, comments=False, with_metadata=False,
                    min_extracted_size=5, min_output_size=1)

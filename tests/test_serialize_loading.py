@@ -293,17 +293,68 @@ def test_extract_renders_through_determine_return_string():
         assert "Caf\u00e9" in out and "\u0301" not in out, fmt
 
 
-def test_extract_matches_in_stage_spark_sink(spark):
-    """The extraction operator's in-stage serialize and extract() render
-    the same string for every format."""
+_COMMENT_HTML = (
+    '<html lang="en"><head><title>Comment Page</title></head><body>'
+    "<article><h2>Head</h2><p>Body text " + "word " * 30 + "</p></article>"
+    '<div id="comments"><p>First comment here.</p>'
+    "<p>Second comment here.</p></div></body></html>")
+
+
+def test_extract_matches_in_stage_spark_sink(spark, tmp_path):
+    """Every sink renders the string extract() renders, for every format:
+    the extraction operator's in-stage serialize, the job's --serialize
+    (run_extraction) and the crawl modes' (extract_fetched_pages), on a
+    page without and a page with a comment section."""
     from trafilatura_spark import extract
+    from trafilatura_spark.job import run_extraction
     from trafilatura_spark.operators.pipeline import extract_documents
     from trafilatura_spark.sources.corpus import html_to_documents
+    from trafilatura_spark.sources.crawl import extract_fetched_pages
     o = Options(min_output_size=1, min_extracted_size=5, fast=True)
-    pages = spark.createDataFrame([("d1", _DISPATCH_HTML)],
+    html = {"d1": _DISPATCH_HTML, "d2": _COMMENT_HTML}
+    pages = spark.createDataFrame(sorted(html.items()),
                                   "url string, html string")
     docs = html_to_documents(pages, id_col="url", html_col="html")
     for fmt in _FORMATS:
-        got = extract_documents(docs, o, serialize=fmt) \
-            .select("serialized").first()[0]
-        assert got == extract(_DISPATCH_HTML, fmt, o), fmt
+        want = {doc_id: extract(page, fmt, o) for doc_id, page in html.items()}
+        assert all(want.values()), fmt
+        if fmt != "html":  # the html render carries no comments
+            assert "Second comment here." in want["d2"], fmt
+        out, prog = str(tmp_path / f"o-{fmt}"), str(tmp_path / f"p-{fmt}")
+        run_extraction(spark, docs, out, prog, f"sink-{fmt}", o,
+                       n_buckets=1, wave_size=1, serialize=fmt)
+        sinks = {
+            "operator": extract_documents(docs, o, serialize=fmt),
+            "job": spark.read.parquet(out),
+            "crawl": extract_fetched_pages(pages, o, serialize=fmt),
+        }
+        for sink, df in sinks.items():
+            got = {r["doc_id"]: r["serialized"]
+                   for r in df.select("doc_id", "serialized").collect()}
+            assert got == want, (fmt, sink)
+
+
+def test_xml_sweep_drops_container_emptied_by_normalization():
+    """normalize_output_tree decides emptiness in one pass, so a list
+    whose only item is whitespace leaves it as an empty `<list/>`; the
+    xml/xmltei empty-element sweep (core.dart:29-47) then drops it."""
+    from trafilatura_spark.dom import Node
+    from trafilatura_spark.operators.normalize import normalize_output_tree
+    from trafilatura_spark.operators.serialize import (
+        determine_return_string, render_tei)
+    body = Node("body")
+    para = Node("p")
+    para.text = "Kept paragraph text."
+    body.append(para)
+    lst = Node("list")
+    body.append(lst)
+    item = Node("item")
+    item.text = "  "
+    lst.append(item)
+    normalize_output_tree(body, False)
+    assert "<list/>" in render_xml(body)
+    assert "<list/>" in render_tei(body)
+    for fmt in ("xml", "xmltei"):
+        out = determine_return_string(body, {}, fmt, with_metadata=False)
+        assert "<p>Kept paragraph text.</p>" in out, fmt
+        assert "<list" not in out, fmt

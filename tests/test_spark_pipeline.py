@@ -11,6 +11,7 @@ from trafilatura_spark.operators.pipeline import (
     extract_documents,
     extraction_metrics,
 )
+from trafilatura_spark.operators.serialize import ALL_FORMATS
 from trafilatura_spark.settings import Options
 from trafilatura_spark.sources.corpus import synthesize_documents_df
 
@@ -303,7 +304,8 @@ def test_first_wave_torn_crash_scrubbed(spark, sf_dir, tmp_path):
 
 
 def test_job_serialize_flag(spark, sf_dir, tmp_path):
-    """--serialize adds a JVM-side serialized column to the output."""
+    """--serialize adds a serialized column, rendered inside the
+    extraction stage, to the output."""
     out, prog = str(tmp_path / "so"), str(tmp_path / "sp")
     docs = synthesize_documents_df(spark, sf_dir)
     run_extraction(spark, docs, out, prog, "s1", RELAXED,
@@ -370,17 +372,36 @@ def test_job_serialize_tree_formats(spark, sf_dir, tmp_path):
         assert ok(row["serialized"]), (fmt, row["serialized"][:200])
 
 
+@pytest.mark.parametrize("fmt", ALL_FORMATS)
 def test_job_serialize_tree_format_rejects_custom_batches(spark, sf_dir,
-                                                          tmp_path):
-    """Tree formats need the extraction tree — unavailable from custom
-    batch producers (e.g. the PDF extractor), so the job refuses."""
-    import pytest as _pytest
-
+                                                          tmp_path, fmt):
+    """Every format renders from the extraction tree — unavailable from
+    custom batch producers (e.g. the PDF extractor), so the job refuses
+    before touching the output or progress tables."""
     docs = synthesize_documents_df(spark, sf_dir)
-    with _pytest.raises(ValueError, match="serialize"):
+    with pytest.raises(ValueError, match="serialize"):
         run_extraction(spark, docs, str(tmp_path / "o"), str(tmp_path / "p"),
-                       "bad", RELAXED, serialize="xml",
+                       "bad", RELAXED, serialize=fmt,
                        batches_fn=lambda it: it)
+    assert not (tmp_path / "o").exists() and not (tmp_path / "p").exists()
+
+
+def test_job_cli_rejects_serialize_pdf_input(tmp_path, monkeypatch):
+    """--serialize with --input-format pdf-parquet is an argument error
+    (exit code 2) raised before any Spark session is built: the PDF
+    extractor builds no tree to render."""
+    from trafilatura_spark import job
+
+    def no_session(*a, **k):
+        raise AssertionError("make_session reached")
+
+    monkeypatch.setattr(job, "make_session", no_session)
+    with pytest.raises(SystemExit) as exc:
+        job.main(["--input", str(tmp_path / "pdfs"),
+                  "--output", str(tmp_path / "o"),
+                  "--progress", str(tmp_path / "p"),
+                  "--input-format", "pdf-parquet", "--serialize", "json"])
+    assert exc.value.code == 2
 
 
 def test_job_cli_serialize_formats(spark, sf_dir, tmp_path):

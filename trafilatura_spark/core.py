@@ -197,6 +197,25 @@ def _apply_prune_patterns(working_body: Node, options: Options) -> None:
                     elem.drop_tree()
 
 
+def _convert_and_split_comments(cleaned: Node, options: Options,
+                                url: str | None) -> tuple[Node, Node, int]:
+    """convert → comment extraction → precision comment drop on a cleaned
+    body: returns ``(converted, commentsbody, len_comments)``.  The first
+    pass and the wild-text rebuild both prepare their tree here, so the
+    two cannot drift apart."""
+    converted = convert_tags(cleaned, options, url=url)
+    if options.comments:
+        commentsbody, _, len_comments, converted = \
+            extract_comments(converted, options)
+    else:
+        commentsbody, len_comments = Node("body"), 0
+    if options.focus == "precision":
+        for elem in select_comment_elements(converted):
+            if elem.parent is not None:
+                elem.drop_tree()
+    return converted, commentsbody, len_comments
+
+
 def bare_extraction(filecontent: str, options: Options | None = None,
                     doc_id: str = "") -> ExtractionResult:
     """Full per-document pipeline (core.dart:147-336), wall-clock-bounded.
@@ -267,34 +286,16 @@ def _bare_extraction_impl(filecontent: str, options: Options,
     # the backup feeds compare_extraction only — skip the full-tree
     # copy in fast mode (the bench/oracle hot path)
     cleaned_backup = cleaned if options.fast else cleaned.copy()
-    converted = convert_tags(cleaned, options, url=conv_url)
-
-    if options.comments:
-        commentsbody, temp_comments, len_comments, converted = \
-            extract_comments(converted, options)
-    else:
-        commentsbody, temp_comments, len_comments = Node("body"), "", 0
-
-    if options.focus == "precision":
-        for elem in select_comment_elements(converted):
-            if elem.parent is not None:
-                elem.drop_tree()
+    converted, commentsbody, len_comments = _convert_and_split_comments(
+        cleaned, options, conv_url)
 
     def rebuild_converted() -> Node:
-        # deterministic replay of the cleaning→conversion→comment-
-        # removal steps above from a pristine body: the wild-text
+        # the same preparation from a pristine body: the wild-text
         # second chance (extract_content) calls this ONLY when the
         # main pass comes up short, replacing the every-document
         # backup copy with an on-miss rebuild
-        c = convert_tags(clean_copy(working_body, options), options,
-                         url=conv_url)
-        if options.comments:
-            c = extract_comments(c, options)[3]
-        if options.focus == "precision":
-            for elem in select_comment_elements(c):
-                if elem.parent is not None:
-                    elem.drop_tree()
-        return c
+        return _convert_and_split_comments(
+            clean_copy(working_body, options), options, conv_url)[0]
 
     postbody, temp_text, len_text, tier = trafilatura_sequence(
         converted, cleaned_backup, working_body.copy, options,
@@ -383,7 +384,7 @@ def extract(filecontent: str, output_format: str = "txt",
     extraction operator's in-stage ``serialize``."""
     from .operators.serialize import (determine_return_string,
                                       plan_output_format)
-    options, _ = plan_output_format(output_format, options or Options())
+    options = plan_output_format(output_format, options or Options())
     res = bare_extraction(filecontent, options)
     if res.status in ("rejected", "error", "empty") or res.body is None:
         return None

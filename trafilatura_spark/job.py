@@ -47,6 +47,7 @@ from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType,
 
 from .operators.pipeline import (QUALITY_COUNTS, extracted_schema,
                                  make_extract_batches, salted_repartition)
+from .operators.serialize import ALL_FORMATS
 from .settings import Options
 
 
@@ -193,7 +194,9 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
     repartition width (default: cluster default parallelism).
     ``batches_fn`` swaps the per-wave mapInPandas extractor (default:
     the HTML cascade) for another EXTRACTED_SCHEMA producer — e.g.
-    sources.pdf.make_pdf_batches for PDF corpora.
+    sources.pdf.make_pdf_batches for PDF corpora.  ``serialize`` adds
+    the in-stage rendered output format (make_extract_batches); custom
+    producers build no extraction tree, so the two are exclusive.
     ``lang_filter`` (opt-in, the job's --lang-filter) drops 'ok' docs
     whose EXTRACTED text the stopword classifier
     (functions/textstats.lang_id) assigns to a different language — an
@@ -205,6 +208,11 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
     in the output writes and in the per-bucket metrics + progress
     appends, so the commit path's cost shows in every run.
     """
+    if serialize and batches_fn is not None:
+        raise ValueError(
+            f"--serialize {serialize} renders from the extraction tree "
+            "and is only available with the default HTML extractor; "
+            "custom batch producers have no tree to render")
     options = options or Options()
     if lineage is None:
         # default lineage: the scanned input files (for provenance audits)
@@ -234,16 +242,9 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
     if tasks_per_wave is None:
         tasks_per_wave = spark.sparkContext.defaultParallelism
 
-    from .operators.serialize import plan_output_format
-    options, in_stage_fmt = plan_output_format(serialize, options)
-    if in_stage_fmt and batches_fn is not None:
-        raise ValueError(
-            f"--serialize {serialize} re-renders from the extraction tree "
-            "and is only available with the default HTML extractor; "
-            "custom batch producers support json/csv (column-derived)")
     extract_fn = batches_fn if batches_fn is not None \
-        else make_extract_batches(options, serialize=in_stage_fmt)
-    schema = extracted_schema(in_stage_fmt)
+        else make_extract_batches(options, serialize=serialize)
+    schema = extracted_schema(serialize)
     for i in range(0, len(pending), wave_size):
         wave = pending[i:i + wave_size]
         wave_src = docs.filter(F.col("bucket").isin(wave))
@@ -252,9 +253,9 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
                      .mapInPandas(extract_fn, schema)
                      .withColumn("bucket", bucket_col))
         if lang_filter:
-            # BEFORE serialization: rendering rows the filter is about to
-            # drop would be wasted work proportional to the dropped
-            # fraction (the filter reads only spans/status)
+            # every --serialize format renders inside the extraction
+            # stage, so the rows this filter drops are rendered too (the
+            # filter reads only spans/status)
             from .functions.textstats import lang_id
             joined = F.array_join(
                 F.transform("spans", lambda s: s["text"]), " ")
@@ -264,10 +265,6 @@ def run_extraction(spark: SparkSession, documents: DataFrame, output_path: str,
                 .filter((F.col("status") != "ok")
                         | (F.col("_lf_lang") == lang_filter))
                 .drop("_lf_text", "_lf_lang"))
-        if serialize and not in_stage_fmt:
-            # json/csv derive from the output columns JVM-side
-            from .operators.serialize import serialize_column
-            extracted = serialize_column(extracted, serialize)
         # per-bucket metrics ride the write itself as observe() accumulator
         # expressions (5 per bucket in the wave) — ONE pass over the data;
         # naive re-reads of the whole output table would be a full second
@@ -408,15 +405,14 @@ def main(argv: list[str] | None = None, *, transport=None) -> int:
                         "--url-filter, cli_utils.dart:162-165): discovery "
                         "output and the crawl frontier keep only URLs "
                         "containing at least one given substring")
-    p.add_argument("--serialize", default=None,
-                   choices=["json", "csv", "txt", "markdown", "xml",
-                            "xmltei", "html"],
+    p.add_argument("--serialize", default=None, choices=ALL_FORMATS,
                    help="add a serialized string column to the output — "
                         "the reference CLI's 7-format -f dispatch "
                         "(core.dart:25-105; spans stay the primary sink). "
-                        "json/csv derive JVM-side from the output columns; "
-                        "txt/markdown/xml/xmltei/html render from the "
-                        "extraction tree inside the Arrow stage")
+                        "Every format renders from the extraction tree "
+                        "inside the Arrow stage, exactly as extract() "
+                        "does; not available with --input-format "
+                        "pdf-parquet, whose extractor builds no tree")
     p.add_argument("--mode", default="extract",
                    choices=["extract", "discover-sitemaps", "discover-feeds",
                             "crawl", "probe", "explore", "feed", "dedup",
@@ -564,6 +560,10 @@ def main(argv: list[str] | None = None, *, transport=None) -> int:
                 "classifier supports "
                 f"{CLASSIFIER_LANGS} (anything else would drop every "
                 "extracted document)")
+    if (args.serialize and args.mode == "extract"
+            and args.input_format == "pdf-parquet"):
+        p.error("--serialize renders from the extraction tree, which the "
+                "--input-format pdf-parquet extractor does not build")
     spark = make_session()
 
     blacklist: frozenset = frozenset()

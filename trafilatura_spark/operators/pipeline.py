@@ -111,10 +111,10 @@ def make_extract_batches(options: Options, serialize: str | None = None):
     ``serialize`` renders each document's output tree to one of the
     reference's string formats (determineReturnString, core.dart:25-105)
     inside the SAME Arrow stage — the tree is already in hand here, so
-    xml/xmltei/html/txt/markdown cost one extra string build per doc,
-    no second pass and no extra shuffle."""
+    every format costs one extra string build per doc, no second pass
+    and no extra shuffle."""
     from .serialize import plan_output_format
-    opt_dict = asdict(plan_output_format(serialize, options)[0])
+    opt_dict = asdict(plan_output_format(serialize, options))
     columns = ["doc_id", "spans", "text", "meta", "status", "tier",
                "len_text"] + (["serialized"] if serialize else [])
 

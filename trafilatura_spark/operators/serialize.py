@@ -4,8 +4,11 @@ Re-expression of /root/reference/lib/src/xml_utils.dart (buildXmlOutput
 289-345, buildJsonOutput 195-229, xmltocsv 564-595, buildHtmlOutput
 232-266 via htmlprocessing.dart:572-640).  The engine's primary sink is
 the span table; these string formats exist for reference parity and for
-users consuming single-document outputs.  On Spark each is a per-row
-map — see :func:`serialize_column` for the DataFrame form.
+users consuming single-document outputs.  Every sink — ``core.extract``
+and the extraction operator's ``serialize`` column, which the job and
+crawl modes' ``--serialize`` use — renders through the one dispatch,
+:func:`determine_return_string`, from the extraction tree inside the
+Arrow stage.
 
 TEI output implements the reference's full writeFullHeader field set
 (xml_utils.dart:598-813) plus the checkTei invalid-tag merge
@@ -283,28 +286,22 @@ def render_tei(body: Node, meta: dict | None = None,
 
 # -- format dispatch ----------------------------------------------------------
 
-TREE_FORMATS = frozenset({"xml", "xmltei", "html", "txt", "markdown"})
-ALL_FORMATS = frozenset(TREE_FORMATS | {"json", "csv"})
+ALL_FORMATS = ("txt", "markdown", "json", "csv", "xml", "xmltei", "html")
 _TXT_FORMATS = frozenset({"txt", "markdown"})  # core.dart:22 _txtFormats
 
 
 def plan_output_format(fmt: str | None, options):
-    """What an output format needs from extraction, decided once for
-    ``core.extract`` and every Spark sink: returns ``(options, in_stage)``.
-
-    ``options`` gains the content fingerprint for every non-txt format
-    (core.dart:22,547-560) and formatting for markdown ("Markdown always
-    needs formatting", settings.dart:172-174).  ``in_stage`` is ``fmt``
-    when it renders from the extraction tree inside the Arrow stage,
-    else None: json/csv sinks derive JVM-side from the output columns
-    (:func:`serialize_column`)."""
+    """The options an output format needs from extraction, decided once
+    for ``core.extract`` and every Spark sink: the content fingerprint
+    for every non-txt format (core.dart:22,547-560) and formatting for
+    markdown ("Markdown always needs formatting", settings.dart:172-174).
+    """
     changes = {}
     if fmt and fmt not in _TXT_FORMATS:
         changes["fingerprint"] = True
     if fmt == "markdown":
         changes["formatting"] = True
-    return (replace(options, **changes),
-            fmt if fmt in TREE_FORMATS else None)
+    return replace(options, **changes)
 
 
 _FRONT_MATTER_FIELDS = ("title", "author", "url", "hostname", "description",
@@ -348,16 +345,13 @@ def determine_return_string(body: Node, meta: dict | None, fmt: str,
         else:
             out = render_xml(pruned, meta if with_metadata else None,
                              comments_body)
-    elif fmt == "csv":
+    elif fmt in ("csv", "json"):
         text = render_txt(body, include_formatting=formatting)
         comments = (render_txt(comments_body, include_formatting=formatting)
                     if comments_body is not None else "")
-        out = render_csv(meta, text, comments)
-    elif fmt == "json":
-        text = render_txt(body, include_formatting=formatting)
-        comments = (render_txt(comments_body, include_formatting=formatting)
-                    if comments_body is not None else "")
-        out = render_json(meta if with_metadata else {}, text, comments)
+        out = (render_csv(meta, text, comments) if fmt == "csv"
+               else render_json(meta if with_metadata else {}, text,
+                                comments))
     elif fmt == "html":
         out = render_html(body, meta.get("title") if with_metadata else None)
     elif fmt in ("txt", "markdown"):
@@ -382,64 +376,3 @@ def determine_return_string(body: Node, meta: dict | None, fmt: str,
     else:
         raise ValueError(f"unsupported output format: {fmt}")
     return unicodedata.normalize("NFC", out)
-
-
-# -- Spark form ---------------------------------------------------------------
-
-def serialize_column(extracted, fmt: str = "json"):
-    """Add a serialized string column to the extraction output DataFrame.
-
-    json/csv run JVM-side (`to_json` / `concat_ws` over the existing
-    columns); xml/html re-render from spans via an Arrow-batched stage.
-    """
-    from pyspark.sql import functions as F
-
-    # per-document comment text, as render_json/render_csv receive it
-    comments = F.array_join(
-        F.transform(F.filter("spans", lambda s: s["kind"] == "comment"),
-                    lambda s: s["text"]), " ")
-
-    if fmt == "json":
-        # same record layout as render_json (buildJsonOutput,
-        # xml_utils.dart:195-229) so row-wise and DataFrame-wise
-        # serializations agree field-for-field
-        return extracted.withColumn(
-            "serialized",
-            F.to_json(F.struct(
-                F.col("meta.title").alias("title"),
-                F.col("meta.author").alias("author"),
-                F.col("meta.url").alias("url"),
-                F.col("meta.hostname").alias("hostname"),
-                F.col("meta.description").alias("description"),
-                F.col("meta.sitename").alias("sitename"),
-                F.col("meta.date").alias("date"),
-                F.col("meta.categories").alias("categories"),
-                F.col("meta.tags").alias("tags"),
-                F.col("meta.fingerprint").alias("fingerprint"),
-                F.col("meta.id").alias("id"),
-                F.col("meta.license").alias("license"),
-                comments.alias("comments"),
-                F.col("text"))))
-    if fmt == "csv":
-        # same 11-column layout as render_csv (xmltocsv,
-        # xml_utils.dart:564-595): url, id, fingerprint, hostname, title,
-        # image, date, text, comments, license, pagetype
-        def fld(col):
-            return F.coalesce(
-                F.translate(F.regexp_replace(col, "\t", "    "), "\n", " "),
-                F.lit("null"))
-        return extracted.withColumn(
-            "serialized",
-            F.concat_ws("\t",
-                        fld(F.col("meta.url")),
-                        fld(F.col("meta.id")),
-                        fld(F.col("meta.fingerprint")),
-                        fld(F.col("meta.hostname")),
-                        fld(F.col("meta.title")),
-                        fld(F.col("meta.image")),
-                        fld(F.col("meta.date")),
-                        fld(F.col("text")),
-                        fld(comments),
-                        fld(F.col("meta.license")),
-                        fld(F.col("meta.pagetype"))))
-    raise ValueError(f"unsupported DataFrame serialization: {fmt}")

@@ -261,8 +261,8 @@ def crawl_and_extract(spark: SparkSession, seeds: list[str],
     (cli_utils.dart:379-406): crawl, then run the standard extraction
     operator over every fetched page (doc_id = url).  ``serialize``
     renders the requested output format exactly like the extract mode:
-    tree formats (xml/xmltei/html/txt/markdown) inside the Arrow stage,
-    json/csv derived JVM-side from the output columns.  ``url_filter`` /
+    every format from the extraction tree inside the Arrow stage, through
+    the same dispatch as ``core.extract``.  ``url_filter`` /
     ``url_blacklist`` gate the crawl frontier (see crawl_site).
     ``backup_path`` writes the raw fetched pages (url, hop, status, html)
     as parquet before extraction — the reference's --backup-dir (raw HTML
@@ -280,24 +280,15 @@ def crawl_and_extract(spark: SparkSession, seeds: list[str],
 def extract_fetched_pages(pages: DataFrame, options=None,
                           serialize: str | None = None) -> DataFrame:
     """(url, html) → extraction output (doc_id = url): the shared tail of
-    the crawl/explore drivers — the standard extraction operator plus the
-    extract mode's --serialize handling (tree formats in-stage, json/csv
-    JVM-side)."""
+    the crawl/explore drivers — the standard extraction operator, with the
+    extract mode's in-stage --serialize rendering."""
     from ..operators.pipeline import extract_documents
-    from ..operators.serialize import plan_output_format, serialize_column
-    from ..settings import Options
     from .corpus import html_to_documents
 
-    options = options or Options()
     ok = pages.filter(F.col("html").isNotNull())
-
     docs = html_to_documents(ok.select(F.col("url"), F.col("html")),
                              id_col="url", html_col="html")
-    options, in_stage = plan_output_format(serialize, options)
-    ex = extract_documents(docs, options, serialize=in_stage)
-    if serialize and not in_stage:
-        ex = serialize_column(ex, serialize)
-    return ex
+    return extract_documents(docs, options, serialize=serialize)
 
 
 def probe_extractable(spark: SparkSession, urls: DataFrame,
