@@ -134,10 +134,25 @@ def test_twitter_fallbacks():
 
 
 def test_author_blacklist():
+    def author(body, head="", blacklist=("admin",)):
+        return extract_metadata(load_html(_page(body, head=head)),
+                                author_blacklist=frozenset(blacklist))["author"]
+
     head = '<meta name="author" content="Admin"/>'
-    meta = extract_metadata(load_html(_page("<p>x</p>", head=head)),
-                            author_blacklist=frozenset({"admin"}))
-    assert not meta.get("author")
+    assert not author("<p>x</p>", head)
+    # meta branch: one name of a multi-author value is dropped
+    multi = '<meta name="author" content="Jane Roe; Admin"/>'
+    assert author("<p>x</p>", multi) == "Jane Roe"
+    assert author("<p>x</p>", multi, blacklist=()) == "Jane Roe; Admin"
+    assert author("<p>x</p>", multi, blacklist=("admin", "JANE ROE")) is None
+    # a blacklisted meta author falls through to the DOM byline
+    byline = '<p class="byline">By <span class="author">Jane Roe</span></p>'
+    site = '<meta name="author" content="Site Admin"/>'
+    assert author(byline + "<p>x</p>", site, ("Site Admin",)) == "Jane Roe"
+    # byline branch: the same filter applies to the DOM author
+    assert author(byline + "<p>x</p>", blacklist=("jane roe",)) is None
+    assert author('<div class="author">Jane Roe; Admin</div><p>x</p>') \
+        == "Jane Roe"
 
 
 # -- property-based robustness ------------------------------------------------

@@ -5,6 +5,7 @@ import json
 import zlib
 
 from trafilatura_spark.core import bare_extraction
+from trafilatura_spark.operators.render import render_txt
 from trafilatura_spark.operators.serialize import (
     render_csv,
     render_html,
@@ -118,10 +119,13 @@ def test_is_similar_domain():
 def test_end_to_end_serializers_from_extraction():
     html = (f"<html><head><title>Site | Page</title></head><body><article>"
             f"<h1>Heading</h1><p>{LONG_P}</p><p>{LONG_P} again.</p>"
-            f"</article></body></html>")
+            f"</article><div class='comments'><p>A reader comment long "
+            f"enough to be kept.</p></div></body></html>")
     res = bare_extraction(html, Options(with_metadata=True))
-    s = render_json(res.meta, res.text, res.comments_text)
-    assert json.loads(s)["text"] == res.text
+    comments = render_txt(res.commentsbody)
+    s = json.loads(render_json(res.meta, res.text, comments))
+    assert s["text"] == res.text
+    assert s["comments"].strip() == "A reader comment long enough to be kept."
 
 
 def test_render_tei():

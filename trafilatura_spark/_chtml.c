@@ -162,7 +162,7 @@ has_nonspace(PyObject *s)
     return 0;
 }
 
-/* mirrors _TreeBuilder._add_text; steals data. */
+/* mirrors _FastBuilder._add_text; steals data. */
 static int
 add_text(PState *st, PyObject *data)
 {
@@ -306,7 +306,7 @@ canon_tag(PyObject *t)
 
 /* ------------------------------------------------------- insertion modes */
 
-/* mirrors _TreeBuilder._implied_close */
+/* mirrors _FastBuilder._implied_close */
 static int
 implied_close(PState *st, PyObject *tag)
 {

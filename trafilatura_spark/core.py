@@ -35,7 +35,6 @@ class ExtractionResult:
     spans: list = field(default_factory=list)
     meta: dict | None = None
     text: str = ""
-    comments_text: str = ""
     status: str = "ok"      # ok | empty | error | rejected | timeout
     tier: str = "main"      # main | readability | justext | baseline | none
     len_text: int = 0
@@ -329,10 +328,9 @@ def _bare_extraction_impl(filecontent: str, options: Options,
 
     result.tier = tier
     result.body = postbody
-    result.commentsbody = commentsbody \
-        if options.comments and commentsbody.children else None
     included_comments = commentsbody \
         if options.comments and commentsbody.children else None
+    result.commentsbody = included_comments
     if options.dedup:
         # deterministic per-document duplicateTest
         # (deduplication.dart:335-349): the reference tests the cached
@@ -354,8 +352,6 @@ def _bare_extraction_impl(filecontent: str, options: Options,
         include_formatting=options.formatting,
     )
     result.text = render_txt(postbody, options.formatting)
-    result.comments_text = render_txt(commentsbody, options.formatting) \
-        if commentsbody.children else ""
     result.len_text = len_text
     if meta is not None and options.fingerprint:
         # core.dart:547-560: computed only when the output format is

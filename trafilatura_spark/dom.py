@@ -2,10 +2,11 @@
 
 The reference parses HTML with the Dart ``html`` package
 (/root/reference/lib/src/utils.dart:194-235).  Spark executors run pure
-Python, so we build a minimal tree on top of the stdlib
-:class:`html.parser.HTMLParser` with the html5-recovery behaviors the
-extraction cascade relies on: implicit paragraph/list-item closing,
-void elements, lowercase tag/attribute names, and synthesized
+Python, so we build a minimal tree with one tokenizer per accelerator
+path: the C ``_chtml.parse`` when the extension loads, its pure-Python
+twin :class:`_FastBuilder` otherwise.  Both apply the html5-recovery
+behaviors the extraction cascade relies on: implicit paragraph/list-item
+closing, void elements, lowercase tag/attribute names, and synthesized
 ``<html>``/``<body>`` roots.
 
 The node model follows lxml semantics (``text`` before the first child,
@@ -18,7 +19,6 @@ from __future__ import annotations
 
 import re as _re_mod
 from html import unescape as _unescape
-from html.parser import HTMLParser
 
 VOID_ELEMENTS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
@@ -66,8 +66,6 @@ _RAWTEXT_END = {
     "script": _re_mod.compile(r"</script[\s/>]", _re_mod.I),
     "style": _re_mod.compile(r"</style[\s/>]", _re_mod.I),
 }
-
-# Raw-text elements: HTMLParser handles script/style natively (CDATA mode).
 
 # Optional C accelerator (wired at the bottom of this module once Node and
 # the insertion-mode tables exist; None when gcc/the build is unavailable).
@@ -335,15 +333,21 @@ def strip_elements(tree: Node, *tags: str, keep_tail: bool = True) -> None:
             node.drop_tree(keep_tail=keep_tail)
 
 
-class _TreeBuilder(HTMLParser):
+class _FastBuilder:
+    """Single-scan HTML tokenizer + tree builder.
+
+    The pure-Python twin of ``_chtml.parse`` (the differential oracle in
+    tests/test_chtml.py and the parser on hosts without gcc).  It applies
+    the html5-recovery behaviors the cascade relies on: head/body
+    insertion-mode recovery, implied end tags, void elements, lowercase
+    names, first-attribute-wins, charref unescaping, script/style raw
+    text, comments/doctype skipped."""
+
+    __slots__ = ("root", "stack")
+
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
         self.root = Node("#root")
         self.stack: list[Node] = [self.root]
-
-    # -- helpers -----------------------------------------------------------
-    def _open_tags(self):
-        return [n.tag for n in self.stack]
 
     def _add_text(self, data: str) -> None:
         cur = self.stack[-1]
@@ -359,28 +363,6 @@ class _TreeBuilder(HTMLParser):
             cur.children[-1].tail += data
         else:
             cur.text += data
-
-    def _start_gate(self, tag: str) -> bool:
-        """html5 head/body insertion-mode recovery (the Dart ``html``
-        package implements the html5 tree-construction algorithm; pages
-        with no ``</head>``/``<body>`` tags rely on these rules — without
-        them whole documents nest inside ``<head>`` and extraction sees an
-        empty body).  Returns True when the start tag must be ignored
-        (duplicate ``<html>``/``<body>``: html5 merges attributes instead
-        of opening a second element)."""
-        stack = self.stack
-        if stack[-1].tag == "head" and tag not in _HEAD_CONTENT:
-            stack.pop()
-            if tag != "body" and tag != "html":
-                parent = stack[-1]
-                body = Node("body", parent=parent)
-                parent.children.append(body)
-                stack.append(body)
-        if tag == "html" or tag == "body":
-            for nd in stack:
-                if nd.tag == tag:
-                    return True
-        return False
 
     def _implied_close(self, tag: str) -> None:
         stack = self.stack
@@ -403,84 +385,6 @@ class _TreeBuilder(HTMLParser):
                 if t in ("table", "ul", "ol", "dl", "body", "html", "#root",
                          "select", barrier_tr):
                     break
-
-    def _close_to(self, node: Node) -> None:
-        while self.stack and self.stack[-1] is not node:
-            self.stack.pop()
-        if self.stack:
-            self.stack.pop()
-
-    # -- HTMLParser hooks ----------------------------------------------------
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if self._start_gate(tag):
-            return
-        self._implied_close(tag)
-        amap = {}
-        for k, v in attrs:
-            if k not in amap:
-                amap[k] = v if v is not None else ""
-        node = Node(tag, amap, self.stack[-1])
-        self.stack[-1].children.append(node)
-        if tag not in VOID_ELEMENTS:
-            self.stack.append(node)
-
-    def handle_startendtag(self, tag: str, attrs) -> None:
-        if self._start_gate(tag):
-            return
-        self._implied_close(tag)
-        amap = {}
-        for k, v in attrs:
-            if k not in amap:
-                amap[k] = v if v is not None else ""
-        node = Node(tag, amap, self.stack[-1])
-        self.stack[-1].children.append(node)
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag in VOID_ELEMENTS:
-            return
-        if tag == "body" or tag == "html":
-            # html5: </body>/</html> only switch insertion modes — later
-            # content still belongs to body.  Pages emitting a premature
-            # </html> before <body> (seen in the wild) would otherwise
-            # orphan the whole document body.
-            return
-        for node in reversed(self.stack[1:]):
-            if node.tag == tag:
-                self._close_to(node)
-                return
-        # stray end tag: ignore (html5 recovery)
-
-    def handle_data(self, data: str) -> None:
-        self._add_text(data)
-
-    def updatepos(self, i: int, j: int) -> int:
-        # line/column tracking is only used for error positions, which we
-        # never surface — skipping it shaves measurable parse time
-        return j
-
-    def error(self, message):  # pragma: no cover - py<3.10 compat
-        pass
-
-
-class _FastBuilder:
-    """Regex-free single-scan HTML tokenizer + tree builder.
-
-    Drop-in replacement for the stdlib ``html.parser`` path (~3x faster —
-    the parser was 45% of per-document extraction time).  Mirrors the
-    html5-recovery behaviors of :class:`_TreeBuilder`: implied end tags,
-    void elements, lowercase names, first-attribute-wins, charref
-    unescaping, script/style raw text, comments/doctype skipped."""
-
-    __slots__ = ("root", "stack")
-
-    def __init__(self) -> None:
-        self.root = Node("#root")
-        self.stack: list[Node] = [self.root]
-
-    _add_text = _TreeBuilder._add_text
-    _implied_close = _TreeBuilder._implied_close
-    _close_to = _TreeBuilder._close_to
-    _start_gate = _TreeBuilder._start_gate
 
     def feed(self, s: str) -> None:
         unescape = _unescape
@@ -601,9 +505,13 @@ class _FastBuilder:
                 i = lt + 1
 
     def _handle_start(self, tag: str, amap: dict, self_closing: bool) -> None:
-        # inlined _start_gate + implied-close precheck: this runs once per
-        # start tag (~320 per page); the common case (inline tag, not in
-        # head) must not pay two method calls
+        # html5 head/body insertion-mode recovery, inlined with the
+        # implied-close precheck: this runs once per start tag (~320 per
+        # page); the common case (inline tag, not in head) must not pay a
+        # method call.  Pages with no </head>/<body> tags rely on these
+        # rules, or the whole document nests inside <head>.  A duplicate
+        # <html>/<body> is ignored (html5 merges attributes instead of
+        # opening a second element).
         stack = self.stack
         if stack[-1].tag == "head" and tag not in _HEAD_CONTENT:
             stack.pop()
@@ -637,7 +545,10 @@ class _FastBuilder:
         if tag in VOID_ELEMENTS:
             return
         if tag == "body" or tag == "html":
-            # html5: mode switch only — see _TreeBuilder.handle_endtag
+            # html5: </body>/</html> only switch insertion modes — later
+            # content still belongs to body.  Pages emitting a premature
+            # </html> before <body> (seen in the wild) would otherwise
+            # orphan the whole document body.
             return
         stack = self.stack
         # well-formed fast path: the end tag closes the top of the stack
@@ -683,7 +594,6 @@ def _scan_tag_end(s: str, start: int, n: int) -> int:
 
 
 
-_FAST_NAME_RE = _re_mod.compile(r"([a-zA-Z][^\s/>]*)")
 # fused start-tag scanner: name + attribute segment + terminating '>' in
 # one anchored match (see _FastBuilder.feed)
 _FAST_START_RE = _re_mod.compile(r"([a-zA-Z][^\s/>]*)([^>]*)>")
@@ -699,21 +609,11 @@ def parse_html(html: str) -> Node:
     yields an ``html`` root with ``head``/``body`` children; top-level
     content lands in ``body``.
     """
-    try:
-        if _CPARSE is not None:
-            root = _CPARSE(html)
-        else:
-            builder = _FastBuilder()
-            builder.feed(html)
-            root = builder.root
-    except Exception:
-        # pathological input: fall back to the stdlib-based builder
-        builder = _TreeBuilder()
-        try:
-            builder.feed(html)
-            builder.close()
-        except Exception:
-            pass
+    if _CPARSE is not None:
+        root = _CPARSE(html)
+    else:
+        builder = _FastBuilder()
+        builder.feed(html)
         root = builder.root
 
     html_node = None

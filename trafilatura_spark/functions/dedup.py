@@ -163,6 +163,21 @@ def lsh_bands(sig_df: DataFrame, id_col: str = "doc_id",
     )
 
 
+def _bucket_pairs(members: str) -> Column:
+    """Every in-bucket pair of the sorted array column ``members`` as an
+    array of ``struct(a, b)`` with ``a`` before ``b`` in array order: an
+    in-row explosion, so a bucket of n members yields n*(n-1)/2 pairs."""
+    n = F.size(members)
+    return F.flatten(F.transform(
+        F.sequence(F.lit(1), n - 1),
+        lambda i: F.transform(
+            F.slice(members, i + 1, n),
+            lambda x: F.struct(F.element_at(members, i).alias("a"),
+                               x.alias("b")),
+        ),
+    ))
+
+
 def lsh_candidate_pairs(sig_df: DataFrame, id_col: str = "doc_id",
                         band_size: int = 2,
                         max_bucket_size: int | None = None) -> DataFrame:
@@ -188,18 +203,9 @@ def lsh_candidate_pairs(sig_df: DataFrame, id_col: str = "doc_id",
         # NOTE this changes results (those docs lose their candidacy), so
         # it is off by default and callers should surface the choice.
         buckets = buckets.filter(F.size("ids") <= max_bucket_size)
-    n = F.size("ids")
-    pair_structs = F.flatten(F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.transform(
-            F.slice("ids", i + 1, n),
-            lambda x: F.struct(F.element_at("ids", i).alias("id_a"),
-                               x.alias("id_b")),
-        ),
-    ))
     return (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        buckets.select(F.explode(_bucket_pairs("ids")).alias("p"))
+        .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
         .distinct()
     )
 
@@ -345,17 +351,8 @@ def near_duplicate_pairs_incremental(
     )
     if max_bucket_size is not None:
         buckets = buckets.filter(F.size("ms") <= max_bucket_size)
-    n = F.size("ms")
-    pair_structs = F.flatten(F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.transform(
-            F.slice("ms", i + 1, n),
-            lambda x: F.struct(F.element_at("ms", i).alias("a"),
-                               x.alias("b")),
-        ),
-    ))
     cand = (
-        buckets.select(F.explode(pair_structs).alias("p"))
+        buckets.select(F.explode(_bucket_pairs("ms")).alias("p"))
         .filter(F.col("p.a._is_new") | F.col("p.b._is_new"))
         .select(F.col("p.a.i").alias("id_a"), F.col("p.b.i").alias("id_b"))
         .distinct()
@@ -522,17 +519,8 @@ def simhash_near_duplicate_pairs(df: DataFrame, id_col: str = "doc_id",
     )
     if max_bucket_size is not None:
         buckets = buckets.filter(F.size("ms") <= max_bucket_size)
-    n = F.size("ms")
-    pair_structs = F.flatten(F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.transform(
-            F.slice("ms", i + 1, n),
-            lambda x: F.struct(F.element_at("ms", i).alias("a"),
-                               x.alias("b")),
-        ),
-    ))
     return (
-        buckets.select(F.explode(pair_structs).alias("p"))
+        buckets.select(F.explode(_bucket_pairs("ms")).alias("p"))
         .select(F.col("p.a.i").alias("id_a"), F.col("p.b.i").alias("id_b"),
                 hamming32(F.col("p.a.fp"), F.col("p.b.fp")).alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)

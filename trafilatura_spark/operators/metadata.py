@@ -863,6 +863,16 @@ def _clean_and_trim(meta: dict) -> dict:
     return meta
 
 
+def _drop_blacklisted(author: str | None, blocked: set) -> str | None:
+    """``author`` ("; "-separated names) minus the names whose lowercase
+    form is in ``blocked``; None when no name is left."""
+    if author is None or not blocked:
+        return author
+    kept = [a.strip() for a in author.split(";")
+            if a.strip() and a.strip().lower() not in blocked]
+    return "; ".join(kept) if kept else None
+
+
 def extract_metadata(tree: Node, default_url: str | None = None,
                      author_blacklist: frozenset = frozenset()) -> dict:
     """Orchestrator (metadata.dart:638-743).  One shared pre-order walk
@@ -879,18 +889,11 @@ def extract_metadata(tree: Node, default_url: str | None = None,
         pass
     if meta["title"] is None:
         meta["title"] = extract_title(tree, walk)
-    if meta["author"] is not None and author_blacklist:
-        kept = [a.strip() for a in meta["author"].split(";")
-                if a.strip() and a.strip().lower() not in
-                {b.lower() for b in author_blacklist}]
-        meta["author"] = "; ".join(kept) if kept else None
+    blocked = {b.lower() for b in author_blacklist}
+    meta["author"] = _drop_blacklisted(meta["author"], blocked)
     if meta["author"] is None:
-        meta["author"] = extract_author(tree, buckets=walk.buckets)
-        if meta["author"] is not None and author_blacklist:
-            kept = [a.strip() for a in meta["author"].split(";")
-                    if a.strip() and a.strip().lower() not in
-                    {b.lower() for b in author_blacklist}]
-            meta["author"] = "; ".join(kept) if kept else None
+        meta["author"] = _drop_blacklisted(
+            extract_author(tree, buckets=walk.buckets), blocked)
     if meta["url"] is None:
         meta["url"] = extract_url(tree, default_url)
     if meta["url"] is not None:

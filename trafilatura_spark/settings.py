@@ -135,11 +135,6 @@ class Options:
     # hot-path cost and byte-identical results.
     doc_timeout_sec: float = 0.0
 
-    @classmethod
-    def reference_defaults(cls) -> "Options":
-        """Exact reference defaults (images off) for parity fixtures."""
-        return cls(images=False, with_metadata=False)
-
 
 # the reference's option-name ↔ config-file-key table
 # (configMapping, settings.dart:52-62); keys are the upstream
