@@ -30,6 +30,48 @@ pytestmark = pytest.mark.skipif(
     cparse is None, reason="C accelerator unavailable (no gcc?)")
 
 
+# every _MetaWalk classification seam in one page
+META_SEAM_PAGE = (
+    "<body><h1 class='entry-title'>T</h1><h2 class='post-title'>U</h2>"
+    "<span class='PUBLISHED on'>d</span><abbr class='entry-date'>e</abbr>"
+    "<p class='post-date'>p</p><strong class='published'>no (tag)</strong>"
+    "<div class='myfooter x'>f</div><div id='page-footer'>g</div>"
+    "<footer>h</footer><span id='footer'>not a div</span></body>")
+
+# one hit for each metadata selector: byline, category and tag links, a
+# CC license link in a <footer>, <time> and abbr.published dates
+META_SELECTOR_PAGE = (
+    "<html><head><title>A title | Site</title></head><body>"
+    "<h1 class='headline'>Head</h1><h2 itemprop='title'>Sub</h2>"
+    "<div class='byline'>By <a rel='author' href='/u/jo'>Jo Ann</a>"
+    "<span class='author-name'>Jo Ann</span></div>"
+    "<div class='comments'><span class='author'>commenter</span></div>"
+    "<section class='sidebar'><a href='/x'>side</a></section>"
+    "<figure><figcaption>cap</figcaption></figure>"
+    "<p>Posted <time datetime='2021-04-05'>April 5</time>"
+    " <abbr class='published' title='2021-04-05T10:00'>then</abbr></p>"
+    "<div class='entry-categories'><a href='/category/news/'>News</a>"
+    "<a>no href</a></div><li id='cat-links-1'><a href='/category/b/'>B</a></li>"
+    "<div class='row'><a href='/category/c/'>C</a></div>"
+    "<p class='tags-links'><a href='/tag/spark/'>spark</a></p>"
+    "<div class='entry-meta'><a href='/tags/html/'>html</a></div>"
+    "<author>Inline Author</author>"
+    "<footer><a href='https://creativecommons.org/licenses/by-sa/4.0/'>"
+    "CC BY-SA 4.0</a></footer></body></html>")
+
+
+def _template_pages() -> list[str]:
+    """One generated page per build_input_spans template."""
+    from trafilatura_spark.sources.corpus import (assemble_html,
+                                                  build_input_spans)
+    text = ("Spark extracts the main content of web pages. "
+            "Each page keeps its own words, with commas, and so on. ") * 4
+    return [assemble_html(build_input_spans(
+        7000 + i, text, "en", "site", with_comments=True, template=t))
+        for i, t in enumerate(("article", "bare", "fallback_readability",
+                               "fallback_justext"))]
+
+
 def tree_repr(node: Node) -> tuple:
     """Canonical deep value of a tree (iterative, order-preserving)."""
     return (node.tag, tuple(sorted(node.attrs.items())), node.text,
@@ -397,13 +439,7 @@ def test_metadata_index_parity(reference_pages):
         pytest.skip("accelerator unavailable")
     htmls = [decode_file(p.read_bytes())
              for p in reference_pages("cache")[:40]] + [
-        # every classification seam in one page
-        "<body><h1 class='entry-title'>T</h1><h2 class='post-title'>U</h2>"
-        "<span class='PUBLISHED on'>d</span><abbr class='entry-date'>e</abbr>"
-        "<p class='post-date'>p</p><strong class='published'>no (tag)</strong>"
-        "<div class='myfooter x'>f</div><div id='page-footer'>g</div>"
-        "<footer>h</footer><span id='footer'>not a div</span></body>",
-        "", "text only",
+        META_SEAM_PAGE, META_SELECTOR_PAGE, "", "text only",
     ]
     off = _toggling("_CMETAIDX")
     for html in htmls:
@@ -585,7 +621,8 @@ def test_table_hit_and_attr_pair_parity(reference_pages):
     """C predicate seam (selectors._hit/_hit_m/_class_id) vs the
     regex/pure-Python path: seeded fuzz over every production pattern
     table (with real patterns spliced in), plus full selector-function
-    parity over a cache-corpus sample."""
+    parity over a cache-corpus sample and pages built here."""
+    from trafilatura_spark.operators import metadata as md
     from trafilatura_spark.operators import selectors as sel
     from trafilatura_spark.core import load_html
     from trafilatura_spark.sources.loading import decode_file
@@ -618,26 +655,50 @@ def test_table_hit_and_attr_pair_parity(reference_pages):
         py = (elem.attrs.get("class", "").lower(),
               elem.attrs.get("id", "").lower())
         assert dom._CATTRPAIR(elem) == py, elem.tag
-    # full selector functions, C vs Python paths, over real pages
-    fns = [sel.select_body_elements, sel.select_comment_elements,
-           sel.select_elements_to_discard, sel.select_teasers_to_discard,
-           sel.select_precision_discard_elements,
-           sel.select_overall_discard_elements,
-           sel.select_basic_clean_elements, sel.select_author_elements,
-           sel.select_author_discard_elements, sel.select_category_links,
-           sel.select_tag_links, sel.select_title_elements]
-    for p in reference_pages("cache")[:30]:
-        tree = load_html(decode_file(p.read_bytes()))
+    # full selector functions, C vs Python paths, over real pages and
+    # the pages built here; the metadata selectors read one shared walk
+    # per page, as extract_metadata calls them
+    tree_fns = [sel.select_body_elements, sel.select_comment_elements,
+                sel.select_elements_to_discard, sel.select_teasers_to_discard,
+                sel.select_precision_discard_elements,
+                sel.select_overall_discard_elements,
+                sel.select_basic_clean_elements]
+    walk_fns = [
+        ("select_author_elements",
+         lambda w: sel.select_author_elements(w.buckets)),
+        ("select_author_discard_elements",
+         lambda w: sel.select_author_discard_elements(w.buckets)),
+        ("select_cats_tags_links",
+         lambda w: sel.select_cats_tags_links(w.buckets)),
+        ("select_title_elements",
+         lambda w: sel.select_title_elements(w.buckets, w.title_classed)),
+    ]
+    pages = [(p.name, decode_file(p.read_bytes()))
+             for p in reference_pages("cache")[:30]]
+    pages += [("META_SEAM_PAGE", META_SEAM_PAGE),
+              ("META_SELECTOR_PAGE", META_SELECTOR_PAGE)]
+    pages += [(f"template{i}", h) for i, h in enumerate(_template_pages())]
+    hits = {name: 0 for name, _ in walk_fns}
+    for name, html in pages:
+        tree = load_html(html)
         if tree is None:
             continue
-        for fn in fns:
+        walk = md._MetaWalk(tree)
+        calls = [(fn.__name__, lambda fn=fn: fn(tree)) for fn in tree_fns]
+        calls += [(fname, lambda fn=fn: fn(walk)) for fname, fn in walk_fns]
+        for fname, call in calls:
             sv = (dom._CTABLEHIT, dom._CATTRPAIR)
             dom._CTABLEHIT = dom._CATTRPAIR = None
             try:
-                py = fn(tree)
+                py = call()
             finally:
                 dom._CTABLEHIT, dom._CATTRPAIR = sv
-            assert py == fn(tree), (p.name, fn.__name__)
+            got = call()
+            assert py == got, (name, fname)
+            if fname in hits and any(got):
+                hits[fname] += 1
+    # the built pages alone give every metadata selector a hit
+    assert all(hits.values()), hits
 
 
 def test_table_verdict_caches_bounded():

@@ -191,6 +191,51 @@ def test_error_swallowed_to_status():
     assert res.spans == []
 
 
+def test_parse_crash_is_error_not_rejected(monkeypatch):
+    """A tokenizer exception is an extraction error, not bad input: it
+    reaches bare_extraction's guard (status 'error') instead of looking
+    like non-HTML input (status 'rejected')."""
+    from trafilatura_spark import core
+    from trafilatura_spark.sources.feeds import FeedParameters, determine_feed
+
+    page = _page(f"<article><p>{LONG_P1}</p><p>{LONG_P2}</p></article>")
+    plain = "just a plain sentence, no markup at all, " * 10
+    assert bare_extraction(plain, Options()).status == "rejected"
+    assert bare_extraction(page, Options()).status == "ok"
+
+    def crash(content):
+        raise RuntimeError("tokenizer crash")
+
+    monkeypatch.setattr(core, "parse_html", crash)
+    res = bare_extraction(page, Options())
+    assert (res.status, res.tier, res.spans) == ("error", "none", [])
+    with pytest.raises(RuntimeError):
+        load_html(page)
+    params = FeedParameters(base="http://example.org", domain="example.org",
+                            reference="http://example.org/feed")
+    assert determine_feed(page, params) == []
+
+
+@pytest.mark.parametrize("raw, want", [
+    ("a&nbsp;b", "a\u00a0b"),
+    ("x&#10;y&#13;z", "x\ny\rz"),
+    ("a\x00b\x07c\x1fd\x7fe", "abcde"),
+    ("t\tn\nr\r", "t\tn\nr\r"),
+    ("one\u2424two", "onetwo"),
+    ("a\n\nb\n", "a\n\nb\n"),
+    ("  lead and trail  ", "  lead and trail  "),
+    ("\u2424", None),
+    ("", None),
+    (None, None),
+])
+def test_sanitize(raw, want):
+    """Rendered-text cleanup: entities fixed (``&nbsp;`` is U+00A0, not a
+    space), control characters dropped but \\t\\n\\r kept, the newline
+    symbol removed, whitespace and blank lines left alone."""
+    from trafilatura_spark.functions.textutils import sanitize
+    assert sanitize(raw) == want
+
+
 def test_precision_mode_tighter():
     html = _page(
         f"<article><p>{LONG_P1}</p><p>{LONG_P2}</p>"

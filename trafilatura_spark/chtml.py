@@ -2,8 +2,10 @@
 
 Compiles :mod:`trafilatura_spark._chtml` from the in-package C source with
 the system ``gcc`` at first import (cached by source digest under
-``~/.cache/trafilatura_spark``), and hands back the accelerated
-``parse``/``copy_node`` entry points.  Everything is best-effort: any
+``~/.cache/trafilatura_spark``), and hands back its 14 entry points:
+``parse``, ``copy_node`` and twelve tree walks and predicates (text,
+search, cleaning, metadata, scoring and selector primitives), bound in
+``dom.py`` as the ``_C*`` names.  Everything is best-effort: any
 missing toolchain, failed compile, or failed import returns ``None``
 with a ``RuntimeWarning`` that names the reason, and ``dom.py`` keeps
 the pure-Python builder — the accelerator is a strict

@@ -47,6 +47,8 @@ def load_html(content: str) -> Node | None:
 
     Repairs the faulty-doctype / self-closing ``<html/>`` cases before
     parsing and rejects non-HTML (no 'html' marker and <2 body children).
+    A parser exception propagates: bare_extraction counts it as
+    ``status='error'``, apart from the ``'rejected'`` of non-HTML input.
     """
     if not isinstance(content, str):
         return None
@@ -65,17 +67,15 @@ def load_html(content: str) -> Node | None:
             import re as _re
             content = _re.sub(r"(<html[^>]*?)\s*/>", r"\1>", content, count=1, flags=_re.I)
             break
-    try:
-        tree = parse_html(content)
-    except Exception:
-        return None
+    tree = parse_html(content)
     if check_flag and len(get_body(tree).children) < 2:
         return None
     return tree
 
 
-def check_html_lang(tree: Node, target: str, strict: bool = False) -> bool:
-    """Meta/og-locale/html@lang language gate (utils.dart:417-449).
+def check_html_lang(tree: Node, target: str) -> bool:
+    """Meta/og-locale language gate (utils.dart:417-449; the reference's
+    strict html@lang pass is not ported, as extraction never asks for it).
 
     The target is normalized to its lowercase primary subtag ('en-US',
     'EN' → 'en') — the document side already extracts two-letter
@@ -93,16 +93,6 @@ def check_html_lang(tree: Node, target: str, strict: bool = False) -> bool:
         if elems:
             for elem in elems:
                 langs = lang_re.findall(elem.attrs["content"].lower())
-                if target in langs:
-                    return True
-            return False
-    if strict:
-        candidates = [tree] if tree.tag == "html" else []
-        candidates += [e for e in tree.iterdesc("html")]
-        with_lang = [e for e in candidates if e.attrs.get("lang")]
-        if with_lang:
-            for elem in with_lang:
-                langs = lang_re.findall(elem.attrs["lang"].lower())
                 if target in langs:
                     return True
             return False

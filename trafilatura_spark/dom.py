@@ -225,10 +225,6 @@ class Node:
         child.parent = self
         self.children.append(child)
 
-    def remove_child(self, child: "Node") -> None:
-        self.children.remove(child)
-        child.parent = None
-
     def drop_tree(self, keep_tail: bool = True) -> None:
         """Remove self + descendants; optionally merge the tail into the
         preceding text position (xml_utils.dart:65-110 deleteElement)."""
@@ -901,10 +897,12 @@ def css_select(root: "Node", selector: str) -> list["Node"]:
 # ---------------------------------------------------------------------------
 # Optional C accelerator wiring (SURVEY §8 round-5 lever (a)).  The seam is
 # strictly additive: when the extension compiles (gcc + CPython headers, as
-# on the bench hosts) parse_html and Node.copy dispatch to it; otherwise
-# everything above runs unchanged.  Exact-tree parity is pinned by
-# tests/test_chtml.py (reference-corpus + fuzz differentials) and by the
-# 1,033-page golden manifests, which exercise whichever path is active.
+# on the bench hosts) its 14 entry points are bound to the _C* names below
+# (parse_html, Node.copy and twelve walk primitives dispatch to them);
+# otherwise each stays None and everything above runs unchanged.  Exact-tree
+# parity is pinned by tests/test_chtml.py (reference-corpus + fuzz
+# differentials) and by the 1,033-page golden manifests, which exercise
+# whichever path is active.
 try:  # pragma: no cover - environment-dependent
     from . import chtml as _chtml
 

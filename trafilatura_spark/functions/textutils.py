@@ -1,16 +1,13 @@
 """Text normalization and gating predicates.
 
 Re-expresses utils.dart:241-491 in vectorization-friendly pure Python.
-Every function here runs inside the Arrow-batched UDF; the hot ones
-(`trim`) are regex-precompiled and memoization mirrors the reference's
-line-processing cache (utils.dart:269-307) via ``lru_cache`` — safe
-because the functions are pure.
+Every function here runs inside the Arrow-batched UDF, so the hot ones
+(`trim`, `sanitize`) are single passes of C-level str methods.
 """
 
 from __future__ import annotations
 
 import re
-from functools import lru_cache
 
 _WS_RE = re.compile(r"\s+")
 
@@ -21,9 +18,6 @@ RE_FILTER = re.compile(
     r"WeChat|WeiBo|Whatsapp|Xing|Mehr zum Thema:?|More on this.{0,8}$)$",
     re.IGNORECASE,
 )
-
-# utils.dart:30 — newline not preceded by punctuation/'>'
-_LINES_TRIMMING = re.compile(r"(?<![!-/:-@>])\n", re.MULTILINE)
 
 # utils.dart:36 — image file extension test
 IMAGE_EXTENSION = re.compile(r"[^\s]+\.(avif|bmp|gif|hei[cf]|jpe?g|png|webp)(\b|$)")
@@ -49,34 +43,19 @@ def remove_control_characters(string: str) -> str:
     return string.translate(_CONTROL_TABLE)
 
 
-@lru_cache(maxsize=2**14)
-def line_processing(line: str, preserve_space: bool = False, trailing_space: bool = False) -> str | None:
-    """Entity fix + control-char strip + blank-line pruning
-    (utils.dart:273-307)."""
-    new_line = remove_control_characters(
-        line.replace("&#13;", "\r").replace("&#10;", "\n").replace("&nbsp;", " ")
-    )
-    if preserve_space:
-        return new_line
-    new_line = trim(_LINES_TRIMMING.sub(" ", new_line))
-    if not new_line.strip():
+def sanitize(text: str | None) -> str | None:
+    """Entity fix + control-char strip of a rendered text blob, keeping
+    its whitespace and blank lines (utils.dart:310-326 with
+    preserveSpace).  The reference works line by line; every step here
+    maps characters without crossing a newline, so one pass over the
+    whole text gives the same result.  ``&nbsp;`` becomes U+00A0, not a
+    space."""
+    if not text:
         return None
-    if trailing_space:
-        space_before = " " if line and line[0].isspace() else ""
-        space_after = " " if line and line[-1].isspace() else ""
-        return f"{space_before}{new_line}{space_after}"
-    return new_line
-
-
-def sanitize(text: str, preserve_space: bool = False, trailing_space: bool = False) -> str | None:
-    """Line-level cleanup of a text blob (utils.dart:310-326)."""
-    if text is None:
-        return None
-    if trailing_space:
-        return line_processing(text, preserve_space, True)
-    lines = [line_processing(l, preserve_space) for l in text.split("\n")]
-    processed = "\n".join(l for l in lines if l is not None).replace("␤", "")
-    return processed or None
+    text = remove_control_characters(
+        text.replace("&#13;", "\r").replace("&#10;", "\n")
+        .replace("&nbsp;", "\xa0"))
+    return text.replace("\u2424", "") or None
 
 
 def text_chars_test(string: str | None) -> bool:

@@ -97,13 +97,12 @@ def baseline(tree: Node) -> tuple[Node, str, int]:
     return postbody, joined, len(joined)
 
 
-def html2txt(tree: Node, clean: bool = True) -> str:
-    """Whole-page text (baseline.dart:155-175)."""
+def html2txt(tree: Node) -> str:
+    """Whole-page text after the basic clean (baseline.dart:155-175)."""
     if tree is None:
         return ""
     body = get_body(tree)
-    if clean:
-        for elem in select_basic_clean_elements(body):
-            if elem.parent is not None:
-                elem.drop_tree()
+    for elem in select_basic_clean_elements(body):
+        if elem.parent is not None:
+            elem.drop_tree()
     return trim(body.text_content())

@@ -180,19 +180,13 @@ def prune_html(tree: Node, focus: str = "balanced") -> Node:
     return tree
 
 
-def prune_unwanted_nodes(tree: Node, node_selector, with_backup: bool = False) -> Node:
-    """Apply a selector and delete matches, with the 6/7-text-loss rollback
-    guard (htmlprocessing.dart:140-165)."""
-    if with_backup:
-        old_len = len(tree.text_content())
-        backup = tree.copy()
+def prune_unwanted_nodes(tree: Node, node_selector) -> Node:
+    """Apply a selector and delete its matches (htmlprocessing.dart:140-165).
+    The reference's optional text-loss rollback (``withBackup``) is not
+    ported: the one caller runs without it."""
     for subtree in node_selector(tree):
         if subtree.parent is not None:
             subtree.drop_tree()
-    if with_backup:
-        new_len = len(tree.text_content())
-        if new_len <= old_len // 7:
-            return backup
     return tree
 
 

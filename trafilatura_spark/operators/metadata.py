@@ -15,13 +15,10 @@ from urllib.parse import urlparse
 from .. import dom as _dom
 from ..dom import Node
 from ..functions.textutils import trim
-from .cleaning import prune_unwanted_nodes
 from .selectors import (
     select_author_discard_elements,
     select_author_elements,
-    select_category_links,
     select_cats_tags_links,
-    select_tag_links,
     select_title_elements,
 )
 
@@ -479,10 +476,9 @@ def _extract_json_parse_error(text: str, meta: dict) -> dict:
     return meta
 
 
-def extract_meta_json(tree: Node, meta: dict,
-                      scripts: list | None = None) -> dict:
-    """metadata.dart:187-211."""
-    for elem in (scripts if scripts is not None else tree.iterdesc("script")):
+def extract_meta_json(scripts: list[Node], meta: dict) -> dict:
+    """metadata.dart:187-211 over the document's <script> elements."""
+    for elem in scripts:
         if elem.attrs.get("type") not in ("application/ld+json",
                                           "application/settings+json"):
             continue
@@ -509,19 +505,14 @@ def _examine_title_element(tree: Node) -> tuple[str, str | None, str | None]:
     return title, None, None
 
 
-def extract_title(tree: Node, walk: "_MetaWalk | None" = None) -> str | None:
+def extract_title(tree: Node, walk: _MetaWalk) -> str | None:
     """metadata.dart:378-415."""
-    if walk is not None:
-        h1s = walk.buckets["h1"]
-        titled = select_title_elements(tree, walk.buckets, walk.title_classed)
-    else:
-        h1s = tree.find_all("h1")
-        titled = None
+    h1s = walk.buckets["h1"]
     if len(h1s) == 1:
         t = trim(h1s[0].text_content())
         if t:
             return t
-    for elem in (titled if titled is not None else select_title_elements(tree)):
+    for elem in select_title_elements(walk.buckets, walk.title_classed):
         content = trim(elem.text_content())
         if content and 2 < len(content) < 200:
             return content
@@ -531,7 +522,7 @@ def extract_title(tree: Node, walk: "_MetaWalk | None" = None) -> str | None:
             return t
     if h1s:
         return h1s[0].text_content()
-    h2s = walk.buckets["h2"] if walk is not None else tree.find_all("h2")
+    h2s = walk.buckets["h2"]
     if h2s:
         return h2s[0].text_content()
     return title_text or None
@@ -560,12 +551,12 @@ def _text_content_excluding(node: Node, excluded: set) -> str:
     return "".join(parts)
 
 
-def extract_author(tree: Node, buckets: dict | None = None) -> str | None:
+def extract_author(buckets: dict) -> str | None:
     """metadata.dart:418-431.  Equivalent to copy→prune→select, without
     the full-tree copy (a per-document hot spot): discarded subtrees are
     excluded from both candidate selection and candidate text."""
-    excluded = {id(e) for e in select_author_discard_elements(tree, buckets)}
-    for elem in select_author_elements(tree, buckets):
+    excluded = {id(e) for e in select_author_discard_elements(buckets)}
+    for elem in select_author_elements(buckets):
         if excluded:
             n, skip = elem, False
             while n is not None:
@@ -626,8 +617,8 @@ def extract_sitename(tree: Node) -> str | None:
 
 class _MetaWalk:
     """All full-tree scans extract_metadata needs, collected in ONE
-    pre-order walk.  Each bucket/list preserves document order, so every
-    consumer sees exactly what its private walk produced:
+    pre-order walk.  Each bucket/list holds its elements in document
+    order, which is the order the reference's selectors visit them in:
 
     - ``buckets``: tag → elements, for the union of tags the selector
       family reads (xpaths.dart author/category/tag/title selectors,
@@ -700,16 +691,11 @@ class _MetaWalk:
                 extend(reversed(node.children))
 
 
-def extract_catstags(metatype: str, tree: Node,
-                     links: list | None = None) -> list[str]:
-    """metadata.dart:483-527.  ``links`` lets the caller share one walk
-    for categories + tags (select_cats_tags_links)."""
+def extract_catstags(metatype: str, tree: Node, links: list[Node]) -> list[str]:
+    """metadata.dart:483-527 over the ``metatype``'s candidate links
+    (select_cats_tags_links)."""
     results: list[str] = []
     regexpr = re.compile(rf"/{metatype}[s|(ies)]?/")
-    if links is None:
-        selector = (select_category_links if metatype == "category"
-                    else select_tag_links)
-        links = selector(tree)
     for elem in links:
         href = elem.attrs.get("href", "")
         if regexpr.search(href):
@@ -742,38 +728,19 @@ def _parse_license_element(element: Node, strict: bool = False) -> str | None:
     return None
 
 
-def extract_license(tree: Node, walk: _MetaWalk | None = None) -> str | None:
+def extract_license(walk: _MetaWalk) -> str | None:
     """metadata.dart:551-571.
 
-    One tree walk instead of two: the rel=license anchor scan
-    early-returns exactly like the reference's first loop, and the
-    footer containers for the strict second pass are collected during
-    the same traversal (identical document order).  With ``walk`` the
-    anchors/containers come from the shared walk — same order, and the
-    container pass still only runs when no anchor produced a license."""
-    if walk is not None:
-        for element in walk.buckets["a"]:
-            if element.attrs.get("rel") == "license" and "href" in element.attrs:
-                result = _parse_license_element(element, strict=False)
-                if result:
-                    return result
-        containers = walk.license_containers
-    else:
-        containers = []
-        for element in tree.iterdesc("a", "footer", "div"):
-            tag = element.tag
-            if tag == "a":
-                if element.attrs.get("rel") == "license" and "href" in element.attrs:
-                    result = _parse_license_element(element, strict=False)
-                    if result:
-                        return result
-            elif tag == "footer":
-                containers.append(element)
-            else:
-                cls, eid = element.attrs.get("class", ""), element.attrs.get("id", "")
-                if "footer" in cls or "footer" in eid:
-                    containers.append(element)
-    for container in containers:
+    The rel=license anchor scan early-returns like the reference's
+    first loop; the footer containers of the strict second pass come
+    from the shared walk in document order, and that pass only runs
+    when no anchor produced a license."""
+    for element in walk.buckets["a"]:
+        if element.attrs.get("rel") == "license" and "href" in element.attrs:
+            result = _parse_license_element(element, strict=False)
+            if result:
+                return result
+    for container in walk.license_containers:
         for element in container.iterdesc("a"):
             if "href" in element.attrs:
                 result = _parse_license_element(element, strict=True)
@@ -795,38 +762,19 @@ def _parse_date(date_str: str) -> str | None:
     return None
 
 
-def find_date(tree: Node, walk: _MetaWalk | None = None) -> str | None:
+def find_date(tree: Node, walk: _MetaWalk) -> str | None:
     """metadata.dart:765-811 (simplified htmldate).
 
-    One traversal collects the three candidate categories (meta tags,
-    <time> elements, date-classed elements); they are then evaluated in
-    the reference's category order, so results are identical to the
-    former three-walk form while touching the tree once."""
-    if walk is not None:
-        metas = walk.buckets["meta"]
-        times = walk.buckets["time"]
-        classed = walk.date_classed
-    else:
-        metas = []
-        times = []
-        classed = []
-        for elem in tree.iterdesc("meta", "time", "abbr", "span", "div", "p"):
-            tag = elem.tag
-            if tag == "meta":
-                metas.append(elem)
-            elif tag == "time":
-                times.append(elem)
-            else:
-                cls = elem.attrs.get("class", "").lower()
-                if "published" in cls or "post-date" in cls or "entry-date" in cls:
-                    classed.append(elem)
-    for elem in metas:
+    The shared walk holds the three candidate categories (meta tags,
+    <time> elements, date-classed elements); they are evaluated in the
+    reference's category order, then the whole-page text is searched."""
+    for elem in walk.buckets["meta"]:
         for attr, want in _DATE_SELECT_META:
             if elem.attrs.get(attr, "").lower() == want and elem.attrs.get("content"):
                 parsed = _parse_date(elem.attrs["content"])
                 if parsed:
                     return parsed
-    for elem in times:
+    for elem in walk.buckets["time"]:
         date_str = elem.attrs.get("datetime") or elem.attrs.get("pubdate") \
             or elem.text_content()
         if date_str:
@@ -835,7 +783,7 @@ def find_date(tree: Node, walk: _MetaWalk | None = None) -> str | None:
                 return parsed
     # date-classed elements carrying the value in title/datetime attrs
     # (e.g. blogspot's <abbr class='published' title='…'>)
-    for elem in classed:
+    for elem in walk.date_classed:
         for cand in (elem.attrs.get("title"), elem.attrs.get("datetime"),
                      elem.text_content()):
             if cand:
@@ -876,15 +824,14 @@ def _drop_blacklisted(author: str | None, blocked: set) -> str | None:
 def extract_metadata(tree: Node, default_url: str | None = None,
                      author_blacklist: frozenset = frozenset()) -> dict:
     """Orchestrator (metadata.dart:638-743).  One shared pre-order walk
-    (_MetaWalk) replaces the per-selector full-tree scans — each selector
-    receives its buckets in the same document order its private walk
-    produced, so results are byte-identical."""
+    (_MetaWalk) feeds every selector and extractor below, so the tree is
+    scanned once instead of once per selector."""
     walk = _MetaWalk(tree)
     meta = examine_meta(tree)
     if meta["author"] is not None and " " not in meta["author"]:
         meta["author"] = None
     try:
-        meta = extract_meta_json(tree, meta, scripts=walk.buckets["script"])
+        meta = extract_meta_json(walk.buckets["script"], meta)
     except Exception:
         pass
     if meta["title"] is None:
@@ -893,7 +840,7 @@ def extract_metadata(tree: Node, default_url: str | None = None,
     meta["author"] = _drop_blacklisted(meta["author"], blocked)
     if meta["author"] is None:
         meta["author"] = _drop_blacklisted(
-            extract_author(tree, buckets=walk.buckets), blocked)
+            extract_author(walk.buckets), blocked)
     if meta["url"] is None:
         meta["url"] = extract_url(tree, default_url)
     if meta["url"] is not None:
@@ -911,11 +858,10 @@ def extract_metadata(tree: Node, default_url: str | None = None,
         if m:
             meta["sitename"] = m.group(1)
     if not meta["categories"] or not meta["tags"]:
-        cat_links, tag_links = select_cats_tags_links(tree, walk.buckets)
+        cat_links, tag_links = select_cats_tags_links(walk.buckets)
         if not meta["categories"]:
-            meta["categories"] = extract_catstags("category", tree,
-                                                  links=cat_links)
+            meta["categories"] = extract_catstags("category", tree, cat_links)
         if not meta["tags"]:
-            meta["tags"] = extract_catstags("tag", tree, links=tag_links)
-    meta["license"] = extract_license(tree, walk)
+            meta["tags"] = extract_catstags("tag", tree, tag_links)
+    meta["license"] = extract_license(walk)
     return _clean_and_trim(meta)

@@ -71,32 +71,6 @@ def _text_length(elem: Node) -> int:
 # preserves them; link text per the iterdesc("a") contract is the sum of
 # each anchor's own trimmed length, anchors-inside-anchors counted twice).
 
-def _ws_summary(s: str) -> tuple[int, bool, bool]:
-    """(len(trim(s)), has leading ws, has trailing ws) for a text piece.
-    str.split() and str.isspace() agree on the whitespace class, so the
-    summary is exact for trim = ' '.join(s.split())."""
-    if not s:
-        return (0, False, False)
-    parts = s.split()
-    if not parts:
-        return (0, True, True)
-    core = sum(len(p) for p in parts) + len(parts) - 1
-    return (core, s[0].isspace(), s[-1].isspace())
-
-
-def _ws_concat(a: tuple, b: tuple) -> tuple:
-    """Associative combine: trim summary of the concatenation a + b."""
-    ac, al, at = a
-    bc, bl, bt = b
-    if ac == 0:
-        if bc == 0:
-            return (0, al or bl, at or bt)
-        return (bc, al or bl, bt)
-    if bc == 0:
-        return (ac, al, at or bl or bt)
-    return (ac + bc + (1 if (at or bl) else 0), al, bt)
-
-
 def _collect_metrics(root: Node) -> dict[int, tuple]:
     """id(node) -> (trim_len, lead_ws, trail_ws, comma_count,
     link_core_incl_self) for every node under and including ``root``,
@@ -117,8 +91,9 @@ def _collect_metrics(root: Node) -> dict[int, tuple]:
     out: dict[int, tuple] = {}
     for node in reversed(order):
         # fold self.text, then per child: child summary + child tail —
-        # the _ws_concat monoid, inlined (this loop runs once per DOM
-        # node; helper-call overhead measurably dominates otherwise)
+        # the (collapsed_len, leading_ws, trailing_ws) concatenation,
+        # inlined (this loop runs once per DOM node; helper-call
+        # overhead measurably dominates otherwise)
         t = node.text
         if t:
             parts = t.split()
@@ -184,11 +159,6 @@ def _link_density(elem: Node) -> float:
 _BLOCK_MARKUP = frozenset(
     ("a", "blockquote", "dl", "div", "img", "ol", "p", "pre", "table", "ul"))
 _BLOCK_MARKUP_TUPLE = tuple(sorted(_BLOCK_MARKUP))
-
-
-def _has_block_child_markup(elem: Node) -> bool:
-    """Stand-in for the innerHTML regex probe (readability_lxml.dart:286-297)."""
-    return any(c.tag in _BLOCK_MARKUP for c in elem.iterdesc())
 
 
 class ReadabilityDocument:

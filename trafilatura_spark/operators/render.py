@@ -126,8 +126,9 @@ def render_txt(body: Node, include_formatting: bool = False) -> str:
                     parts.append("\n")
                 else:
                     parts.append("\n")
-                # (reference adds a second trailing \n here too; sanitize's
-                # blank-line drop makes the outputs identical either way)
+                # one \n here, where the reference appends two; sanitize
+                # keeps blank lines, so the text holds one \n fewer than
+                # the reference's after each such element
             elif tag in ("cell", "item"):
                 pass
             else:
@@ -152,4 +153,4 @@ def render_txt(body: Node, include_formatting: bool = False) -> str:
     for child in body.children:
         process(child)
     result = "".join(parts)
-    return sanitize(result, preserve_space=True) or ""
+    return sanitize(result) or ""

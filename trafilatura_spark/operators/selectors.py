@@ -342,14 +342,12 @@ _TAG_CLASS_RE = _Table(TAG_CLASS_PATTERNS)
 _TITLE_CLASS_RE = _Table(TITLE_CLASS_PATTERNS)
 
 
-def select_author_elements(tree: Node, buckets: dict | None = None) -> list[Node]:
-    """xpaths.dart:524-560.  ``buckets`` lets extract_metadata share one
-    pre-order walk across all its selectors (same per-tag document
-    order as a private _by_tag walk, so results are identical)."""
+# The metadata selectors below read the per-tag, document-order element
+# lists of extract_metadata's one shared walk (metadata._MetaWalk).
+
+def select_author_elements(buckets: dict) -> list[Node]:
+    """xpaths.dart:524-560."""
     results = []
-    if buckets is None:
-        buckets = _by_tag(tree, ("a", "address", "div", "link", "p", "span",
-                                 "strong", "author"))
     for tag in ("a", "address", "div", "link", "p", "span", "strong"):
         for elem in buckets[tag]:
             cls, eid = _class_id(elem)
@@ -366,13 +364,9 @@ def select_author_elements(tree: Node, buckets: dict | None = None) -> list[Node
     return results
 
 
-def select_author_discard_elements(tree: Node,
-                                   buckets: dict | None = None) -> list[Node]:
+def select_author_discard_elements(buckets: dict) -> list[Node]:
     """xpaths.dart:585-612."""
     results = []
-    if buckets is None:
-        buckets = _by_tag(tree, ("a", "div", "section", "span", "time",
-                                 "figure"))
     for tag in ("a", "div", "section", "span"):
         for elem in buckets[tag]:
             cls, eid = _class_id(elem)
@@ -385,40 +379,9 @@ def select_author_discard_elements(tree: Node,
     return results
 
 
-def select_category_links(tree: Node) -> list[Node]:
-    """xpaths.dart:635-665 — returns inner a[href] nodes."""
-    results = []
-    buckets = _by_tag(tree, ("div", "p", "footer", "li", "span", "header"))
-    for tag in ("div", "p", "footer", "li", "span", "header"):
-        for elem in buckets[tag]:
-            cls, eid = _class_id(elem)
-            if _hit(_CATEGORY_CLASS_RE, cls) or _hit_m(_CATEGORY_PREFIX_RE, eid):
-                results.extend(a for a in elem.iterdesc("a") if "href" in a.attrs)
-    for elem in buckets["div"]:
-        if elem.class_name in ("row", "tags"):
-            results.extend(a for a in elem.iterdesc("a") if "href" in a.attrs)
-    return results
-
-
-def select_tag_links(tree: Node) -> list[Node]:
-    """xpaths.dart:682-701."""
-    results = []
-    buckets = _by_tag(tree, ("div", "p"))
-    for tag in ("div", "p"):
-        for elem in buckets[tag]:
-            cls = elem.attrs.get("class", "").lower()
-            if _hit(_TAG_CLASS_RE, cls):
-                results.extend(a for a in elem.iterdesc("a") if "href" in a.attrs)
-    return results
-
-
-def select_cats_tags_links(tree: Node, buckets: dict | None = None
-                           ) -> tuple[list[Node], list[Node]]:
-    """Category and tag link selection sharing ONE tree walk — results are
-    identical to calling the two selectors separately."""
-    if buckets is None:
-        buckets = _by_tag(tree, ("div", "p", "footer", "li", "span",
-                                 "header"))
+def select_cats_tags_links(buckets: dict) -> tuple[list[Node], list[Node]]:
+    """Category links (xpaths.dart:635-665) and tag links
+    (xpaths.dart:682-701): the inner a[href] nodes of each container."""
     cats: list[Node] = []
     for tag in ("div", "p", "footer", "li", "span", "header"):
         for elem in buckets[tag]:
@@ -438,25 +401,12 @@ def select_cats_tags_links(tree: Node, buckets: dict | None = None
     return cats, tags_links
 
 
-def select_title_elements(tree: Node, buckets: dict | None = None,
-                          classed: list | None = None) -> list[Node]:
-    """xpaths.dart:714-740.  ``buckets``/``classed`` come from
-    extract_metadata's shared walk (classed = document-order elements
-    whose class is exactly entry-title/post-title)."""
+def select_title_elements(buckets: dict, classed: list[Node]) -> list[Node]:
+    """xpaths.dart:714-740.  ``classed`` holds the document-order
+    elements whose class is exactly entry-title/post-title."""
     results = []
-    if buckets is not None and classed is not None:
-        h_buckets = buckets
-    else:
-        h_buckets = {"h1": [], "h2": [], "h3": []}
-        classed = []
-        for elem in tree.iterdesc():
-            b = h_buckets.get(elem.tag)
-            if b is not None:
-                b.append(elem)
-            if elem.attrs.get("class", "") in ("entry-title", "post-title"):
-                classed.append(elem)
     for tag in ("h1", "h2", "h3"):
-        for elem in h_buckets[tag]:
+        for elem in buckets[tag]:
             cls, eid = _class_id(elem)
             itemprop = elem.attrs.get("itemprop", "")
             if _hit(_TITLE_CLASS_RE, cls) or _hit(_TITLE_CLASS_RE, eid) \

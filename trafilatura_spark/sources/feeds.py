@@ -189,7 +189,10 @@ def determine_feed(htmlstring: str, params: FeedParameters) -> list[str]:
     fallback, then refine (relative fix, tracking clean, validity,
     comment-feed blacklist)."""
     from ..core import load_html
-    tree = load_html(htmlstring)
+    try:
+        tree = load_html(htmlstring)
+    except Exception:
+        return []
     if tree is None:
         return []
     feed_urls: list[str] = []

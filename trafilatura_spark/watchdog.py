@@ -46,8 +46,8 @@ class DocTimeout(BaseException):
 
     Derives from ``BaseException``, NOT ``Exception``: the extraction
     cascade mirrors the reference's swallow-to-null error handling with
-    broad ``except Exception`` guards at every tier seam (parse_html's
-    builder fallback, try_readability, justext_rescue, load_html).  A
+    broad ``except Exception`` guards at its tier seams (try_readability,
+    justext_rescue, the JSON-LD pass of extract_metadata).  A
     SIGALRM that fires mid-tier unwinds THROUGH those guards — if
     DocTimeout were an ``Exception`` they would convert the one-shot
     alarm into a tier-level null and extraction would continue with no
