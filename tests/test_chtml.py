@@ -634,8 +634,7 @@ def test_table_hit_and_attr_pair_parity(reference_pages):
               sel._CONTENT_CLASS_RE, sel._COMMENTS_CLASS_RE,
               sel._OVERALL_DISCARD_RE, sel._HIDDEN_RE, sel._AUTHOR_RE,
               sel._AUTHOR_DISCARD_RE, sel._CATEGORY_CLASS_RE,
-              sel._CATEGORY_PREFIX_RE, sel._TAG_CLASS_RE,
-              sel._TITLE_CLASS_RE]
+              sel._TAG_CLASS_RE, sel._TITLE_CLASS_RE]
     for _ in range(5000):
         s = "".join(rng.choice(alpha) for _ in range(rng.randint(0, 30)))
         t = rng.choice(tables)

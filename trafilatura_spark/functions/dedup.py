@@ -715,46 +715,6 @@ def dedup_corpus_incremental(batch: DataFrame, store_docs: DataFrame,
     return accepted, labels, new_sigs
 
 
-def token_hashes(text_col: str) -> Column:
-    """Per-token 32-bit hashes (first 8 md5 hex digits) as an array column.
-    Materialize this ONCE before :func:`simhash32_from_hashes` — nested
-    lambda expressions are not common-subexpression-eliminated, so feeding
-    the raw text into the bit loop would recompute every md5 32 times."""
-    tokens = F.split(F.col(text_col), " ")
-    return F.transform(tokens, lambda t: F.conv(F.substring(F.md5(t), 1, 8),
-                                                16, 10).cast("long"))
-
-
-def simhash32_from_hashes(hashes: Column) -> Column:
-    """32-bit Simhash over a materialized hash array (relational
-    re-expression of deduplication.dart:110-216): for each bit position
-    sum ±1 over token hashes; bit = 1 iff sum > 0.  Pure per-row
-    expression — fingerprinting 10^12 docs is a shuffle-free map."""
-    def bit(h, pos):
-        # (h >> pos) & 1 via exact double arithmetic: shiftright/shiftleft
-        # only take literal shift amounts, pos here is a lambda variable
-        return F.floor(h / F.pow(F.lit(2.0), pos.cast("double"))
-                       ).cast("long") % 2
-
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(31)),
-        F.lit(0).cast("long"),
-        lambda acc, pos: acc + F.when(
-            F.aggregate(
-                hashes, F.lit(0).cast("long"),
-                lambda s, h: s + F.when(bit(h, pos) == 1, 1).otherwise(-1),
-            ) > 0,
-            F.pow(F.lit(2.0), pos.cast("double")).cast("long"),
-        ).otherwise(0),
-    )
-
-
-def simhash32(text_col: str) -> Column:
-    """Convenience single-expression form (see the two-step variant for
-    the fast path used by fingerprints())."""
-    return simhash32_from_hashes(token_hashes(text_col))
-
-
 def simhash32_table(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text") -> DataFrame:
     """(id, fp_simhash) via the RELATIONAL formulation: explode tokens,

@@ -26,19 +26,6 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def with_unit_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Pre-normalize once so cosine becomes a dot product.  The norm is
-    materialized as its own column first — embedding the aggregate inside
-    the per-element lambda would re-evaluate it once PER ELEMENT (O(d²)
-    per row; nested lambdas are not common-subexpression-eliminated)."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    return (df.withColumn("_v", v)
-            .withColumn("_n", _norm(F.col("_v")))
-            .withColumn("_unit",
-                        F.transform(F.col("_v"), lambda x: x / F.col("_n")))
-            .drop("_v", "_n"))
-
-
 def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 exclude_self: bool = True) -> DataFrame:

@@ -19,9 +19,6 @@ RE_FILTER = re.compile(
     re.IGNORECASE,
 )
 
-# utils.dart:36 — image file extension test
-IMAGE_EXTENSION = re.compile(r"[^\s]+\.(avif|bmp|gif|hei[cf]|jpe?g|png|webp)(\b|$)")
-
 _CONTROL_TABLE = {c: None for c in range(32) if chr(c) not in "\t\n\r"}
 _CONTROL_TABLE[127] = None
 
@@ -69,16 +66,3 @@ def textfilter(text_content: str) -> bool:
     if not text_content or not text_content.strip():
         return True
     return any(RE_FILTER.match(line) for line in text_content.split("\n"))
-
-
-def is_image_file(imagesrc: str | None) -> bool:
-    """Valid image extension test (utils.dart:381-386)."""
-    if imagesrc is None or len(imagesrc) > 8192:
-        return False
-    return IMAGE_EXTENSION.search(imagesrc) is not None
-
-
-def is_acceptable_length(length: int, options) -> bool:
-    """Document size gate (utils.dart:406-414).  Also expressed
-    relationally as F.length(html).between(min, max) before the UDF."""
-    return options.min_file_size <= length <= options.max_file_size

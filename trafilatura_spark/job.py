@@ -795,34 +795,29 @@ def main(argv: list[str] | None = None, *, transport=None) -> int:
         # cliDiscovery: live sitemap/feed discovery, then fetch+extract —
         # or, with --list, just the discovered URL list (the reference's
         # --list mode: print without downloading, cli_utils.dart:412-414)
-        from .sources.crawl import (explore_and_extract, feed_and_extract,
-                                    live_feed_pages, live_sitemap_pages)
+        from .sources.crawl import (fetch_and_extract_urls, live_feed_pages,
+                                    live_sitemap_pages)
         from .sources.downloads import default_transport
         tp = transport or default_transport
+        lister = live_sitemap_pages if args.mode == "explore" \
+            else live_feed_pages
+        # the URL gates apply to the discovered page list before any page
+        # fetch (the CLI doc's promise for --url-filter + --sitemap)
+        urls = gate_links(
+            lister(spark, args.seeds.split(","), transport=tp,
+                   target_lang=args.target_lang, config=fetch_config)
+            .select("link").distinct()
+            .withColumnRenamed("link", "url"), "url")
         if args.list:
-            lister = live_sitemap_pages if args.mode == "explore" \
-                else live_feed_pages
-            urls = gate_links(
-                lister(spark, args.seeds.split(","), transport=tp,
-                       target_lang=args.target_lang, config=fetch_config)
-                .select("link").distinct()
-                .withColumnRenamed("link", "url"), "url")
             urls.write.mode("overwrite").parquet(args.output)
             n = spark.read.parquet(args.output).count()
             print({"mode": args.mode, "list": True, "urls": n})
             return 0
-        driver = explore_and_extract if args.mode == "explore" \
-            else feed_and_extract
-        ex = driver(spark, args.seeds.split(","),
-                    transport=tp,
-                    options=options,
-                    config=fetch_config,
-                    target_lang=args.target_lang,
-                    serialize=args.serialize,
-                    url_filter=args.url_filter,
-                    url_blacklist=blacklist,
-                    backup_path=args.backup_dir,
-                    backup_format=args.backup_format)
+        ex = fetch_and_extract_urls(urls, transport=tp, options=options,
+                                    config=fetch_config,
+                                    serialize=args.serialize,
+                                    backup_path=args.backup_dir,
+                                    backup_format=args.backup_format)
         ex.write.mode("overwrite").parquet(args.output)
         n = spark.read.parquet(args.output).count()
         print({"mode": args.mode, "docs": n})

@@ -64,12 +64,6 @@ def sample_tokens(inputstring: str, length: int = 64) -> list[str]:
     return sample
 
 
-def generate_bow_hash(inputstring: str, length: int = 24) -> bytes:
-    """deduplication.dart:101-107."""
-    teststring = " ".join(sample_tokens(inputstring)).strip()
-    return hashlib.sha256(teststring.encode("utf-8")).digest()[:length]
-
-
 @functools.lru_cache(maxsize=65536)
 def _hash_token(token: str) -> int:
     """First 8 bytes of SHA-256 as big-endian int (deduplication.dart:124-133).
@@ -108,14 +102,6 @@ def simhash(inputstring: str, length: int = 64) -> int:
         if 2 * sums[i] >= total:
             result |= 1 << i
     return result
-
-
-def hamming_distance(a: int, b: int) -> int:
-    return bin(a ^ b).count("1")
-
-
-def simhash_similarity(a: int, b: int, length: int = 64) -> float:
-    return (length - hamming_distance(a, b)) / length
 
 
 def content_fingerprint(content: str) -> str:

@@ -1,86 +1,14 @@
 """Link-density boilerplate pruning.
 
-The signature aggregation of the algorithm
-(/root/reference/lib/src/htmlprocessing.dart:168-284 and the simplified
-variant main_extractor.dart:479-533).  Pure functions of
-(tag, text-length, link aggregate, has-next-sibling) — vectorizable per
-node inside the UDF.
+The simplified variant of the algorithm (main_extractor.dart:479-533)
+that the main extractor's pruneUnwantedSections runs.  The reference's
+signature-aggregation variant (htmlprocessing.dart:168-284) is not
+carried: no extraction path of the reference port calls it.
 """
 
 from __future__ import annotations
 
 from ..dom import Node
-from ..functions.textutils import trim
-
-
-def collect_link_info(links: list[Node]) -> tuple[int, int, int, list[str]]:
-    """Σ link text length, count, short-link count (htmlprocessing.dart:168-183)."""
-    texts = [t for t in (trim(l.text_content()) for l in links) if t]
-    lengths = [len(t) for t in texts]
-    shortelems = sum(1 for l in lengths if l < 10)
-    return sum(lengths), len(texts), shortelems, texts
-
-
-def link_density_test(element: Node, text: str, favor_precision: bool = False) -> tuple[bool, list[str]]:
-    """Boilerplate decision for one element (htmlprocessing.dart:186-230)."""
-    links = element.find_all("ref", "a")
-    if not links:
-        return False, []
-    mylist: list[str] = []
-
-    if len(links) == 1:
-        len_threshold = 10 if favor_precision else 100
-        link_text = trim(links[0].text_content())
-        if len(link_text) > len_threshold and len(link_text) > len(text) * 0.9:
-            return True, []
-
-    if element.tag == "p":
-        limitlen = 60 if element.next_sibling() is None else 30
-    else:
-        limitlen = 300 if element.next_sibling() is None else 100
-
-    elemlen = len(text)
-    if elemlen < limitlen:
-        linklen, elemnum, shortelems, mylist = collect_link_info(links)
-        if elemnum == 0:
-            return True, mylist
-        if linklen > elemlen * 0.8 or (elemnum > 1 and shortelems / elemnum > 0.8):
-            return True, mylist
-    return False, mylist
-
-
-def link_density_test_tables(element: Node) -> bool:
-    """Table-specific density rule (htmlprocessing.dart:233-252)."""
-    links = element.find_all("ref", "a")
-    if not links:
-        return False
-    elemlen = len(trim(element.text_content()))
-    if elemlen < 200:
-        return False
-    linklen, elemnum, _, _ = collect_link_info(links)
-    if elemnum == 0:
-        return True
-    return linklen > 0.8 * elemlen if elemlen < 1000 else linklen > 0.5 * elemlen
-
-
-def delete_by_link_density(subtree: Node, tagname: str, backtracking: bool = False,
-                           favor_precision: bool = False) -> Node:
-    """Scan a tag and delete nodes failing the density test
-    (htmlprocessing.dart:255-284)."""
-    deletions = []
-    len_threshold = 200 if favor_precision else 100
-    depth_threshold = 1 if favor_precision else 3
-    for elem in subtree.iterdesc(tagname):
-        elemtext = trim(elem.text_content())
-        result, templist = link_density_test(elem, elemtext, favor_precision)
-        if result or (backtracking and templist and elemtext
-                      and len(elemtext) < len_threshold
-                      and len(elem.children) >= depth_threshold):
-            deletions.append(elem)
-    for elem in deletions:
-        if elem.parent is not None:
-            elem.drop_tree()
-    return subtree
 
 
 def calculate_link_density(elem: Node) -> float:

@@ -14,7 +14,6 @@ per-document inside the UDF.
 from __future__ import annotations
 
 import re
-from math import sqrt
 
 from .. import dom as _dom
 from ..dom import Node
@@ -500,42 +499,3 @@ def try_readability(htmlinput: Node, refetch) -> Node:
         return doc.summary() or Node("div")
     except Exception:
         return Node("div")
-
-
-def is_probably_readerable(html: Node, min_content_length: int = 140,
-                           min_score: int = 20) -> bool:
-    """Cheap pre-filter (readability_lxml.dart:442-487)."""
-    nodes = html.find_all("p", "pre", "article")
-    for br in html.iterdesc("br"):
-        if br.parent is not None and br.parent.tag == "div":
-            nodes.append(br.parent)
-    seen: set[int] = set()
-    score = 0.0
-    unlikely = re.compile(
-        r"-ad-|ai2html|banner|breadcrumbs|combx|comment|community|cover-wrap|disqus|"
-        r"extra|footer|gdpr|header|legends|menu|related|remark|replies|rss|shoutbox|"
-        r"sidebar|skyscraper|social|sponsor|supplemental|ad-break|agegate|pagination|"
-        r"pager|popup|yom-remote", re.I)
-    maybe = re.compile(r"and|article|body|column|content|main|shadow", re.I)
-    for node in nodes:
-        if id(node) in seen:
-            continue
-        seen.add(id(node))
-        style = node.attrs.get("style", "")
-        if re.search(r"display:\s*none", style, re.I) or "hidden" in node.attrs:
-            continue
-        if node.attrs.get("aria-hidden") == "true" and \
-           "fallback-image" not in node.class_name:
-            continue
-        class_and_id = f"{node.class_name} {node.attrs.get('id', '')}"
-        if unlikely.search(class_and_id) and not maybe.search(class_and_id):
-            continue
-        if node.tag == "p" and node.parent is not None and node.parent.tag == "li":
-            continue
-        n = len(node.text_content().strip())
-        if n < min_content_length:
-            continue
-        score += sqrt(n - min_content_length)
-        if score > min_score:
-            return True
-    return False

@@ -337,7 +337,6 @@ TITLE_CLASS_PATTERNS = [
 
 _AUTHOR_RE = _Table(AUTHOR_PATTERNS)
 _CATEGORY_CLASS_RE = _Table(CATEGORY_CLASS_PATTERNS)
-_CATEGORY_PREFIX_RE = _Table(CATEGORY_CLASS_PATTERNS)
 _TAG_CLASS_RE = _Table(TAG_CLASS_PATTERNS)
 _TITLE_CLASS_RE = _Table(TITLE_CLASS_PATTERNS)
 
@@ -386,7 +385,7 @@ def select_cats_tags_links(buckets: dict) -> tuple[list[Node], list[Node]]:
     for tag in ("div", "p", "footer", "li", "span", "header"):
         for elem in buckets[tag]:
             cls, eid = _class_id(elem)
-            if _hit(_CATEGORY_CLASS_RE, cls) or _hit_m(_CATEGORY_PREFIX_RE, eid):
+            if _hit(_CATEGORY_CLASS_RE, cls) or _hit_m(_CATEGORY_CLASS_RE, eid):
                 cats.extend(a for a in elem.iterdesc("a") if "href" in a.attrs)
     for elem in buckets["div"]:
         if elem.class_name in ("row", "tags"):

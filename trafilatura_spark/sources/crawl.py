@@ -18,6 +18,12 @@ pytest without a network.
 At scale each hop is: one broadcast-able robots join, one window quota,
 one narrow Arrow fetch stage partitioned by host, one regex scan for
 links — no Python in the relational steps, no collect() of page content.
+
+The discovery modes list page URLs first and then share one
+fetch→extract tail (:func:`fetch_and_extract_urls`): ``--explore`` lists
+through :func:`live_sitemap_pages`, which runs the same sitemap rounds
+as the offline ``discovery.expand_sitemaps`` with a live fetch as the
+document source, and ``--feed`` through :func:`live_feed_pages`.
 """
 
 from __future__ import annotations
@@ -353,36 +359,27 @@ def live_sitemap_pages(spark: SparkSession, seeds: list[str],
     ``Sitemap:`` directives (sitemaps.dart:324-366) with the
     /sitemap.xml guess fallback; a DEEP non-sitemap seed (longer than
     base + 2) arms the reference's final exact-hostname page filter
-    (filterUrls, sitemaps.dart:245-247 + 283-285).  Each round then
-    FETCHES the sitemap frontier and applies the same relational round
-    algebra as discovery.expand_sitemaps — plausibility gate, <loc>/TXT
-    link lift, language + same-domain filters, child sitemaps
-    (DETECT_SITEMAP_LINK) become the next frontier bounded by
-    ``max_sitemaps_seen``, the rest accumulate as page URLs.  The armed
-    filter travels with each frontier row (``filter_host``) so children
-    inherit their seed's filter; a sitemap reachable from several seeds
-    is fetched once with the least restrictive filter.
+    (filterUrls, sitemaps.dart:245-247 + 283-285).  The rounds are
+    ``discovery._sitemap_rounds``, the loop ``expand_sitemaps`` runs
+    over a stored table; here each round's documents are a FETCH of the
+    frontier (status 200, plausible sitemaps only), cut with
+    localCheckpoint so no sitemap is fetched twice.  A sitemap reachable
+    from several seeds is fetched once with the least restrictive
+    filter.
 
     The seed robots/HEAD probes are driver-side (seed lists are
     CLI-scale); the per-round sitemap fetches are the distributed
-    per-host-partitioned stage.  Every fetch round is cut with
-    localCheckpoint so downstream reuse never re-executes HTTP lineage.
-    Returns distinct (sitemap_url, link) page rows."""
+    per-host-partitioned stage.  Returns distinct (sitemap_url, link)
+    page rows."""
     from urllib.parse import urlparse
 
-    from .discovery import (DETECT_SITEMAP_LINK, _similar_host,
-                            clean_url_col, extract_robots_sitemaps,
-                            guess_sitemap_urls, is_plausible_sitemap,
-                            lang_filter, resolve_sitemap_link,
-                            sitemap_links)
+    from .discovery import (_sitemap_rounds, extract_robots_sitemaps,
+                            guess_sitemap_urls, is_plausible_sitemap)
     from .downloads import _send_request, is_live_page
 
-    empty = spark.createDataFrame([], "sitemap_url string, link string")
-    # (sitemap_url, filter_host | None, seed_host) — the seed host rides
-    # every frontier row: the domain gate compares links to the SEED's
-    # domain (sitemaps.dart:111-119), not the sitemap document's host,
-    # so a robots.txt pointing at a CDN-hosted sitemap still yields the
-    # site's pages
+    # (sitemap_url, filter_host | None, seed_host): the seed host rides
+    # every frontier row, so a robots.txt pointing at a CDN-hosted
+    # sitemap still yields the site's pages
     candidates: list[tuple] = []
     robots_seen: dict = {}
     for s in dict.fromkeys(seeds):
@@ -408,8 +405,6 @@ def live_sitemap_pages(spark: SparkSession, seeds: list[str],
             (c, filter_host, u.hostname)
             for c in (from_robots or guess_sitemap_urls(base + "/")))
 
-    if not candidates:
-        return empty
     # one row per sitemap url; None (no filter) wins when seeds disagree
     by_url: dict = {}
     for url, fh, sh in candidates:
@@ -418,97 +413,20 @@ def live_sitemap_pages(spark: SparkSession, seeds: list[str],
     frontier = spark.createDataFrame(
         [(u, fh, sh) for u, (fh, sh) in by_url.items()],
         "url string, filter_host string, seed_host string")
-    seen = frontier.select("url")
-    seen_count = seen.count()
-    pages = None
-    for rnd in range(max_rounds):
+
+    def fetch_sitemaps(frontier: DataFrame) -> DataFrame:
         fetched = fetch_binary_documents(frontier.select("url"),
                                          transport=transport, config=config,
                                          partitions=partitions)
-        docs = (fetched.filter(F.col("status") == 200)
+        return (fetched.filter(F.col("status") == 200)
                 .select("url", F.col("content").cast("string").alias("xml"))
                 .filter(is_plausible_sitemap(F.col("url"), F.col("xml")))
-                # cut HTTP lineage NOW: both the page and nested branches
-                # below re-read this frame, and lineage re-execution would
-                # re-fetch every sitemap
-                .localCheckpoint()
-                .join(F.broadcast(frontier), "url"))
-        links = docs.select(
-            F.col("url").alias("sitemap_url"), "filter_host", "seed_host",
-            F.explode(sitemap_links(F.col("xml"), max_links,
-                                    target_lang)).alias("link"),
-        ).withColumn("link", resolve_sitemap_link(F.col("link"),
-                                                  F.col("sitemap_url"))) \
-         .withColumn("link", clean_url_col(F.col("link"))).distinct()
-        if target_lang:
-            links = links.filter(lang_filter(F.col("link"), target_lang))
-        # domain gate vs the SEED host (sitemaps.dart:111-119)
-        links = links.filter(_similar_host(
-            F.parse_url(F.col("link"), F.lit("HOST")),
-            F.col("seed_host")))
-        pg = links.filter(~F.col("link").rlike(DETECT_SITEMAP_LINK))
-        # the armed seed's final page filter (filterUrls: exact hostname)
-        pg = pg.filter(F.col("filter_host").isNull()
-                       | (F.parse_url(F.col("link"), F.lit("HOST"))
-                          == F.col("filter_host"))) \
-               .select("sitemap_url", "link")
-        pages = pg if pages is None else pages.unionByName(pg)
-        budget = max_sitemaps_seen - seen_count
-        if budget <= 0:
-            break
-        # one frontier row per child sitemap; when parents disagree the
-        # unfiltered lineage wins (F.min skips nulls, so route through a
-        # ''-coalesce: '' sorts first and maps back to null)
-        nested = (links.filter(F.col("link").rlike(DETECT_SITEMAP_LINK))
-                  .select(F.col("link").alias("url"), "filter_host",
-                          "seed_host")
-                  .join(seen, "url", "left_anti")
-                  .groupBy("url")
-                  .agg(F.nullif(F.min(F.coalesce("filter_host", F.lit(""))),
-                                F.lit("")).alias("filter_host"),
-                       F.min("seed_host").alias("seed_host"))
-                  .limit(budget).localCheckpoint())
-        n = nested.count()
-        if n == 0:
-            break
-        seen = seen.unionByName(nested.select("url")).localCheckpoint()
-        seen_count += n
-        frontier = nested
-    if pages is None:
-        return empty
-    return pages.distinct().localCheckpoint()
+                .localCheckpoint())
 
-
-def explore_and_extract(spark: SparkSession, seeds: list[str],
-                        transport=default_transport, options=None,
-                        target_lang: str | None = None,
-                        config: dict | None = None,
-                        partitions: int | None = None,
-                        serialize: str | None = None,
-                        url_filter: list[str] | None = None,
-                        url_blacklist: frozenset | None = None,
-                        backup_path: str | None = None,
-                        backup_format: str = "parquet") -> DataFrame:
-    """The reference CLI's --explore path (cli.dart:344 → cliDiscovery →
-    urlProcessingPipeline): live sitemap discovery from the seed hosts,
-    then fetch every discovered page URL (per-host partitioned,
-    politeness-capable) and run the standard extraction operator.
-    ``url_filter`` / ``url_blacklist`` gate the discovered page list
-    before any page fetch (the CLI doc's promise for --url-filter +
-    --sitemap).  ``backup_path`` keeps the raw fetched pages as parquet
-    (--backup-dir analog)."""
-    page_urls = live_sitemap_pages(spark, seeds, transport=transport,
-                                   target_lang=target_lang, config=config,
-                                   partitions=partitions) \
-        .select("link").distinct() \
-        .withColumnRenamed("link", "url")
-    return fetch_and_extract_urls(page_urls, transport=transport,
-                                  options=options, config=config,
-                                  partitions=partitions, serialize=serialize,
-                                  url_filter=url_filter,
-                                  url_blacklist=url_blacklist,
-                                  backup_path=backup_path,
-                                  backup_format=backup_format)
+    return _sitemap_rounds(frontier, fetch_sitemaps,
+                           max_sitemaps_seen=max_sitemaps_seen,
+                           max_rounds=max_rounds, max_links=max_links,
+                           target_lang=target_lang)
 
 
 def gate_urls(df: DataFrame, url_filter: list[str] | None = None,
@@ -517,9 +435,8 @@ def gate_urls(df: DataFrame, url_filter: list[str] | None = None,
     """The reference CLI's loadInputDict URL gates
     (cli_utils.dart:153-170) as JVM row filters: drop exact blacklist
     matches, then keep only URLs containing at least one filter
-    substring.  Shared by the job CLI's discovery sinks, the crawl
-    frontier and the discovery-driven fetch tails — one implementation,
-    no drift."""
+    substring.  Shared by the job CLI's discovery sinks and the crawl
+    frontier — one implementation, no drift."""
     if url_blacklist:
         df = df.filter(~F.col(col).isin(*url_blacklist))
     if url_filter:
@@ -534,16 +451,13 @@ def fetch_and_extract_urls(page_urls: DataFrame, transport=default_transport,
                            options=None, config: dict | None = None,
                            partitions: int | None = None,
                            serialize: str | None = None,
-                           url_filter: list[str] | None = None,
-                           url_blacklist: frozenset | None = None,
                            backup_path: str | None = None,
                            backup_format: str = "parquet") -> DataFrame:
-    """Shared tail of the discovery-driven drivers (explore/feed): gate
-    the discovered URL list (loadInputDict semantics), fetch per-host
-    partitioned, optionally back up the raw pages (url, hop, status,
-    html — the crawl-backup contract, with hop pinned to 0 because
-    discovery URLs are all frontier depth 0), then extract."""
-    page_urls = gate_urls(page_urls, url_filter, url_blacklist)
+    """The fetch→extract tail of the discovery modes (explore/feed):
+    fetch a discovered URL list per-host partitioned, optionally back up
+    the raw pages (url, hop, status, html — the crawl-backup contract,
+    with hop pinned to 0 because discovery URLs are all frontier depth
+    0), then extract."""
     fetched = fetch_binary_documents(page_urls, transport=transport,
                                      config=config, partitions=partitions)
     pages = fetched.select(
@@ -555,33 +469,6 @@ def fetch_and_extract_urls(page_urls: DataFrame, transport=default_transport,
         _write_backup(pages, backup_path, backup_format)
     return extract_fetched_pages(pages.drop("status", "hop"), options,
                                  serialize=serialize)
-
-
-def feed_and_extract(spark: SparkSession, seeds: list[str],
-                     transport=default_transport, options=None,
-                     target_lang: str | None = None,
-                     config: dict | None = None,
-                     partitions: int | None = None,
-                     serialize: str | None = None,
-                     url_filter: list[str] | None = None,
-                     url_blacklist: frozenset | None = None,
-                     backup_path: str | None = None,
-                     backup_format: str = "parquet") -> DataFrame:
-    """The reference CLI's --feed path (cliDiscovery with findFeedUrls):
-    live feed discovery from the seeds, then fetch + extract every
-    discovered article URL."""
-    page_urls = live_feed_pages(spark, seeds, transport=transport,
-                                target_lang=target_lang, config=config,
-                                partitions=partitions) \
-        .select("link").distinct() \
-        .withColumnRenamed("link", "url")
-    return fetch_and_extract_urls(page_urls, transport=transport,
-                                  options=options, config=config,
-                                  partitions=partitions, serialize=serialize,
-                                  url_filter=url_filter,
-                                  url_blacklist=url_blacklist,
-                                  backup_path=backup_path,
-                                  backup_format=backup_format)
 
 
 def live_feed_pages(spark: SparkSession, seeds: list[str],
@@ -605,7 +492,7 @@ def live_feed_pages(spark: SparkSession, seeds: list[str],
     (the naive probe-then-fetch shape would double every request)."""
     from pyspark.sql import types as T
 
-    from .feeds import (FeedParameters, determine_feed, extract_links,
+    from .feeds import (FeedParameters, extract_links, feed_branch_links,
                         filter_urls, get_host_info)
 
     seeds = list(dict.fromkeys(seeds))
@@ -673,18 +560,10 @@ def live_feed_pages(spark: SparkSession, seeds: list[str],
                                             pdf["content"]):
                 if status != 200 or content is None:
                     continue
-                text = bytes(content).decode("utf-8", "replace")
-                domain, base = get_host_info(url)
-                if domain is None:
-                    continue
-                params = FeedParameters(base=base, domain=domain,
-                                        reference=url, lang=target_lang)
-                direct = extract_links(text, params)
-                if direct:
-                    rows.extend((url, "page", ln) for ln in direct)
-                else:
-                    rows.extend((url, "feed", ln)
-                                for ln in determine_feed(text, params))
+                kind, links = feed_branch_links(
+                    bytes(content).decode("utf-8", "replace"), url,
+                    target_lang)
+                rows.extend((url, kind, ln) for ln in links)
             yield pd.DataFrame(rows, columns=["seed", "kind", "link"])
 
     classified = fetched0.mapInPandas(classify, r0_schema).localCheckpoint()

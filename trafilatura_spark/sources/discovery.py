@@ -206,57 +206,77 @@ def expand_sitemaps(fetched: DataFrame, seeds: DataFrame,
                     external: bool = False) -> DataFrame:
     """Iterative sitemap-index expansion (the sitemapSearch loop,
     sitemaps.dart:267-283) over a table of already-fetched sitemap
-    documents — same anti-join frontier shape as ``spider.bfs_frontier``.
+    documents: the offline document source of :func:`_sitemap_rounds`,
+    the loop ``crawl.live_sitemap_pages`` runs over live fetches.
 
     ``fetched`` is (url, xml): the batch analog of the reference's
     fetch() — at scale this is the crawl store.  The store is scanned
     ONCE: the plausible-sitemap subset (a sliver of a real crawl store,
     where page documents vastly outnumber sitemaps) is projected to two
-    columns and cached before the loop, so each of the up-to-
-    ``max_rounds`` rounds joins the broadcast frontier against that
-    cached subset instead of rescanning the full store.  <loc> links
-    that are themselves sitemaps (DETECT_SITEMAP_LINK) become the next
-    frontier (bounded by ``max_sitemaps_seen`` total, mirroring
-    maxSitemapsSeen); the rest accumulate as page URLs.  Returns
-    distinct page URLs with the sitemap URL they came from.
+    columns and persisted before the loop, so each round joins the
+    broadcast frontier against that subset instead of rescanning the
+    full store.  The domain gate compares links against the SEED's
+    domain: a robots.txt-declared CDN-hosted sitemap enters with the
+    site's domain when ``seeds`` carries a ``seed_host`` column;
+    otherwise it derives from the sitemap URL itself.  Returns distinct
+    page URLs with the sitemap URL they came from.
     """
-    spark = fetched.sparkSession
-    # the SEED host travels with every frontier row: the domain gate
-    # compares links against the seed's domain (the reference fixes it
-    # at SitemapObject creation, sitemaps.dart:111-119) — comparing
-    # against the current sitemap document's host dropped every link of
-    # a cross-host sitemap.  A robots.txt-declared CDN-hosted sitemap
-    # enters with the SITE's domain: callers with that context pass it
-    # as a `seed_host` column on `seeds`; otherwise it derives from the
-    # sitemap URL itself.
-    if "seed_host" in seeds.columns:
-        frontier = (seeds.select(url_col,
-                                 F.col("seed_host").alias("_seed_host"))
-                    .distinct().persist())
-    else:
-        frontier = (seeds.select(url_col).distinct()
-                    .withColumn("_seed_host",
-                                F.parse_url(F.col(url_col), F.lit("HOST")))
-                    .persist())
-    seen = frontier.select(url_col)
-    seen_count = frontier.count()
-    # one scan of the crawl store up front: plausibility-filter + 2-col
-    # projection, persisted (MEMORY_AND_DISK, releasable) — the filter is
-    # idempotent per round, so hoisting it preserves semantics exactly
-    store = (fetched.select(url_col, xml_col)
-             .filter(is_plausible_sitemap(F.col(url_col), F.col(xml_col)))
+    seed_host = (F.col("seed_host") if "seed_host" in seeds.columns
+                 else F.parse_url(F.col(url_col), F.lit("HOST")))
+    frontier = seeds.select(F.col(url_col).alias("url"),
+                            F.lit(None).cast("string").alias("filter_host"),
+                            seed_host.alias("seed_host"))
+    store = (fetched.select(F.col(url_col).alias("url"),
+                            F.col(xml_col).alias("xml"))
+             .filter(is_plausible_sitemap(F.col("url"), F.col("xml")))
              .persist())
+    try:
+        return _sitemap_rounds(frontier, lambda _frontier: store,
+                              max_sitemaps_seen=max_sitemaps_seen,
+                              max_rounds=max_rounds, max_links=max_links,
+                              target_lang=target_lang, external=external)
+    finally:
+        store.unpersist()
+
+
+def _sitemap_rounds(frontier: DataFrame, documents,
+                   max_sitemaps_seen: int = 10_000, max_rounds: int = 10,
+                   max_links: int = 10_000,
+                   target_lang: str | None = None,
+                   external: bool = False) -> DataFrame:
+    """The sitemapSearch loop (sitemaps.dart:267-283) as anti-join
+    frontier rounds — same shape as ``spider.bfs_frontier``.
+
+    ``frontier`` is (url, filter_host, seed_host): the seed host rides
+    every row because the domain gate compares links against the SEED's
+    domain (the reference fixes it at SitemapObject creation,
+    sitemaps.dart:111-119), and a non-null ``filter_host`` is a deep
+    seed's final exact-hostname page filter (filterUrls,
+    sitemaps.dart:245-247 + 283-285) that child sitemaps inherit.
+    ``documents(frontier)`` gives the round's (url, xml) sitemap
+    documents; it is the one input the offline store and the live fetch
+    differ in.  Each round lifts <loc>/TXT links (hreflang-first with
+    ``target_lang``), resolves, cleans, language- and domain-gates them;
+    links that are themselves sitemaps (DETECT_SITEMAP_LINK) become the
+    next frontier, bounded by ``max_sitemaps_seen`` in total
+    (maxSitemapsSeen), and the rest accumulate as page URLs.  A child
+    reachable from several parents keeps the least restrictive
+    filter_host.  Frontier and seen set are cut with localCheckpoint
+    every round; the page rows of all rounds are materialized once at
+    the end.  Returns distinct (sitemap_url, link) page rows."""
+    spark = frontier.sparkSession
+    empty = spark.createDataFrame([], "sitemap_url string, link string")
+    frontier = frontier.distinct().localCheckpoint()
+    seen = frontier.select("url")
+    seen_count = frontier.count()
+    if seen_count == 0:
+        return empty
     pages = None
-    # frames to release once their successors are materialized: unbounded
-    # per-round persists would pin every round's cache for the whole job
-    retired: list[DataFrame] = []
-    for rnd in range(max_rounds):
-        if seen_count == 0:
-            break
-        docs = store.join(F.broadcast(frontier), url_col)
+    for _ in range(max_rounds):
+        docs = documents(frontier).join(F.broadcast(frontier), "url")
         links = docs.select(
-            F.col(url_col).alias("sitemap_url"), "_seed_host",
-            F.explode(sitemap_links(F.col(xml_col), max_links,
+            F.col("url").alias("sitemap_url"), "filter_host", "seed_host",
+            F.explode(sitemap_links(F.col("xml"), max_links,
                                     target_lang)).alias("link"),
         ).withColumn("link", resolve_sitemap_link(F.col("link"),
                                                   F.col("sitemap_url"))) \
@@ -268,53 +288,37 @@ def expand_sitemaps(fetched: DataFrame, seeds: DataFrame,
             # (sitemaps.dart:95-125)
             links = links.filter(_similar_host(
                 F.parse_url(F.col("link"), F.lit("HOST")),
-                F.col("_seed_host")))
-        links = links.persist()  # consumed by pg AND nested below
-        pg = links.filter(~F.col("link").rlike(DETECT_SITEMAP_LINK)) \
-                  .select("sitemap_url", "link")
+                F.col("seed_host")))
+        pg = (links.filter(~F.col("link").rlike(DETECT_SITEMAP_LINK))
+              .filter(F.col("filter_host").isNull()
+                      | (F.parse_url(F.col("link"), F.lit("HOST"))
+                         == F.col("filter_host")))
+              .select("sitemap_url", "link"))
         pages = pg if pages is None else pages.unionByName(pg)
-        nested = (links.filter(F.col("link").rlike(DETECT_SITEMAP_LINK))
-                  .select(F.col("link").alias(url_col), "_seed_host")
-                  .join(seen, url_col, "left_anti")
-                  .groupBy(url_col)
-                  .agg(F.min("_seed_host").alias("_seed_host")))
-        retired.append(links)
         budget = max_sitemaps_seen - seen_count
         if budget <= 0:
             break
-        nested = nested.limit(budget).persist()
+        # one frontier row per child sitemap; when parents disagree the
+        # unfiltered lineage wins (F.min skips nulls, so route through a
+        # ''-coalesce: '' sorts first and maps back to null)
+        nested = (links.filter(F.col("link").rlike(DETECT_SITEMAP_LINK))
+                  .select(F.col("link").alias("url"), "filter_host",
+                          "seed_host")
+                  .join(seen, "url", "left_anti")
+                  .groupBy("url")
+                  .agg(F.nullif(F.min(F.coalesce("filter_host", F.lit(""))),
+                                F.lit("")).alias("filter_host"),
+                       F.min("seed_host").alias("seed_host"))
+                  .limit(budget).localCheckpoint())
         n = nested.count()
         if n == 0:
-            nested.unpersist()
             break
-        retired.append(seen)
-        seen = seen.unionByName(nested.select(url_col)).persist()
+        seen = seen.unionByName(nested.select("url")).localCheckpoint()
         seen_count += n
-        retired.append(frontier)
         frontier = nested
-        if (rnd + 1) % 2 == 0:
-            # cut union lineage (same treatment as spider.bfs_frontier:
-            # deep crawls must not build unbounded plans) and release the
-            # superseded round frames — INCLUDING the just-persisted
-            # union that the checkpoint supersedes (it was otherwise
-            # never unpersisted, pinning executor storage per round)
-            retired.append(seen)
-            seen = seen.localCheckpoint()
-            pages = pages.localCheckpoint()
-            for df in retired:
-                df.unpersist()
-            retired = []
-    if pages is not None:
-        # materialize before releasing the caches pages still references
-        # (the cached store subset among them)
-        pages = pages.localCheckpoint()
-    for df in retired:
-        df.unpersist()
-    store.unpersist()
-    frontier.unpersist()
     if pages is None:
-        return spark.createDataFrame([], "sitemap_url string, link string")
-    return pages.distinct()
+        return empty
+    return pages.distinct().localCheckpoint()
 
 
 def extract_robots_sitemaps(robotstxt: str | None, baseurl: str) -> list[str]:
@@ -361,11 +365,6 @@ def fix_relative_urls(baseurl: str, url: str) -> str:
     if not baseurl.endswith("/"):
         baseurl += "/"
     return baseurl + url
-
-
-def same_domain(url_a: Column, url_b: Column) -> Column:
-    """Same-host gate used by feed validation (feeds.dart:103-135)."""
-    return F.parse_url(url_a, F.lit("HOST")) == F.parse_url(url_b, F.lit("HOST"))
 
 
 def filter_known(urls: DataFrame, known: DataFrame,

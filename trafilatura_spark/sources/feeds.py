@@ -229,9 +229,19 @@ def find_feed_links(content: str, url: str,
     already-fetched document: treat it as a feed first; if that yields
     nothing, treat it as a homepage and return the *feed URLs to fetch
     next* (the caller owns the fetch loop, as with expand_sitemaps)."""
+    return feed_branch_links(content, url, target_lang, external)[1]
+
+
+def feed_branch_links(content: str, url: str,
+                      target_lang: str | None = None,
+                      external: bool = False) -> tuple[str, list[str]]:
+    """:func:`find_feed_links` with the branch that fired: ``("page",
+    links)`` when the document is a feed (extractLinks), ``("feed",
+    candidates)`` when it is a homepage (determineFeed) — the live feed
+    driver fetches only the second kind."""
     domain, baseurl = get_host_info(url)
     if domain is None:
-        return []
+        return "feed", []
     params = FeedParameters(base=baseurl, domain=domain, reference=url,
                             external=external, lang=target_lang)
     links = extract_links(content, params)
@@ -239,8 +249,8 @@ def find_feed_links(content: str, url: str,
         # direct-feed branch: reference returns these unfiltered
         # (urlfilter is only armed on the homepage branch,
         # feeds.dart:399-409)
-        return links
-    return determine_feed(content, params)
+        return "page", links
+    return "feed", determine_feed(content, params)
 
 
 def feed_links_df(df, url_col: str = "url", content_col: str = "content",

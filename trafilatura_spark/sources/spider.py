@@ -19,18 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def edges_from_extraction(extracted: DataFrame) -> DataFrame:
-    """(src=doc url, dst=ref target) link graph from extraction output
-    with links enabled."""
-    return (
-        extracted
-        .select(F.col("meta.url").alias("src"), F.explode("spans").alias("s"))
-        .filter(F.col("s.kind") == "ref")
-        .select("src", F.col("s.media_ref").alias("dst"))
-        .filter(F.col("dst") != "")
-    )
-
-
 def bfs_frontier(edges: DataFrame, seeds: DataFrame, max_hops: int = 3,
                  checkpoint_every: int = 2) -> DataFrame:
     """Iterative BFS: returns (url, hop) for every reached node.
