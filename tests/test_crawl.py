@@ -624,13 +624,13 @@ def test_job_cli_sleep_time(spark, tmp_path):
 
 
 def test_polite_send_spaces_same_host():
-    """Driver-side retry/probe loops honor config SLEEP_TIME per host
-    (the reference sleeps before its homepage retry, feeds.dart:425-427):
-    two consecutive requests to one host are spaced; a different host is
-    not delayed."""
+    """Every request loop honors config SLEEP_TIME per host through the
+    one pacer, downloads.polite_request (the reference sleeps before its
+    homepage retry too, feeds.dart:425-427): two consecutive requests to
+    one host are spaced; a different host is not delayed."""
     import time
 
-    from trafilatura_spark.sources.crawl import _polite_send
+    from trafilatura_spark.sources.downloads import polite_request
 
     calls = []
 
@@ -640,12 +640,43 @@ def test_polite_send_spaces_same_host():
 
     last: dict = {}
     cfg = {"SLEEP_TIME": 0.3}
-    _polite_send("https://s.test/a", transport, cfg, last)
-    _polite_send("https://other.test/x", transport, cfg, last)
-    _polite_send("https://s.test/b", transport, cfg, last)
+    polite_request("https://s.test/a", transport, cfg, last)
+    polite_request("https://other.test/x", transport, cfg, last)
+    polite_request("https://s.test/b", transport, cfg, last)
     t = {u: ts for u, ts in calls}
     assert t["https://other.test/x"] - t["https://s.test/a"] < 0.25
     assert t["https://s.test/b"] - t["https://s.test/a"] >= 0.25
+
+
+def test_live_sitemap_seed_probes_are_paced_and_configured(spark):
+    """The seed's HEAD liveness probe and its robots.txt GET go through
+    the same request path: the HEAD carries the configured User-Agent,
+    and the two same-host requests are spaced by SLEEP_TIME."""
+    import time
+
+    from trafilatura_spark.sources.crawl import live_sitemap_pages
+
+    driver_pid = os.getpid()
+    calls = []
+    inner = _make_transport({
+        "https://q.test/": _page("<p>home</p>"),
+        "https://q.test/robots.txt": b"User-agent: *\n",
+    })
+
+    def transport(method, url, headers, timeout, max_bytes=None):
+        # the seed probes run on the driver; executor fetches don't log
+        if os.getpid() == driver_pid:
+            calls.append((method, url, headers.get("User-Agent"),
+                          time.monotonic()))
+        return inner(method, url, headers, timeout, max_bytes)
+
+    live_sitemap_pages(spark, ["https://q.test/"], transport=transport,
+                       config={"SLEEP_TIME": 0.3, "USER_AGENTS": ["ua-x"]})
+    head = [c for c in calls if c[0] == "HEAD"]
+    robots = [c for c in calls if c[1] == "https://q.test/robots.txt"]
+    assert len(head) == 1 and len(robots) == 1, calls
+    assert head[0][2] == "ua-x"
+    assert robots[0][3] - head[0][3] >= 0.25, calls
 
 
 def test_feed_driver_loop_cap(spark, tmp_path):

@@ -111,6 +111,29 @@ def test_expand_sitemaps_respects_max_seen(spark):
     assert pages.count() <= 3
 
 
+def test_expand_sitemaps_budget_counts_distinct_seed_urls(spark):
+    """max_sitemaps_seen counts sitemap URLs, not seed rows: one sitemap
+    listed under two seed hosts is one sitemap seen, so a budget of 2
+    still admits its child sitemap."""
+    from trafilatura_spark.sources.discovery import expand_sitemaps
+    index = ("<?xml version='1.0'?><sitemapindex>"
+             "<sitemap><loc>https://ex.org/b.xml</loc></sitemap>"
+             "</sitemapindex>")
+    child = ("<?xml version='1.0'?><urlset>"
+             "<url><loc>https://ex.org/p1</loc></url>"
+             "<url><loc>https://ex.org/p2</loc></url></urlset>")
+    fetched = spark.createDataFrame(
+        [("https://ex.org/a.xml", index), ("https://ex.org/b.xml", child)],
+        ["url", "xml"])
+    seeds = spark.createDataFrame(
+        [("https://ex.org/a.xml", "ex.org"),
+         ("https://ex.org/a.xml", "www.ex.org")],
+        "url string, seed_host string")
+    got = {r["link"] for r in
+           expand_sitemaps(fetched, seeds, max_sitemaps_seen=2).collect()}
+    assert got == {"https://ex.org/p1", "https://ex.org/p2"}
+
+
 def test_expand_sitemaps_txt_fallback(spark):
     from trafilatura_spark.sources.discovery import expand_sitemaps
     fetched = spark.createDataFrame(

@@ -4,6 +4,7 @@ import gzip
 
 from trafilatura_spark.sources.downloads import (
     RETRY_STATUSES,
+    _send_request,
     fetch_binary_documents,
     fetch_response,
     fetch_url,
@@ -14,7 +15,7 @@ PAGE = ("<html><body><article><p>" + "content words here " * 30
         + "</p></article></body></html>").encode()
 
 
-def _ok_transport(method, url, headers, timeout):
+def _ok_transport(method, url, headers, timeout, max_bytes=None):
     assert "User-Agent" in headers
     return 200, {"content-type": "text/html"}, b"" if method == "HEAD" else PAGE
 
@@ -25,20 +26,20 @@ def test_fetch_url_ok():
 
 
 def test_fetch_url_status_gate():
-    def t404(m, u, h, to): return 404, {}, PAGE
+    def t404(m, u, h, to, max_bytes=None): return 404, {}, PAGE
     assert fetch_url("https://x.test/a", transport=t404) is None
 
 
 def test_fetch_url_size_gates():
-    def tiny(m, u, h, to): return 200, {}, b"<html>x</html>"
+    def tiny(m, u, h, to, max_bytes=None): return 200, {}, b"<html>x</html>"
     assert fetch_url("https://x.test/a", transport=tiny) is None
-    def huge(m, u, h, to): return 200, {}, b"x" * 30_000_000
+    def huge(m, u, h, to, max_bytes=None): return 200, {}, b"x" * 30_000_000
     assert fetch_url("https://x.test/a", transport=huge) is None
 
 
 def test_fetch_url_retries_force_status():
     calls = []
-    def flaky(m, u, h, to):
+    def flaky(m, u, h, to, max_bytes=None):
         calls.append(1)
         return (503, {}, b"") if len(calls) < 3 else (200, {}, PAGE)
     assert 503 in RETRY_STATUSES
@@ -48,12 +49,13 @@ def test_fetch_url_retries_force_status():
 
 
 def test_fetch_url_transport_error():
-    def boom(m, u, h, to): raise OSError("no network")
+    def boom(m, u, h, to, max_bytes=None): raise OSError("no network")
     assert fetch_url("https://x.test/a", transport=boom) is None
 
 
 def test_fetch_response_headers_and_decode():
-    def gz(m, u, h, to): return 200, {"x-test": "1"}, gzip.compress(PAGE)
+    def gz(m, u, h, to, max_bytes=None):
+        return 200, {"x-test": "1"}, gzip.compress(PAGE)
     r = fetch_response("https://x.test/a", decode=True, with_headers=True,
                        transport=gz)
     assert r.headers.get("x-test") == "1"
@@ -62,8 +64,21 @@ def test_fetch_response_headers_and_decode():
 
 def test_is_live_page():
     assert is_live_page("https://x.test/a", transport=_ok_transport)
-    def dead(m, u, h, to): return 404, {}, b""
+    def dead(m, u, h, to, max_bytes=None): return 404, {}, b""
     assert not is_live_page("https://x.test/a", transport=dead)
+
+
+def test_transport_type_error_is_one_failed_request():
+    """A transport that raises TypeError is a failed request like any
+    other error: called once, never retried under another signature."""
+    calls = []
+
+    def broken(m, u, h, to, max_bytes=None):
+        calls.append(u)
+        raise TypeError("bad body")
+
+    assert _send_request("https://x.test/a", broken, None) is None
+    assert calls == ["https://x.test/a"]
 
 
 def test_fetch_binary_documents_spark(spark):
@@ -71,7 +86,7 @@ def test_fetch_binary_documents_spark(spark):
     # value, so Spark workers don't need this test module on their path
     page = PAGE
 
-    def ok_transport(method, url, headers, timeout):
+    def ok_transport(method, url, headers, timeout, max_bytes=None):
         return 200, {}, page
 
     urls = spark.createDataFrame(
@@ -90,7 +105,8 @@ def test_fetch_politeness_enforces_per_host_interval(spark):
     so one host never fans out across tasks."""
     import time
 
-    def stamping_transport(method, url, headers, timeout):
+    def stamping_transport(method, url, headers, timeout,
+                           max_bytes=None):
         return 200, {}, f"{time.monotonic():.4f}".encode()
 
     urls = spark.createDataFrame(

@@ -31,7 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .discovery import filter_known
-from .downloads import default_transport, fetch_binary_documents
+from .downloads import (default_transport, fetch_binary_documents,
+                        is_live_page, polite_request)
 from .spider import filter_robots, per_domain_quota, robots_rules_df
 
 # href scrape (spider.dart:405-426 processLinks link lifting; quote-agnostic)
@@ -40,31 +41,9 @@ _HREF_PAT = r"""<a\s[^>]*href=["']([^"']+)["']"""
 # driver-side sequential loops (tryHomepage retries, gnews probes) are
 # CLI-scale by design; above this many they are truncated with a warning
 # so a million-line --seeds-file cannot silently serialize fetches on the
-# driver — the distributed wave stages are unaffected
+# driver — the distributed wave stages are unaffected.  Driver loops and
+# wave stages pace requests with the same downloads.polite_request.
 _DRIVER_LOOP_CAP = 1000
-
-
-def _polite_send(url: str, transport, config: dict | None,
-                 last_by_host: dict):
-    """_send_request with the same per-host SLEEP_TIME politeness the
-    distributed fetch stages honor (downloads.py:181-204), for the
-    driver-side retry/probe loops — the reference sleeps before its
-    homepage retry too (feeds.dart:425-427)."""
-    import time as _time
-    from urllib.parse import urlsplit
-
-    from .downloads import _send_request
-
-    sleep_time = float((config or {}).get("SLEEP_TIME", 0))
-    host = urlsplit(url).netloc
-    if sleep_time > 0:
-        prev = last_by_host.get(host)
-        now = _time.monotonic()
-        if prev is not None and now - prev < sleep_time:
-            _time.sleep(sleep_time - (now - prev))
-    resp = _send_request(url, transport, config)
-    last_by_host[host] = _time.monotonic()
-    return resp
 
 
 def _normalize_dot_segments(col):
@@ -368,20 +347,22 @@ def live_sitemap_pages(spark: SparkSession, seeds: list[str],
     filter.
 
     The seed robots/HEAD probes are driver-side (seed lists are
-    CLI-scale); the per-round sitemap fetches are the distributed
-    per-host-partitioned stage.  Returns distinct (sitemap_url, link)
+    CLI-scale) and share one ``downloads.polite_request`` dict, so a
+    seed's HEAD and robots.txt GET are spaced by SLEEP_TIME; the
+    per-round sitemap fetches are the distributed per-host-partitioned
+    stage, paced by the same rule.  Returns distinct (sitemap_url, link)
     page rows."""
     from urllib.parse import urlparse
 
     from .discovery import (_sitemap_rounds, extract_robots_sitemaps,
                             guess_sitemap_urls, is_plausible_sitemap)
-    from .downloads import _send_request, is_live_page
 
     # (sitemap_url, filter_host | None, seed_host): the seed host rides
     # every frontier row, so a robots.txt pointing at a CDN-hosted
     # sitemap still yields the site's pages
     candidates: list[tuple] = []
     robots_seen: dict = {}
+    last_by_host: dict = {}     # one pacer dict: HEAD and robots alike
     for s in dict.fromkeys(seeds):
         u = urlparse(s)
         if not u.netloc:
@@ -389,14 +370,15 @@ def live_sitemap_pages(spark: SparkSession, seeds: list[str],
         base = f"{u.scheme or 'https'}://{u.netloc}"
         # probe base + '/' — the same HTTP request as the bare authority
         # (path defaults to '/'), and the form pluggable transports key on
-        if not is_live_page(base + "/", transport=transport):
+        if not is_live_page(base + "/", transport, config, last_by_host):
             continue            # sitemaps.dart:234-236
         if s.endswith((".xml", ".gz", "sitemap")):
             candidates.append((s, None, u.hostname))
             continue
         filter_host = u.hostname if len(s) > len(base) + 2 else None
         if base not in robots_seen:
-            resp = _send_request(f"{base}/robots.txt", transport, config)
+            resp = polite_request(f"{base}/robots.txt", transport, config,
+                                  last_by_host)
             robots = (resp.data.decode("utf-8", "replace")
                       if resp is not None and resp.status == 200 else None)
             robots_seen[base] = extract_robots_sitemaps(robots, base)
@@ -489,7 +471,11 @@ def live_feed_pages(spark: SparkSession, seeds: list[str],
     The reference's tryHomepage retry (feeds.dart:425-438 — re-run a
     failed deep seed at its base URL) is applied AFTER the first round,
     only to the seeds that actually failed, so no seed is fetched twice
-    (the naive probe-then-fetch shape would double every request)."""
+    (the naive probe-then-fetch shape would double every request).  The
+    retry and gnews loops run on the driver and share one
+    ``downloads.polite_request`` dict: the same per-host SLEEP_TIME rule
+    the distributed fetch stages apply (the reference sleeps before its
+    homepage retry too, feeds.dart:425-427)."""
     from pyspark.sql import types as T
 
     from .feeds import (FeedParameters, extract_links, feed_branch_links,
@@ -539,7 +525,7 @@ def live_feed_pages(spark: SparkSession, seeds: list[str],
         already.add(base)
         base_url = base + "/"
         seeds.append(base_url)
-        resp = _polite_send(base_url, transport, config, last_by_host)
+        resp = polite_request(base_url, transport, config, last_by_host)
         if resp is not None and resp.status == 200:
             retry_rows.append((base_url, 200, bytearray(resp.data)))
     if retry_rows:
@@ -645,7 +631,7 @@ def live_feed_pages(spark: SparkSession, seeds: list[str],
                 break
             gurl = (f"https://news.google.com/rss/search?q=site:{domain}"
                     f"&hl={target_lang}&scoring=n&num=100")
-            resp = _polite_send(gurl, transport, config, last_by_host)
+            resp = polite_request(gurl, transport, config, last_by_host)
             if resp is None or resp.status != 200:
                 continue
             params = FeedParameters(base=base, domain=domain, reference=s,

@@ -267,8 +267,8 @@ def _sitemap_rounds(frontier: DataFrame, documents,
     spark = frontier.sparkSession
     empty = spark.createDataFrame([], "sitemap_url string, link string")
     frontier = frontier.distinct().localCheckpoint()
-    seen = frontier.select("url")
-    seen_count = frontier.count()
+    seen = frontier.select("url").distinct()
+    seen_count = seen.count()
     if seen_count == 0:
         return empty
     pages = None

@@ -5,18 +5,24 @@ Re-expression of /root/reference/lib/src/downloads.dart: Response record
 retry-status list (23-26), suitability check (168-178), fetchUrl /
 fetchResponse (191-247), isLivePage (249).
 
-Networking is deliberately injected: ``transport(method, url, headers,
-timeout) -> (status, headers, bytes)``.  The default transport uses the
-stdlib ``urllib`` (no third-party deps); tests and offline environments
-inject fakes.  The batch north rule never fetches (input is a table); the
-Spark form :func:`fetch_binary_documents` exists for streaming-ingest
-pipelines and partitions by host for politeness.
+Networking is injected through one signature, ``transport(method, url,
+headers, timeout, max_bytes) -> (status, headers, bytes)``, called only
+by :func:`_send_request`, so every GET and HEAD carries the configured
+User-Agent, cookie, timeout and size cap.  The default transport is
+stdlib ``urllib``; tests and offline environments inject fakes.
+
+Politeness is one rule, :func:`polite_request`: a host's next request
+starts ``SLEEP_TIME`` seconds after its previous one returned
+(cli_utils.dart:379-406).  :func:`fetch_binary_documents` keeps one
+``{host: time}`` dict per task, the driver-side probe loops in
+``sources.crawl`` one per loop.
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from urllib.parse import urlsplit
 
 from .loading import decode_file
 
@@ -70,9 +76,10 @@ def default_transport(method: str, url: str, headers: dict,
 
 
 def _send_request(url: str, transport, config: dict | None,
+                  method: str = "GET",
                   with_headers: bool = False) -> Response | None:
     """downloads.dart:110-165: UA/cookie headers, timeout, size gates;
-    any failure → None (never raises)."""
+    any failure → None (never raises).  The one transport call site."""
     config = config or {}
     headers = dict(DEFAULT_HEADERS)
     if config.get("USER_AGENTS"):
@@ -82,13 +89,8 @@ def _send_request(url: str, transport, config: dict | None,
     timeout = int(config.get("DOWNLOAD_TIMEOUT", 30))
     max_size = int(config.get("MAX_FILE_SIZE", MAX_FILE_SIZE))
     try:
-        try:
-            status, resp_headers, body = transport("GET", url, headers,
-                                                   timeout, max_size + 1)
-        except TypeError:
-            # legacy 4-arg transports (pluggable test doubles)
-            status, resp_headers, body = transport("GET", url, headers,
-                                                   timeout)
+        status, resp_headers, body = transport(method, url, headers,
+                                               timeout, max_size + 1)
         if body is not None and len(body) > max_size:
             return None
         resp = Response(bytes(body) if body is not None else None, int(status),
@@ -98,6 +100,22 @@ def _send_request(url: str, transport, config: dict | None,
         return resp
     except Exception:
         return None
+
+
+def polite_request(url: str, transport, config: dict | None,
+                   last_by_host: dict, method: str = "GET") -> Response | None:
+    """:func:`_send_request` behind the per-host politeness rule: wait
+    until ``SLEEP_TIME`` has passed since the last request to this host
+    returned, then record the time this one returns in ``last_by_host``
+    ({host: monotonic time})."""
+    sleep_time = float((config or {}).get("SLEEP_TIME", 0))
+    host = urlsplit(url).netloc
+    prev = last_by_host.get(host)
+    if sleep_time > 0 and prev is not None:
+        time.sleep(max(0.0, prev + sleep_time - time.monotonic()))
+    resp = _send_request(url, transport, config, method)
+    last_by_host[host] = time.monotonic()
+    return resp
 
 
 def _is_suitable_response(response: Response, config: dict | None) -> bool:
@@ -115,7 +133,8 @@ def fetch_response(url: str, decode: bool = False, with_headers: bool = False,
                    config: dict | None = None,
                    transport=default_transport) -> Response | None:
     """downloads.dart:228-247."""
-    response = _send_request(url, transport, config, with_headers)
+    response = _send_request(url, transport, config,
+                             with_headers=with_headers)
     if response is None:
         return None
     response.decode_data(decode)
@@ -123,31 +142,33 @@ def fetch_response(url: str, decode: bool = False, with_headers: bool = False,
 
 
 def fetch_url(url: str, config: dict | None = None,
-              transport=default_transport, max_retries: int = 2,
-              retry_sleep: float = 0.0) -> str | None:
-    """downloads.dart:191-224 with the forceStatus retry list."""
+              transport=default_transport,
+              max_retries: int = 2) -> str | None:
+    """downloads.dart:191-224 with the forceStatus retry list; a retry
+    waits out the politeness interval like any same-host request."""
+    last_by_host: dict = {}
     for attempt in range(max_retries + 1):
-        response = fetch_response(url, decode=True, config=config,
-                                  transport=transport)
+        response = polite_request(url, transport, config, last_by_host)
         if response is None:
             return None
         if response.status in RETRY_STATUSES and attempt < max_retries:
-            if retry_sleep:
-                time.sleep(retry_sleep)
             continue
+        response.decode_data(True)
         if response.has_data and _is_suitable_response(response, config):
             return response.html
         return None
     return None
 
 
-def is_live_page(url: str, transport=default_transport) -> bool:
-    """HEAD probe (downloads.dart:249)."""
-    try:
-        status, _, _ = transport("HEAD", url, dict(DEFAULT_HEADERS), 10)
-        return int(status) < 400
-    except Exception:
-        return False
+def is_live_page(url: str, transport=default_transport,
+                 config: dict | None = None,
+                 last_by_host: dict | None = None) -> bool:
+    """HEAD probe (downloads.dart:249): status < 400.  Pass the caller's
+    ``last_by_host`` to space it from the caller's other requests."""
+    resp = polite_request(url, transport, config,
+                          {} if last_by_host is None else last_by_host,
+                          "HEAD")
+    return resp is not None and resp.status < 400
 
 
 # -- Spark form ---------------------------------------------------------------
@@ -160,7 +181,7 @@ def fetch_binary_documents(urls_df, url_col: str = "url",
 
     When politeness is on (config SLEEP_TIME > 0) or the caller sizes
     ``partitions``, the input is repartitioned by host so each task owns
-    its hosts and a per-host interval limiter serializes their requests
+    its hosts and :func:`polite_request` spaces their requests
     (politeness analog of the reference's per-domain round-robin,
     cli_utils.dart:379-406); otherwise the stage stays shuffle-free."""
     from pyspark.sql import functions as F, types as T
@@ -171,13 +192,10 @@ def fetch_binary_documents(urls_df, url_col: str = "url",
         T.StructField("content", T.BinaryType(), True),
     ])
 
-    # politeness: the reference sleeps between consecutive fetches of one
-    # domain (cli_utils.dart:379-406 rate limiting).  That only holds if
-    # (a) every URL of a host lands in ONE task — so politeness forces
-    # the host repartition even when the caller didn't size it — and
-    # (b) the in-task limiter tracks per-host last-request TIMES (hash
-    # partitioning interleaves hosts within a task, so a same-host-as-
-    # previous-row check never fires on [a,b,a,b] sequences)
+    # politeness only holds if every URL of a host lands in ONE task, so
+    # it forces the host repartition even when the caller didn't size it;
+    # the task's pacer dict keys on host, so hash partitioning that
+    # interleaves hosts ([a,b,a,b]) is still spaced per host
     sleep_time = float((config or {}).get("SLEEP_TIME", 0))
 
     df = urls_df
@@ -188,22 +206,12 @@ def fetch_binary_documents(urls_df, url_col: str = "url",
         df = df.repartition(F.parse_url(F.col(url_col), F.lit("HOST")))
 
     def batches(it):
-        import time as _time
-        from urllib.parse import urlparse
-
         import pandas as pd
-        last_req: dict = {}      # host -> monotonic time of last request
+        last_by_host: dict = {}
         for pdf in it:
             rows = []
-            for url in pdf[url_col]:
-                if sleep_time > 0:
-                    host = urlparse(url).netloc
-                    prev = last_req.get(host)
-                    now = _time.monotonic()
-                    if prev is not None and now - prev < sleep_time:
-                        _time.sleep(sleep_time - (now - prev))
-                    last_req[host] = _time.monotonic()
-                resp = _send_request(url, transport, config)
+            for url in pdf["url"]:
+                resp = polite_request(url, transport, config, last_by_host)
                 if resp is None:
                     rows.append((url, None, None))
                 else:
